@@ -7,8 +7,9 @@ Prints JSON lines in this order:
      headline number
   2. detailed  adds per-query timings, the extras, and the anchor ratios
      (full precision; may exceed a bounded tail capture)
-  3. per_query_extras_sec, two short lines (r15: the driver's ~2 KB tail
-     capture must retain per-query seconds — PERF_r14 had per_query: {})
+  3. per_query_extras_sec, three short lines ext1/ext2/ext3 (r15: the
+     driver's ~2 KB tail capture must retain per-query seconds —
+     PERF_r14 had per_query: {})
   4. compact again WITH "queries" (headline per-query seconds rounded to
      centiseconds) — the driver keeps the LAST ~2000 chars of output, so
      the contract line must FOLLOW the >2KB detail line (r3+r4 both
@@ -602,7 +603,7 @@ def main() -> None:
     # driver's ~2 KB tail capture — PERF_r14.json had per_query: {},
     # geomean null and an empty scaling block because the timings lived
     # only in the oversized detail line above.  The extras board is
-    # emitted as two short lines (each well under the capture on its
+    # emitted as three short lines (each well under the capture on its
     # own), ordered so the entries most under optimization (ann_*,
     # semantic_*, table_profile — the tail of the sorted list) sit in
     # the LAST extras line, closest to the end of the capture window.
@@ -649,7 +650,7 @@ def main() -> None:
     # the pinned constants in this file (the two refs, the legacy load
     # factor, the raw cold/warm scan pair behind io_era) are omitted
     # HERE only — lines 1-2 carry the full envelope; the whole tail
-    # block (two extras lines + this line) must stay under ~2000 chars
+    # block (three extras lines + this line) must stay under ~2000 chars
     # or the driver's capture clips a line and loses it entirely.
     compact_q = {
         "metric": compact["metric"],

@@ -27,7 +27,6 @@ cross-engine.
 from __future__ import annotations
 
 import math
-import os
 import random
 
 import numpy as np
@@ -142,65 +141,70 @@ def _srp_signature_udf(tables):
     return sigs
 
 
-def _pack_centroids(centroids: DataFrame) -> DataFrame:
-    """ONE-row frame ``(_cents)``: the (cent_id, cent_vec) frame packed
-    into an array of struct(cent_id, qcv, sq) sorted by cent_id — qcv
-    the micro-quantized centroid components, sq the exact-BIGINT-norm
-    square root (the two cosine_micro_exact precomputables).  Broadcast
-    against the corpus it turns nearest-centroid assignment into a pure
-    map expression: zero shuffles, zero corpus aggregation (r14, guide
-    §2.4 — the pre-r14 form shuffled one corpus row per candidate
-    through a groupBy(c_id) max_by)."""
-    from datalake_spark.functions.vectors import quantize_micro
+def _list_matrix(col, width: int):
+    """Unpack an Arrow ``list<number>`` column of n rows into an
+    (n, width) NumPy matrix with one fancy-index gather.  Returns
+    ``(mat, null_rows, bad_width)``: ``null_rows`` flags rows that are
+    NULL or hold a NULL component, ``bad_width`` the other rows whose
+    length is not ``width``; rows flagged in either mask read as zeros
+    in ``mat``.  ListArray offsets are absolute positions into
+    ``.values`` (which ignores the array's slice offset), so they index
+    it directly."""
+    offs = col.offsets.to_numpy()
+    null_rows = np.zeros(len(offs) - 1, dtype=bool)
+    if col.null_count:
+        null_rows |= col.is_null().to_numpy(zero_copy_only=False)
+    vals = col.values
+    if vals.null_count:
+        # running NULL count over the values: a row holds a NULL
+        # component iff the count rises across its offsets
+        seen = np.concatenate(
+            ([0], np.cumsum(vals.is_null().to_numpy(zero_copy_only=False)))
+        )
+        null_rows |= seen[offs[1:]] > seen[offs[:-1]]
+        vals = vals.fill_null(0)
+    flat = vals.to_numpy(zero_copy_only=False)
+    ok = ~null_rows & (np.diff(offs) == width)
+    mat = np.zeros((len(null_rows), width), dtype=flat.dtype)
+    idx = np.flatnonzero(ok)
+    mat[idx] = flat[offs[idx, None] + np.arange(width)]
+    return mat, null_rows, ~(null_rows | ok)
 
-    zero = F.lit(0).cast("long")
-    qcv = quantize_micro(F.col("cent_vec"))
-    return centroids.select(
-        F.struct(
-            F.col("cent_id").alias("cent_id"),
-            qcv.alias("qcv"),
-            F.sqrt(
-                F.aggregate(
-                    F.transform(qcv, lambda x: x * x),
-                    zero,
-                    lambda acc, x: acc + x,
-                ).cast("double")
-            ).alias("sq"),
-        ).alias("_ce")
-    ).agg(F.array_sort(F.collect_list("_ce")).alias("_cents"))
 
-
-def _assign_nearest_arrow(
+def _assign_nearest(
     df: DataFrame, vec_col: str, centroids: DataFrame
 ) -> DataFrame:
-    """Vectorized twin of :func:`_assign_nearest` (r15, guide §4.2):
-    the parameter-bounded centroid frame — a local relation at the
-    build call sites, a tiny parquet read on streaming appends — is
-    quantized into NumPy int64 matrices in the function closure and one
-    ``mapInArrow`` stage computes every exact cosine and the argmax
-    over whole Arrow batches, replacing the interpreted HOF folds.
+    """``df`` + a row-local ``cent_id`` column (the centroid frame's own
+    cent_id type): the nearest (cent_id, cent_vec) centroid of every
+    ``vec_col`` vector by the exact cosine_micro_exact ordering — max
+    sim, ties to the smaller cent_id.  The parameter-bounded centroid
+    frame (a local relation at the build call sites, a tiny parquet
+    read on streaming appends) is quantized into NumPy int64 matrices
+    in the function closure, and one ``mapInArrow`` stage computes
+    every exact cosine and the argmax over whole Arrow batches: zero
+    shuffles, zero corpus aggregation.
 
-    Bit-exact vs the HOF path term-for-term: quantization is the same
-    floor(x·1e6+0.5) float64 ops; dot and norm-square are int64 sums
-    with identical two's-complement wrap; the finish is the same
-    int64→float64 cast, one multiply (sqa·sq) and one IEEE divide; the
-    −2.0 guard fires on exactly the same (sqa·sq)>0 condition (zero
-    norms); np.argmax takes the FIRST maximal element of the
-    cent_id-sorted axis — the (sim DESC, cent_id ASC) tie-break.  Rows
-    whose vector is NULL / has NULL components score −2.0 against every
-    centroid on the HOF path and land on the smallest cent_id; the same
-    masking reproduces that here.  Pinned against the HOF twin in
-    tests/test_operators.py."""
+    Exact by construction: quantization is floor(x·1e6+0.5) in float64;
+    dot and norm-square are int64 sums; the finish is one int64→float64
+    cast, one multiply (sqa·sq) and one IEEE divide, with the −2.0
+    guard when that product is not positive (zero norms); np.argmax
+    takes the FIRST maximal element of the cent_id-sorted axis.  A row
+    whose vector is NULL or has NULL components scores −2.0 against
+    every centroid and lands on the smallest cent_id; a vector whose
+    width differs from the centroids' raises ValueError.  An empty
+    centroid frame assigns nothing.  Pinned against a pure-Python
+    integer reference in tests/test_operators.py."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
+    cent_type = centroids.schema["cent_id"].dataType
     cent_rows = sorted(
         centroids.select("cent_id", "cent_vec").collect(),
         key=lambda r: r["cent_id"],
     )
     if not cent_rows:
-        # HOF equivalence: an empty centroid frame assigns nothing
         return (
-            df.withColumn("cent_id", F.lit(-1).cast("long"))
+            df.withColumn("cent_id", F.lit(None).cast(cent_type))
             .filter(F.lit(False))
         )
     for r in cent_rows:
@@ -211,7 +215,9 @@ def _assign_nearest_arrow(
                 f"IVF: centroid {r['cent_id']!r} is NULL or has NULL "
                 "components"
             )
-    cent_ids = np.array([r["cent_id"] for r in cent_rows], dtype=np.int64)
+    cent_ids = pa.array(
+        [r["cent_id"] for r in cent_rows], type=to_arrow_type(cent_type)
+    )
     qcv = np.array(
         [
             [math.floor(float(x) * 1_000_000 + 0.5) for x in r["cent_vec"]]
@@ -219,165 +225,42 @@ def _assign_nearest_arrow(
         ],
         dtype=np.int64,
     )
+    dim = qcv.shape[1]
     sq = np.sqrt((qcv * qcv).sum(axis=1).astype(np.float64))
     out_schema = T.StructType(
         list(df.schema.fields)
-        + [T.StructField("cent_id", T.LongType(), True)]
+        + [T.StructField("cent_id", cent_type, True)]
     )
     cols = df.columns
 
     def assign_batches(batches):
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
-            vl = b.column(vec_col)
-            offs = vl.offsets.to_numpy()
-            widths = np.diff(offs)
-            # NULL vector / NULL component / width-mismatch rows: every
-            # sim is -2.0 on the HOF path -> first (smallest) cent_id
-            null_rows = np.zeros(n, dtype=bool)
-            if vl.null_count:
-                null_rows |= vl.is_null().to_numpy(zero_copy_only=False)
-            # NB: ListArray offsets are ABSOLUTE positions into .values
-            # (which is never sliced) — index with offs[i] directly
-            vals = vl.values
-            flat = vals.to_numpy(zero_copy_only=False)
-            if vals.null_count:
-                nulls_flat = vals.is_null().to_numpy(zero_copy_only=False)
-                # mark rows containing any null component (map the
-                # value-slice back to its row via the per-row widths)
-                row_of = np.repeat(np.arange(n), widths)
-                hit = nulls_flat[offs[0]:offs[-1]]
-                null_rows |= np.bincount(
-                    row_of[hit], minlength=n
-                ).astype(bool)
-                flat = np.where(nulls_flat, 0.0, flat)
-            dim = qcv.shape[1]
-            badw = widths != dim
-            out = np.empty(n, dtype=np.int64)
-            ok = ~(null_rows | badw)
-            if ok.any():
-                qa = np.floor(
-                    flat.astype(np.float64) * 1_000_000 + 0.5
-                ).astype(np.int64)
-                # reshape only the uniform-width OK rows
-                idx = np.flatnonzero(ok)
-                rows_q = np.empty((len(idx), dim), dtype=np.int64)
-                for j, i in enumerate(idx):
-                    rows_q[j] = qa[offs[i]:offs[i] + dim]
-                nsq = (rows_q * rows_q).sum(axis=1)
-                sqa = np.sqrt(nsq.astype(np.float64))
-                dots = rows_q @ qcv.T
-                denom = sqa[:, None] * sq[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sims = np.where(
-                        denom > 0,
-                        dots.astype(np.float64) / denom,
-                        -2.0,
-                    )
-                out[idx] = cent_ids[np.argmax(sims, axis=1)]
-            bad = np.flatnonzero(~ok)
-            if len(bad):
-                if badw[~null_rows].any():
-                    raise ValueError(
-                        "IVF: embedding dim mismatch vs centroids in "
-                        "_assign_nearest input"
-                    )
-                out[bad] = cent_ids[0]
+            # NULL rows read as zero vectors: every sim is the -2.0
+            # guard, so argmax lands on the smallest cent_id
+            mat, _, bad_width = _list_matrix(b.column(vec_col), dim)
+            if bad_width.any():
+                raise ValueError(
+                    "IVF: embedding dim mismatch vs centroids in "
+                    "_assign_nearest input"
+                )
+            qa = np.floor(
+                mat.astype(np.float64) * 1_000_000 + 0.5
+            ).astype(np.int64)
+            sqa = np.sqrt((qa * qa).sum(axis=1).astype(np.float64))
+            denom = sqa[:, None] * sq[None, :]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                sims = np.where(
+                    denom > 0,
+                    (qa @ qcv.T).astype(np.float64) / denom,
+                    -2.0,
+                )
             arrays = [b.column(c) for c in cols]
-            arrays.append(pa.array(out, type=pa.int64()))
+            arrays.append(cent_ids.take(np.argmax(sims, axis=1)))
             yield pa.RecordBatch.from_arrays(arrays, cols + ["cent_id"])
 
     return df.mapInArrow(assign_batches, out_schema)
-
-
-def _assign_cells(
-    df: DataFrame, vec_col: str, centroids: DataFrame
-) -> DataFrame:
-    """Nearest-centroid assignment dispatcher (r15): the vectorized
-    ``mapInArrow`` twin by default — measured tied at the gate SFs and
-    ~2.7× cheaper per-task CPU at a 2M-row microbench (the _pq_assign
-    result; same interpreted-HOF bottleneck) — with
-    ``SPARK_GRAFT_ARROW_ASSIGN=0`` (or SPARK_GRAFT_NO_MATERIALIZE, or a
-    non-integer cent_id type) falling back to the packed-broadcast HOF
-    expression form."""
-    use_arrow = (
-        os.environ.get("SPARK_GRAFT_ARROW_ASSIGN", "1") == "1"
-        and not os.environ.get("SPARK_GRAFT_NO_MATERIALIZE")
-        and isinstance(
-            centroids.schema["cent_id"].dataType,
-            (T.LongType, T.IntegerType, T.ShortType, T.ByteType),
-        )
-    )
-    if use_arrow:
-        return _assign_nearest_arrow(df, vec_col, centroids)
-    return _assign_nearest(df, vec_col, _pack_centroids(centroids))
-
-
-def _assign_nearest(df: DataFrame, vec_col: str, packed: DataFrame) -> DataFrame:
-    """``df`` + a row-local ``cent_id`` column: nearest packed centroid
-    by the EXACT cosine_micro_exact ordering (max sim, ties to the
-    smaller cent_id — the packed array is cent_id-sorted and
-    array_position takes the FIRST maximal element), computed entirely
-    in the map stage.  The quantized row vector and its norm are hoisted
-    once per row; per-centroid work is one BIGINT dot fold + the fixed
-    IEEE finish — identical doubles to cosine_micro_exact's, so the
-    assignment cannot drift from the pre-r14 shuffle-aggregated form."""
-    zero = F.lit(0).cast("long")
-    from datalake_spark.functions.vectors import quantize_micro
-
-    sim = lambda e: F.when(  # noqa: E731
-        (F.col("_sqa") * e["sq"]) > 0,
-        F.aggregate(
-            F.zip_with(F.col("_qa"), e["qcv"], lambda x, y: x * y),
-            zero,
-            lambda acc, x: acc + x,
-        ).cast("double")
-        / (F.col("_sqa") * e["sq"]),
-    ).otherwise(F.lit(-2.0))
-    return (
-        df.join(F.broadcast(packed))
-        # strict pre-r14 equivalence: an inner join against an EMPTY
-        # centroid frame produced zero rows; the packed frame is one row
-        # (empty array) even then
-        .filter(F.size(F.col("_cents")) > 0)
-        .withColumn("_qa", quantize_micro(F.col(vec_col)))
-        .withColumn(
-            "_sqa",
-            F.sqrt(
-                F.aggregate(
-                    F.transform(F.col("_qa"), lambda x: x * x),
-                    zero,
-                    lambda acc, x: acc + x,
-                ).cast("double")
-            ),
-        )
-        .withColumn("_sims", F.transform(F.col("_cents"), sim))
-        # coalesce with a literal makes cent_id STATICALLY non-nullable:
-        # downstream inner joins on cent_id infer isnotnull(cent_id) and
-        # Catalyst pushes that predicate below these Projects, inlining
-        # the ENTIRE per-centroid argmax (with the hoisted _qa/_sqa
-        # re-expanded per centroid) into a join condition — observed as
-        # 3-4x duplicated HOF work per corpus row in the r14 plan audit.
-        # isnotnull(<non-nullable>) folds to true at optimization time,
-        # so the pushed filter evaporates.  The fallback is unreachable:
-        # _cents is non-empty (the size>0 filter above) so array_max /
-        # array_position / element_at always hit a real struct.
-        .withColumn(
-            "cent_id",
-            F.coalesce(
-                F.element_at(
-                    F.col("_cents"),
-                    F.array_position(
-                        F.col("_sims"), F.array_max(F.col("_sims"))
-                    ).cast("int"),
-                )["cent_id"],
-                F.lit(-1).cast("long"),
-            ),
-        )
-        .drop("_cents", "_qa", "_sqa", "_sims")
-    )
 
 
 def ivf_index_build(
@@ -396,23 +279,20 @@ def ivf_index_build(
     Centroids = the num_centroids lowest-id candidate vectors (a
     deterministic coreset — ordered, so the index is reproducible and
     oracle-checkable; kmeans_iterate refines cells when wanted).
-    Assignments map every candidate to its nearest centroid — ROW-LOCAL
-    against the packed broadcast centroids (r14): the map stage computes
-    every exact cosine and takes the argmax in place, where the pre-r14
-    broadcast-join + groupBy(c_id) max_by shuffled one row per candidate
-    (vector payload included) per assignment."""
+    Assignments map every candidate to its nearest centroid ROW-LOCALLY
+    (:func:`_assign_nearest`): the map stage computes every exact cosine
+    and takes the argmax in place, with no shuffle."""
     # num_centroids rows, parameter-bounded: materialized once (bounded
     # collect + literal rebuild) so the corpus-scan + TakeOrdered coreset
-    # lineage does not ride under every consumer — the packed assignment
-    # map, the probe ranking, the residual centroid map, and the index
-    # write each re-planned (and re-executed) it pre-r14
+    # lineage does not ride under every consumer — the assignment, the
+    # probe ranking, the residual centroid map, and the index write
     cents = _materialize_small(
         candidates.orderBy(id_col)
         .limit(num_centroids)
         .select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec"))
     )
     c = candidates.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"))
-    c_assign = _assign_cells(c, "c_vec", cents).select(
+    c_assign = _assign_nearest(c, "c_vec", cents).select(
         "c_id", "c_vec", "cent_id"
     )
     return cents, c_assign
@@ -429,13 +309,13 @@ def ivf_assign_cells(
     against a FIXED (cent_id, cent_vec) frame — the incremental half of
     :func:`ivf_index_build` (identical exact-cosine argmax ordering, so
     a vector is assigned the same cell whether it arrived at build time
-    or in a later append batch).  Row-local against the packed broadcast
-    centroids (r14): pure map work, no shuffle; per-batch cost
+    or in a later append batch).  Row-local (:func:`_assign_nearest`):
+    pure map work, no shuffle; per-batch cost
     O(|batch| · num_centroids · dim).  ``keep_vec=True`` additionally
     carries the vector through as ``c_vec`` so an encode step can
     consume the assignment without re-joining the batch."""
     c = batch.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"))
-    out = _assign_cells(c, "c_vec", centroids)
+    out = _assign_nearest(c, "c_vec", centroids)
     if keep_vec:
         return out.select("c_id", "c_vec", "cent_id")
     return out.select("c_id", "cent_id")
@@ -707,9 +587,12 @@ def assign_to_centroids(
             "_vd", F.transform(vec_col, lambda x: x.cast("double"))
         )
         .withColumn("_d2s", F.transform(F.col("_cents"), d2))
-        # coalesce → statically non-nullable (consumers inner-join on
-        # cluster; see _assign_nearest for the predicate-inlining
-        # rationale).  Fallback unreachable: _cents is non-empty.
+        # coalesce → statically non-nullable: consumers inner-join on
+        # cluster, and a nullable cluster would let Catalyst push the
+        # inferred isnotnull(cluster) below these Projects, inlining the
+        # whole per-centroid argmin into the join condition (observed as
+        # 3-4x duplicated HOF work per row in the r14 plan audit).
+        # Fallback unreachable: _cents is non-empty.
         .select(
             F.col(id_col),
             *([F.col(vec_col)] if keep_vec else []),
@@ -761,9 +644,9 @@ def _py_quantize_micro_unit(vec) -> list[int]:
     return [math.floor(float(q) / nrm * 1_000_000 + 0.5) for q in qa]
 
 
-# exact schema of the expression-built codebook frame (see pq_train):
-# sub/code from explode(sequence)/row_number-1 are non-nullable ints;
-# cb_micro's slice-of-transform keeps nullable element containment.
+# exact schema of the seed codebook frame (see pq_train): sub/code are
+# non-nullable ints; cb_micro keeps nullable element containment, the
+# schema of a Column-built slice of quantize_micro_unit.
 _CB_SCHEMA = T.StructType(
     [
         T.StructField("sub", T.IntegerType(), False),
@@ -782,28 +665,24 @@ def _seed_codebooks_local(
     collected (id, vec) seed rows: unit-normalize + micro-quantize each
     seed (``_py_quantize_micro_unit``, bit-identical to the cluster
     expression), validate the dim/m contract (the ``_pq_d_sub`` raise,
-    driver-side), and slice into the ``m`` subvectors.  Replaces the
-    pre-r14 second bounded job (heavy projection over the seed rows +
-    ``_materialize_small`` collect) with pure driver work on rows a
-    single TakeOrdered job already fetched (guide §5: the driver may do
-    PARAMETER-BOUNDED work; it was already collecting these rows).
+    driver-side), and slice into the ``m`` subvectors — pure driver work
+    on rows a single TakeOrdered job already fetched (guide §5: the
+    driver may do PARAMETER-BOUNDED work).
 
     ``cent_qv`` (r15, the residual path): {cent_id: quantized centroid}
     — each seed's representation becomes the exact elementwise
     difference qv(vec) − qv(centroid of its ``_cell``), the IVFADC
-    residual.  Exact int−int mirrors the cluster ``zip_with(a-b)`` on
-    longs term-for-term.  A seed whose cell is absent from the map is
-    dropped BEFORE code numbering — the cluster form's inner join on
-    cent_id drops it the same way (unreachable in practice: cells come
-    from _assign_nearest against these very centroids)."""
+    residual.  Exact int−int mirrors the Column ``zip_with(a-b)`` of
+    :func:`_pq_quantized` on longs term-for-term.  A seed whose cell is
+    absent from the map is dropped BEFORE code numbering, as that
+    function's inner join on cent_id drops it (unreachable in practice:
+    cells come from _assign_nearest against these very centroids)."""
     quantized = []
     for r in sorted(seed_rows, key=lambda r: r["_id"]):
-        # NULL vector / NULL component in a SEED row: the cluster
-        # expression path would thread NULLs into cb_micro (poisoning
-        # every downstream distance) while float(None) here would raise
-        # an opaque TypeError — fail loudly naming the seed instead
-        # (r14 advisor finding; gate corpora carry no NULL vectors, so
-        # real-data behavior is unchanged)
+        # NULL vector / NULL component in a SEED row would poison every
+        # downstream distance, and float(None) would raise an opaque
+        # TypeError — fail loudly naming the seed instead (gate corpora
+        # carry no NULL vectors, so real-data behavior is unchanged)
         if r["_vec"] is None or any(x is None for x in r["_vec"]):
             raise ValueError(
                 "pq_train: seed embedding "
@@ -855,8 +734,6 @@ def _materialize_small(df: DataFrame) -> DataFrame:
     literal rebuild truncates the lineage exactly — values identical
     (exact longs/doubles roundtrip), determinism unchanged, and unlike
     ``localCheckpoint`` nothing can be lost with an executor."""
-    if os.environ.get("SPARK_GRAFT_NO_MATERIALIZE"):  # A/B isolation knob
-        return df
     rows = df.collect()
     return df.sparkSession.createDataFrame(rows, df.schema)
 
@@ -961,29 +838,30 @@ def _pq_subvectors(
     )
 
 
-def _pq_assign_arrow(
-    sv: DataFrame, codebooks: DataFrame, keep: tuple[str, ...]
+def _pq_assign(
+    sv: DataFrame, codebooks: DataFrame, keep: tuple[str, ...] = ()
 ) -> DataFrame:
-    """Vectorized twin of :func:`_pq_assign` (r15, guide §4.2): the
-    m·ksub codebooks — a parameter-bounded LOCAL relation at every call
-    site, so collecting them schedules no cluster job — are packed into
-    per-sub NumPy int64 matrices shipped in the function closure, and
-    one ``mapInArrow`` stage computes every squared-L2 and the argmin
-    over whole record batches instead of Catalyst's interpreted
-    higher-order-function folds (no whole-stage codegen exists for HOFs
-    in Spark 4.1, so the HOF form pays per-row interpreter cost).
+    """(c_id, sub, code, *keep): per-subspace nearest codeword of every
+    subvector, ROW-LOCAL — zero corpus shuffle.  The m·ksub codebooks (a
+    parameter-bounded LOCAL relation at every call site, so collecting
+    them schedules no cluster job) are packed into per-sub NumPy int64
+    matrices shipped in the function closure, and one ``mapInArrow``
+    stage computes every squared-L2 and the argmin over whole record
+    batches.  ``keep`` names sv columns to carry through (pq_train keeps
+    sv_micro so its update step needs no join back; pq_encode keeps the
+    cell tag).
 
-    Bit-exact by construction: distances are int64 (a−b)·(a−b) sums —
-    NumPy int64 arithmetic wraps two's-complement exactly like the JVM
-    long fold (and the micro-quantized values cannot overflow int64
-    regardless: |diff| ≤ 2e6 → per-term ≤ 4e12) — and ``np.argmin``
-    takes the FIRST minimal element of the code-sorted axis, the same
-    (dist ASC, code ASC) tie-break as array_position-of-array_min.
-    Pinned against the HOF twin in tests/test_operators.py.
+    Exact by construction: distances are int64 (a−b)·(a−b) sums (the
+    micro-quantized values cannot overflow int64: |diff| ≤ 2e6 →
+    per-term ≤ 4e12), and ``np.argmin`` takes the FIRST minimal element
+    of the code-sorted axis — the (dist ASC, code ASC) tie-break.
+    Pinned against a pure-Python integer reference in
+    tests/test_operators.py.
 
-    NULL handling: a NULL subvector or NULL component raises (the HOF
-    path would produce a NULL distance and then fail element_at(0) —
-    both paths reject; data is validated upstream by _pq_d_sub)."""
+    Malformed input raises ValueError: a NULL codeword or ragged
+    codebook widths (at call time), and a sub with no codebook, a NULL
+    subvector or component, or a subvector whose width differs from the
+    codebooks' (when the stage runs)."""
     import pyarrow as pa
 
     by_sub: dict = {}
@@ -1003,6 +881,12 @@ def _pq_assign_arrow(
         )
         for s, lst in by_sub.items()
     }
+    widths = {cb.shape[1] for _, cb in packed.values()}
+    if len(widths) > 1:
+        raise ValueError(
+            f"PQ: codebook widths differ across subs: {sorted(widths)}"
+        )
+    w = widths.pop() if widths else 0
     in_cols = ["c_id", "sub", "sv_micro"]
     in_cols += [k for k in keep if k not in in_cols]
     out_cols = ["c_id", "sub", "code", *keep]
@@ -1017,35 +901,32 @@ def _pq_assign_arrow(
 
     def assign_batches(batches):
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
             subs = b.column("sub").to_numpy(zero_copy_only=False)
-            svl = b.column("sv_micro")
-            if svl.null_count or svl.values.null_count:
+            present = np.unique(subs)
+            for s in present:
+                if int(s) not in packed:
+                    raise ValueError(
+                        f"PQ: no codebook for sub {int(s)} in "
+                        "_pq_assign input"
+                    )
+            mat, null_rows, bad_width = _list_matrix(
+                b.column("sv_micro"), w
+            )
+            if null_rows.any():
                 raise ValueError(
                     "PQ: NULL subvector/component in _pq_assign input"
                 )
-            offs = svl.offsets.to_numpy()
-            widths = np.diff(offs)
-            if n and (widths != widths[0]).any():
+            if bad_width.any():
                 raise ValueError(
-                    "PQ: ragged subvector widths in _pq_assign input"
+                    f"PQ: subvector width differs from the codebook "
+                    f"width {w} in _pq_assign input"
                 )
-            w = int(widths[0]) if n else 0
-            flat = svl.values.to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-            mat = flat[offs[0]:offs[-1]].reshape(n, w)
-            codes = np.empty(n, dtype=np.int32)
-            for s in np.unique(subs):
+            codes = np.empty(b.num_rows, dtype=np.int32)
+            for s in present:
                 mask = subs == s
                 cb_codes, cb_mat = packed[int(s)]
-                if cb_mat.shape[1] != w:
-                    raise ValueError(
-                        f"PQ: codebook width {cb_mat.shape[1]} != "
-                        f"subvector width {w} (sub={int(s)})"
-                    )
                 d = mat[mask][:, None, :] - cb_mat[None, :, :]
                 codes[mask] = cb_codes[
                     np.argmin((d * d).sum(axis=2), axis=1)
@@ -1061,75 +942,6 @@ def _pq_assign_arrow(
     return src.mapInArrow(assign_batches, out_schema)
 
 
-def _pq_assign(
-    sv: DataFrame, codebooks: DataFrame, keep: tuple[str, ...] = ()
-) -> DataFrame:
-    """(c_id, sub, code, *keep): per-subspace nearest codeword of every
-    subvector — ROW-LOCAL (r14): the m·ksub codebooks are packed into m
-    rows of code-sorted codeword arrays, broadcast, and each subvector
-    computes every exact-BIGINT squared-L2 and takes the argmin in
-    place.  Distances are exact longs, the packed array is code-sorted,
-    and array_position takes the FIRST minimal element — identical to
-    the pre-r14 min_by struct(_dist, code) ordering (dist ASC, code
-    ASC), with ZERO corpus shuffle where the old form aggregated
-    |corpus|·m rows through a groupBy(c_id, sub).  ``keep`` names
-    sv columns to carry through (pq_train keeps sv_micro so its update
-    step needs no join back; pq_encode keeps the cell tag).
-
-    r15 DEFAULT: the vectorized ``mapInArrow`` twin
-    (:func:`_pq_assign_arrow`) — bit-identical values (see its
-    docstring), one MapInArrow stage instead of interpreted HOF folds.
-    Measured: tied at sf0.1 AND sf1 (the gate entries are driver- and
-    shuffle-bound), **2.7× faster per-task CPU at a 2M-row / 16M-
-    subvector microbench** (HOF 11.3-14.1 s vs Arrow 4.2-4.5 s) — the
-    regime that matters at 100 TB, where assignment/encode IS the wall.
-    ``SPARK_GRAFT_ARROW_ASSIGN=0`` forces the HOF form (A/B + twin-test
-    knob); not taken under SPARK_GRAFT_NO_MATERIALIZE (the codebook
-    must be a local relation for the closure packing to be
-    job-free)."""
-    if os.environ.get("SPARK_GRAFT_ARROW_ASSIGN", "1") == "1" and not (
-        os.environ.get("SPARK_GRAFT_NO_MATERIALIZE")
-    ):
-        return _pq_assign_arrow(sv, codebooks, keep)
-    zero = F.lit(0).cast("long")
-    cbp = codebooks.groupBy("sub").agg(
-        F.array_sort(
-            F.collect_list(F.struct("code", "cb_micro"))
-        ).alias("_cbs")
-    )
-    dist = lambda e: F.aggregate(  # noqa: E731
-        F.zip_with(
-            F.col("sv_micro"), e["cb_micro"],
-            lambda a, b: (a - b) * (a - b),
-        ),
-        zero,
-        lambda acc, x: acc + x,
-    )
-    return (
-        sv.join(F.broadcast(cbp), "sub")
-        .withColumn("_dists", F.transform(F.col("_cbs"), dist))
-        # coalesce → statically non-nullable, same rationale as
-        # _assign_nearest: downstream inner joins on code (the ADC
-        # qtable join) would otherwise push an inferred isnotnull(code)
-        # below this Project and inline the whole ksub-way argmin into a
-        # join condition, duplicating the distance folds per row.  The
-        # fallback is unreachable: _cbs always holds ksub codewords.
-        .withColumn(
-            "code",
-            F.coalesce(
-                F.element_at(
-                    F.col("_cbs"),
-                    F.array_position(
-                        F.col("_dists"), F.array_min(F.col("_dists"))
-                    ).cast("int"),
-                )["code"],
-                F.lit(-1),
-            ),
-        )
-        .select("c_id", "sub", "code", *keep)
-    )
-
-
 def pq_train(
     candidates: DataFrame,
     m: int = 8,
@@ -1138,7 +950,7 @@ def pq_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     frames_out: list | None = None,
-    cells: DataFrame | None = None,
+    cells: str | None = None,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Train PQ codebooks as a PERSISTABLE frame: (sub, code, cb_micro).
@@ -1179,105 +991,43 @@ def pq_train(
     kmeans_iterate cache-release discipline.
 
     ``cells`` + ``centroids`` (r11): train on IVFADC RESIDUALS —
-    subvectors of qv(vector) − qv(cell centroid) (see
-    :func:`_pq_quantized`); the coreset seed uses the same residual
-    representation, so codebooks model the residual distribution the
-    codes will actually quantize."""
-    # Seed codebooks in ONE bounded job (r14, guide §5 driver work):
-    # collect the raw (id, vector[, cell]) seed rows via a distributed
+    ``cells`` names the column of ``candidates`` holding each vector's
+    cell id (e.g. the ``cent_id`` of :func:`ivf_index_build`'s
+    assignments); training uses subvectors of qv(vector) − qv(cell
+    centroid) (see :func:`_pq_quantized`), and the coreset seed uses the
+    same residual representation, so codebooks model the residual
+    distribution the codes will actually quantize."""
+    # Seed codebooks in ONE bounded job (guide §5 driver work): collect
+    # the raw (id, vector[, cell]) seed rows via a distributed
     # TakeOrdered — stored/row-local columns only, so the corpus scan
     # stays fully pruned (no quantized projection rides corpus-wide) —
     # and build the quantize/slice representation DRIVER-SIDE with
-    # bit-identical IEEE ops (_py_quantize_micro_unit).  The pre-r14
-    # shape paid TWO sequential jobs here: a bounded id collect, then a
-    # second job projecting the heavy representation over the
-    # isin-filtered seeds for the _materialize_small collect.  r15
-    # extends the single-collect path to RESIDUAL mode when the cell is
-    # a COLUMN already on the row (the r14 keep_vec threading): the one
-    # TakeOrdered also fetches the seed's cell tag, the
+    # bit-identical IEEE ops (_py_quantize_micro_unit).  In RESIDUAL
+    # mode the one TakeOrdered also fetches the seed's cell tag; the
     # parameter-bounded centroid frame — a _materialize_small local
     # relation at every residual call site, so its collect schedules no
     # cluster job — is quantized driver-side, and the residual is exact
-    # int−int (the cluster zip_with(a-b) twin).  A cells FRAME still
-    # keeps the old path (its inner join can drop seeds mid-plan).
-    # SPARK_GRAFT_NO_MATERIALIZE keeps forcing the lazy cluster path
-    # for A/B isolation.
-    if (
-        not isinstance(cells, DataFrame)
-        and not os.environ.get("SPARK_GRAFT_NO_MATERIALIZE")
-    ):
-        res_mode = isinstance(cells, str) and centroids is not None
-        sel = [F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")]
-        if res_mode:
-            sel.append(F.col(cells).alias("_cell"))
-        seed_rows = (
-            candidates.select(*sel).orderBy("_id").limit(ksub).collect()
-        )
-        cent_qv = None
-        if res_mode:
-            cent_qv = {}
-            for cr in centroids.select("cent_id", "cent_vec").collect():
-                if cr["cent_vec"] is None or any(
-                    x is None for x in cr["cent_vec"]
-                ):
-                    raise ValueError(
-                        "pq_train: residual centroid "
-                        f"{cr['cent_id']!r} is NULL or has NULL "
-                        "components"
-                    )
-                cent_qv[cr["cent_id"]] = _py_quantize_micro_unit(
-                    cr["cent_vec"]
+    # int−int.
+    res_mode = cells is not None and centroids is not None
+    sel = [F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")]
+    if res_mode:
+        sel.append(F.col(cells).alias("_cell"))
+    seed_rows = candidates.select(*sel).orderBy("_id").limit(ksub).collect()
+    cent_qv = None
+    if res_mode:
+        cent_qv = {}
+        for cr in centroids.select("cent_id", "cent_vec").collect():
+            if cr["cent_vec"] is None or any(
+                x is None for x in cr["cent_vec"]
+            ):
+                raise ValueError(
+                    "pq_train: residual centroid "
+                    f"{cr['cent_id']!r} is NULL or has NULL components"
                 )
-        cb = _seed_codebooks_local(
-            candidates.sparkSession, seed_rows, m, cent_qv=cent_qv
-        )
-    else:
-        # seed selection by BOUNDED id collect + pushed-down filter (the
-        # kmeans_iterate seed discipline, r14): the pre-r14 form ran
-        # orderBy(c_id).limit(ksub) ON TOP of the quantized (and, in
-        # residual mode, cell-assigned) projection, so the sort computed
-        # the heavy representation for EVERY corpus row and, fed by a
-        # broadcast-join lineage with no exchange, collapsed into a
-        # single-partition sort — observed as multi-second one-task
-        # stages in the r14 profile.  Ids are cheap to rank; the
-        # expensive projection then runs on exactly ksub rows.
-        seed_ids = [
-            r[0]
-            for r in candidates.select(F.col(id_col))
-            .orderBy(id_col)
-            .limit(ksub)
-            .collect()
-        ]
-        seeds = candidates.filter(F.col(id_col).isin(seed_ids))
-        base = (
-            _pq_quantized(seeds, id_col, vec_col, cells, centroids)
-            .orderBy("c_id")
-            .limit(ksub)
-            .select(
-                (
-                    F.row_number().over(W.orderBy("c_id")) - F.lit(1)
-                ).alias("code"),
-                "_qv",
-            )
-        )
-        d_sub = _pq_d_sub(m)
-        cb = base.select(
-            "code",
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
-            "_qv",
-        ).select(
-            "sub",
-            "code",
-            F.slice(F.col("_qv"), F.col("sub") * d_sub + 1, d_sub).alias(
-                "cb_micro"
-            ),
-        )
-        # m·ksub rows, parameter-bounded: truncate the corpus-scan +
-        # TakeOrdered coreset lineage every consumer (each Lloyd round
-        # reads it twice — assign packing + the empty-cluster anti-join —
-        # and with iters=0 every downstream encode/search) would re-plan
-        # and re-execute otherwise — see _materialize_small
-        cb = _materialize_small(cb)
+            cent_qv[cr["cent_id"]] = _py_quantize_micro_unit(cr["cent_vec"])
+    cb = _seed_codebooks_local(
+        candidates.sparkSession, seed_rows, m, cent_qv=cent_qv
+    )
     if iters <= 0:
         return cb
     # persisted: sv feeds one row-local assign per round — each would
@@ -1347,7 +1097,7 @@ def pq_encode(
     m: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cells: DataFrame | None = None,
+    cells: DataFrame | str | None = None,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Encode every candidate to its per-subspace nearest codeword:
@@ -1374,8 +1124,8 @@ def pq_encode(
     ``residual=True`` so the query side subtracts the probed cell's
     centroid before the ADC table lookup.
 
-    Assignment is :func:`_pq_assign` — row-local argmin against the
-    packed broadcast codebooks (r14): no corpus shuffle, and the cell
+    Assignment is :func:`_pq_assign` — a row-local argmin against the
+    codebooks shipped in its closure: no corpus shuffle, and the cell
     tag is attached at one row per VECTOR before the subvector
     explosion (``cells`` may be a (c_id, cent_id) frame or the name of
     a column already on ``candidates`` — the pre-r14 form re-joined

@@ -90,16 +90,17 @@ _SCHEMA_MEMO: dict = {}
 #   full 50-entry oracle gate at sf0.001 + sf0.01.
 # - driver cost: one pyarrow footer read per path, memoized, first paid
 #   by the bench's untimed warm pre-pass.
-# SPARK_GRAFT_NO_SPREAD=1 disables it (A/B isolation knob).
 _SPREAD_MIN_ROWS = 2000
+try:
+    from pyarrow.lib import ArrowException as _ArrowException
+except ImportError:  # no pyarrow: the footer read raises ImportError
+    _ArrowException = ImportError
 _SPREAD_MEMO: dict = {}
 
 
 def _spread_partitions(spark: SparkSession, path: str):
     """Target partition count when the parquet layout cannot reach the
     session's default parallelism, else None (memoized per path)."""
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        return None
     if path in _SPREAD_MEMO:
         return _SPREAD_MEMO[path]
     out = None
@@ -125,9 +126,10 @@ def _spread_partitions(spark: SparkSession, path: str):
                 rgs += md.num_row_groups
             if rows >= _SPREAD_MIN_ROWS and rgs < par:
                 out = par
-    except (ImportError, OSError, ValueError):
+    except (ImportError, OSError, ValueError, _ArrowException):
         # pyarrow missing / transient IO / corrupt footer (ArrowInvalid
-        # is a ValueError): the safe answer is "no spread", but do NOT
+        # is a ValueError; ArrowTypeError and other Arrow failures share
+        # ArrowException): the safe answer is "no spread", but do NOT
         # memoize it — a transient first-touch hiccup must not disable
         # the floor for the whole session (r14 advisor finding).
         # Anything else (a programming error) propagates.

@@ -35,25 +35,6 @@ def get_spark(app_name: str = "datalake_spark", master: str | None = None) -> Sp
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
-        # r15 config-tier knobs (guide §9), each A/B'd one at a time
-        # against the protocol bench — env-overridable so the A/B legs
-        # and any production deployment can flip them without a code
-        # change; defaults hold the measured-winning value:
-        # shuffle/spill compression codec (guide §2.3: zstd compresses
-        # markedly better for a bit more CPU; at sf0.1 the shuffles are
-        # tiny so local delta is noise — the default stays lz4 unless
-        # the A/B shows a win, see OPTIMIZATION_r15.md)
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
-        # guide §3.1: allow shuffled-hash where its size conditions are
-        # met instead of always sort-merge (A/B'd; see
-        # OPTIMIZATION_r15.md)
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
     )
     if master is not None:
         builder = builder.master(master)

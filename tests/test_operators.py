@@ -4,6 +4,8 @@ frames on a live session."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1227,6 +1229,75 @@ class TestIvfIndexPersistence:
         assert out.count() == 3
 
 
+def _ref_qmicro(vec):
+    """Micro-quantize a vector: floor(x·1e6+0.5) per component."""
+    return [math.floor(float(x) * 1_000_000 + 0.5) for x in vec]
+
+
+def _ref_cosine(a, b):
+    """cosine_micro_exact in plain Python: exact int dot product and
+    norm squares, then one IEEE finish (int→float casts, one sqrt each,
+    one multiply, one divide) and −2.0 when a norm is zero."""
+    qa, qb = _ref_qmicro(a), _ref_qmicro(b)
+    den = math.sqrt(float(sum(x * x for x in qa))) * math.sqrt(
+        float(sum(x * x for x in qb)))
+    return float(sum(x * y for x, y in zip(qa, qb))) / den if den > 0 else -2.0
+
+
+def _ref_nearest(vec, cents):
+    """Nearest centroid of ``vec`` in ``cents`` ({cent_id: vector}): the
+    FIRST max cosine over the cent_id-sorted centroids.  A NULL vector
+    or component scores −2.0 everywhere, landing on the smallest id."""
+    null = vec is None or any(x is None for x in vec)
+    return max(
+        sorted(cents),
+        key=lambda cid: -2.0 if null else _ref_cosine(vec, cents[cid]),
+    )
+
+
+def _ref_pq_code(sv, codewords):
+    """Nearest codeword of subvector ``sv`` in ``codewords`` ({code:
+    micro vector}): the FIRST min of the exact int squared-L2 over the
+    code-sorted codewords."""
+    return min(
+        sorted(codewords),
+        key=lambda code: sum((a - b) ** 2 for a, b in zip(sv, codewords[code])),
+    )
+
+
+def _column_seed_codebooks(df, id_col, vec_col, m, ksub,
+                           cell_col=None, cents=None):
+    """Seed codebook rows (sub, code, cb_micro) rebuilt from the Column
+    quantize_micro_unit: the ``ksub`` lowest-id vectors, code = id rank,
+    each sliced into ``m`` subvectors.  With ``cell_col`` + ``cents``
+    each seed is the residual qv(vector) − qv(its cell's centroid)."""
+    from datalake_spark.functions.vectors import quantize_micro_unit
+
+    sel = [F.col(id_col).alias("_id"),
+           quantize_micro_unit(F.col(vec_col)).alias("_qv")]
+    if cell_col is not None:
+        sel.append(F.col(cell_col).alias("_cell"))
+    seeds = sorted(df.select(*sel).orderBy("_id").limit(ksub).collect(),
+                   key=lambda r: r["_id"])
+    cm = None
+    if cents is not None:
+        cm = {
+            r["cent_id"]: r["_cm"]
+            for r in cents.select(
+                "cent_id", quantize_micro_unit(F.col("cent_vec")).alias("_cm")
+            ).collect()
+        }
+    out = []
+    for code, r in enumerate(seeds):
+        qv = r["_qv"]
+        if cm is not None:
+            qv = [a - b for a, b in zip(qv, cm[r["_cell"]])]
+        d_sub = len(qv) // m
+        out += [(sub, code, tuple(qv[sub * d_sub:(sub + 1) * d_sub]))
+                for sub in range(m)]
+    return sorted(out)
+
+
 class TestPq:
     """Product quantization (pq_train/pq_encode/pq_search): exact-integer
     ADC, standing-index parquet roundtrip, and recall against the exact
@@ -1396,36 +1467,26 @@ class TestPq:
         # normal-range embeddings are untouched
         assert _py_quantize_micro_unit([1.0, -0.5]) is not None
 
-    def test_seed_codebooks_driver_path_matches_cluster_path(
-        self, emb, monkeypatch
-    ):
-        """r14 single-collect seed path: pq_train(iters=0) must produce
-        value-identical codebooks whether seeds are built driver-side
-        (default) or by the cluster expression path
-        (SPARK_GRAFT_NO_MATERIALIZE=1 forces it)."""
+    def test_seed_codebooks_match_column_reference(self, emb):
+        """pq_train(iters=0) builds its seed codebooks driver-side; they
+        must equal the seeds rebuilt from the Column quantizer."""
         c = emb.filter("vec_id >= 3")
+        got = sorted(
+            (r["sub"], r["code"], tuple(r["cb_micro"]))
+            for r in similarity.pq_train(c, m=16, ksub=8, iters=0).collect()
+        )
+        assert got == _column_seed_codebooks(
+            c, "vec_id", "embedding", m=16, ksub=8
+        )
 
-        def rows(cb):
-            return sorted(
-                (r["sub"], r["code"], tuple(r["cb_micro"]))
-                for r in cb.collect()
-            )
-
-        driver = rows(similarity.pq_train(c, m=16, ksub=8, iters=0))
-        monkeypatch.setenv("SPARK_GRAFT_NO_MATERIALIZE", "1")
-        cluster = rows(similarity.pq_train(c, m=16, ksub=8, iters=0))
-        assert driver == cluster
-
-    def test_pq_assign_arrow_matches_hof_twin(self, spark, monkeypatch):
-        """r15 mapInArrow experiment: the vectorized assignment must be
-        BIT-identical to the interpreted HOF fold — including ties
-        (equal distances resolve to the SMALLEST code on both paths) and
-        the exact int64 distance arithmetic."""
+    def test_pq_assign_matches_python_reference(self, spark):
+        """The mapInArrow PQ assignment must equal the pure-Python
+        reference (exact int squared-L2, first min over code-sorted
+        codewords) — including ties, which resolve to the SMALLEST code."""
         import random as _random
 
         from datalake_spark.operators.similarity import (
-            _pq_assign, _pq_assign_arrow, _pq_subvectors,
-            _seed_codebooks_local,
+            _pq_assign, _pq_subvectors, _seed_codebooks_local,
         )
 
         rng = _random.Random(7)
@@ -1433,10 +1494,14 @@ class TestPq:
         vecs = [
             [rng.uniform(-3, 3) for _ in range(dim)] for _ in range(40)
         ]
-        # adversarial: duplicates of seed rows force exact-zero distances
-        # and ties across codes built from identical subvectors
+        # adversarial: seed 3 duplicates seed 2, so codes 2 and 3 are
+        # identical codewords and every subvector nearest to them ties;
+        # duplicates of seed rows force exact-zero distances
+        vecs[3] = list(vecs[2])
         vecs[10] = list(vecs[0])
         vecs[11] = list(vecs[1])
+        vecs[12] = [0.0] * dim           # zero norm -> all-zero unit
+        vecs[13] = [1e-8] * dim          # sub-micro -> quantizes to 0
         df = spark.createDataFrame(
             [(i, v) for i, v in enumerate(vecs)],
             "vec_id long, embedding array<double>",
@@ -1447,42 +1512,42 @@ class TestPq:
         )
         cb = _seed_codebooks_local(spark, seed_rows, m)
         sv = _pq_subvectors(df, m, "vec_id", "embedding")
-
-        def rows(out):
-            return sorted(
-                (r["c_id"], r["sub"], r["code"]) for r in out.collect()
-            )
-
-        monkeypatch.setenv("SPARK_GRAFT_ARROW_ASSIGN", "0")
-        hof = rows(_pq_assign(sv, cb))  # knob=0 forces the HOF form
-        arrow = rows(_pq_assign_arrow(sv, cb, ()))
-        assert hof == arrow and len(hof) == 40 * m
-        # keep threading carries sv_micro through unchanged
-        kept = {
-            (r["c_id"], r["sub"]): (r["code"], tuple(r["sv_micro"]))
-            for r in _pq_assign_arrow(sv, cb, ("sv_micro",)).collect()
-        }
+        books: dict = {}
+        for r in cb.collect():
+            books.setdefault(r["sub"], {})[r["code"]] = r["cb_micro"]
         base = {
             (r["c_id"], r["sub"]): tuple(r["sv_micro"])
             for r in sv.collect()
         }
-        assert all(kept[k][1] == base[k] for k in base)
-        # the default (knob unset/1) routes _pq_assign through the
-        # arrow twin — same values
-        monkeypatch.setenv("SPARK_GRAFT_ARROW_ASSIGN", "1")
-        assert rows(_pq_assign(sv, cb)) == hof
+        expected = {
+            k: _ref_pq_code(v, books[k[1]]) for k, v in base.items()
+        }
+        got = {
+            (r["c_id"], r["sub"]): (r["code"], tuple(r["sv_micro"]))
+            for r in _pq_assign(sv, cb, ("sv_micro",)).collect()
+        }
+        assert {k: v[0] for k, v in got.items()} == expected
+        assert len(expected) == 40 * m
+        assert 3 not in expected.values() and 2 in expected.values()
+        # keep threading carries sv_micro through unchanged
+        assert {k: v[1] for k, v in got.items()} == base
 
-    def test_assign_nearest_arrow_matches_hof_twin(self, spark):
-        """r15 mapInArrow experiment: the vectorized nearest-centroid
-        assignment must be BIT-identical to the HOF fold — ties (a
-        vector equidistant to two centroids takes the smaller cent_id),
-        zero-norm vectors (every sim −2.0 → smallest cent_id), and the
-        exact quantize/dot/divide arithmetic."""
+    def test_pq_encode_missing_sub_raises_named_error(self, emb):
+        """A subvector whose sub has no codebook is one named ValueError
+        (not a raw KeyError from the kernel's codebook lookup)."""
+        c = emb.filter("vec_id >= 3")
+        cb = similarity.pq_train(c, m=8, ksub=4, iters=0)
+        with pytest.raises(Exception, match="no codebook for sub 5"):
+            similarity.pq_encode(c, cb.filter("sub != 5"), m=8).collect()
+
+    def test_assign_nearest_matches_python_reference(self, spark):
+        """ivf_assign_cells must equal the pure-Python reference (exact
+        int dots, the fixed IEEE finish, first max over cent_id-sorted
+        centroids) — ties (a vector equidistant to two centroids takes
+        the smaller cent_id), zero-norm and sub-micro vectors (every sim
+        −2.0 → smallest cent_id), NULL vectors and NULL components (same
+        landing), and an empty centroid frame (no rows)."""
         import random as _random
-
-        from datalake_spark.operators.similarity import (
-            _assign_nearest, _assign_nearest_arrow, _pack_centroids,
-        )
 
         rng = _random.Random(11)
         dim = 12
@@ -1491,58 +1556,79 @@ class TestPq:
         ]
         vecs[5] = [0.0] * dim            # zero norm -> smallest cent_id
         vecs[6] = [1e-8] * dim           # sub-micro -> quantizes to 0
-        cent_vecs = [vecs[0], vecs[1], vecs[2], list(vecs[2])]
-        # duplicate centroid vectors (ids 2,3) force an exact sim tie
+        vecs[7] = None                   # NULL vector
+        # NULL component in a copy of centroid 4's vector: still lands
+        # on the smallest cent_id, never on 4
+        vecs[8] = vecs[1][:5] + [None] + vecs[1][6:]
+        cent_vecs = {3: vecs[0], 4: vecs[1], 8: vecs[2], 9: list(vecs[2])}
+        # duplicate centroid vectors (ids 8, 9) force an exact sim tie
         cents = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(cent_vecs)],
+            list(cent_vecs.items()), "cent_id long, cent_vec array<double>"
+        )
+        df = spark.createDataFrame(
+            list(enumerate(vecs)), "vec_id long, embedding array<double>"
+        )
+        got = {
+            r["c_id"]: r["cent_id"]
+            for r in similarity.ivf_assign_cells(df, cents).collect()
+        }
+        assert got == {
+            i: _ref_nearest(v, cent_vecs) for i, v in enumerate(vecs)
+        }
+        assert 9 not in got.values() and 8 in got.values()
+        assert got[5] == got[6] == got[7] == got[8] == 3
+        empty = cents.filter("cent_id < 0")
+        assert similarity.ivf_assign_cells(df, empty).collect() == []
+
+    def test_assign_cells_keeps_string_cent_id_type(self, spark):
+        """cent_id keeps the centroid frame's own type: an index built on
+        string vec_ids assigns string cells."""
+        from pyspark.sql import types as T
+
+        vecs = {f"v{i:02d}": [math.cos(i), math.sin(i), 0.5 * i, 1.0]
+                for i in range(20)}
+        df = spark.createDataFrame(
+            list(vecs.items()), "vec_id string, embedding array<double>"
+        )
+        cents, _ = similarity.ivf_index_build(df, num_centroids=4)
+        out = similarity.ivf_assign_cells(df, cents)
+        assert out.schema["cent_id"].dataType == T.StringType()
+        cent_vecs = {r["cent_id"]: r["cent_vec"] for r in cents.collect()}
+        assert {r["c_id"]: r["cent_id"] for r in out.collect()} == {
+            k: _ref_nearest(v, cent_vecs) for k, v in vecs.items()
+        }
+
+    def test_assign_cells_dim_mismatch_raises_named_error(self, spark):
+        """A vector whose width differs from the centroids' is one named
+        ValueError from the assignment kernel."""
+        cents = spark.createDataFrame(
+            [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])],
             "cent_id long, cent_vec array<double>",
         )
         df = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(vecs)],
-            "c_id long, c_vec array<double>",
+            [(0, [1.0, 0.0, 0.0]), (1, [1.0, 0.0])],
+            "vec_id long, embedding array<double>",
         )
+        with pytest.raises(Exception, match="embedding dim mismatch"):
+            similarity.ivf_assign_cells(df, cents).collect()
 
-        def rows(out):
-            return sorted(
-                (r["c_id"], r["cent_id"]) for r in out.collect()
-            )
-
-        hof = rows(_assign_nearest(df, "c_vec", _pack_centroids(cents)))
-        arrow = rows(_assign_nearest_arrow(df, "c_vec", cents))
-        assert hof == arrow and len(hof) == 50
-        # the duplicated-centroid tie resolves to cent_id 2, never 3
-        assert not any(cid == 3 for _, cid in arrow)
-        # empty centroid frame: both paths assign nothing
-        empty = cents.filter("cent_id < 0")
-        assert rows(_assign_nearest_arrow(df, "c_vec", empty)) == []
-        assert rows(
-            _assign_nearest(df, "c_vec", _pack_centroids(empty))
-        ) == []
-
-    def test_residual_seed_codebooks_driver_matches_cluster_path(
-        self, emb, monkeypatch
-    ):
-        """r15 single-collect RESIDUAL seed path: pq_train(iters=0) with a
-        cell COLUMN + centroids must produce value-identical codebooks
-        whether the residual seeds are built driver-side (default) or by
-        the cluster expression path (SPARK_GRAFT_NO_MATERIALIZE=1)."""
+    def test_residual_seed_codebooks_match_column_reference(self, emb):
+        """pq_train(iters=0) with a cell column + centroids builds its
+        RESIDUAL seed codebooks driver-side; they must equal the residual
+        seeds rebuilt from the Column quantizer."""
         c = emb.filter("vec_id >= 3")
         cents, assign = similarity.ivf_index_build(c, num_centroids=4)
-
-        def rows(cb):
-            return sorted(
-                (r["sub"], r["code"], tuple(r["cb_micro"]))
-                for r in cb.collect()
-            )
-
-        kw = dict(
-            m=16, ksub=8, iters=0, id_col="c_id", vec_col="c_vec",
-            cells="cent_id", centroids=cents,
+        got = sorted(
+            (r["sub"], r["code"], tuple(r["cb_micro"]))
+            for r in similarity.pq_train(
+                assign, m=16, ksub=8, iters=0, id_col="c_id",
+                vec_col="c_vec", cells="cent_id", centroids=cents,
+            ).collect()
         )
-        driver = rows(similarity.pq_train(assign, **kw))
-        monkeypatch.setenv("SPARK_GRAFT_NO_MATERIALIZE", "1")
-        cluster = rows(similarity.pq_train(assign, **kw))
-        assert driver == cluster and driver
+        assert got and got == _column_seed_codebooks(
+            assign, "c_id", "c_vec", m=16, ksub=8,
+            cell_col="cent_id", cents=cents,
+        )
 
     def test_parquet_roundtrip_matches_one_call(self, spark, emb, tmp_path):
         queries = emb.filter("vec_id < 3")
@@ -1725,32 +1811,20 @@ class TestIvfPqResidual:
         """Replay quantize → cells → residuals → coreset+Lloyd → encode →
         probe → ADC with plain-python integers (floats only where the
         operators use fixed IEEE ops: norms and cosines)."""
-        import math
-
         m, ksub, nc, nprobe, k, nq = (
             self.M, self.KSUB, self.NC, self.NPROBE, self.K, self.NQ)
 
-        def qmicro(v):
-            return [math.floor(x * 1_000_000 + 0.5) for x in v]
-
         def qunit(v):
-            qa = qmicro(v)
+            qa = _ref_qmicro(v)
             nsq = sum(x * x for x in qa)
             nrm = math.sqrt(float(nsq)) if nsq > 0 else 1.0
             return [math.floor(x / nrm * 1_000_000 + 0.5) for x in qa]
-
-        def cos(a, b):
-            qa, qb = qmicro(a), qmicro(b)
-            d = sum(x * y for x, y in zip(qa, qb))
-            den = math.sqrt(float(sum(x * x for x in qa))) * math.sqrt(
-                float(sum(x * x for x in qb)))
-            return d / den if den > 0 else -2.0
 
         ids = sorted(vecs)
         qids, cids = ids[:nq], ids[nq:]
         cents = {cid: vecs[cid] for cid in cids[:nc]}
         cell = {
-            c: max(cents, key=lambda ct: (cos(vecs[c], cents[ct]), -ct))
+            c: max(cents, key=lambda ct: (_ref_cosine(vecs[c], cents[ct]), -ct))
             for c in cids
         }
         cm = {ct: qunit(v) for ct, v in cents.items()}
@@ -1803,7 +1877,7 @@ class TestIvfPqResidual:
         out = {}
         for qid in qids:
             probes = sorted(
-                cents, key=lambda ct: (-cos(vecs[qid], cents[ct]), ct)
+                cents, key=lambda ct: (-_ref_cosine(vecs[qid], cents[ct]), ct)
             )[:nprobe]
             scored = []
             for c in cids:

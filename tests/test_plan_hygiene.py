@@ -15,6 +15,8 @@ Planning is analysis-only (no execution), so the sweep stays cheap while
 pinning every future query added to the surface.
 """
 
+import os
+import pathlib
 import re
 
 import pytest
@@ -407,3 +409,41 @@ def test_surface_is_fully_registered(spark):
             assert sub.q.build is not None and sub.q.oracle, (
                 battery, sub.q.name,
             )
+
+
+def test_env_knob_inventory():
+    """The package reads only deployment settings from the environment —
+    SPARK_GRAFT_CPUS and SPARK_GRAFT_DRIVER_MEM.  No env switch picks
+    between two implementations of one operation."""
+    import datalake_spark
+
+    root = pathlib.Path(datalake_spark.__file__).parent
+    names = set()
+    for path in root.rglob("*.py"):
+        names |= set(re.findall(r"SPARK_GRAFT_\w+", path.read_text()))
+    assert names == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
+
+
+def test_spread_floor_declines_on_any_arrow_error(spark, tmp_path,
+                                                  monkeypatch):
+    """A footer read failing with any Arrow error (ArrowTypeError is a
+    TypeError, not a ValueError) means "no spread", and that answer is
+    not memoized, so a transient failure does not stick to the path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datalake_spark import queries
+
+    path = str(tmp_path / "t")
+    os.makedirs(path)
+    pq.write_table(pa.table({"x": list(range(10))}),
+                   os.path.join(path, "part-0.parquet"))
+    calls = []
+
+    def failing_footer(*a, **k):
+        calls.append(a)
+        raise pa.ArrowTypeError("unreadable footer")
+
+    monkeypatch.setattr(pq, "ParquetFile", failing_footer)
+    assert queries._spread_partitions(spark, path) is None
+    assert calls and path not in queries._SPREAD_MEMO

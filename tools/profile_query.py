@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import json
 import os
+import shlex
 import sys
 import time
 
@@ -52,47 +53,17 @@ def main() -> None:
             i += 1
 
     os.makedirs(EVDIR, exist_ok=True)
-    os.environ.setdefault("SPARK_GRAFT_EVENTLOG", "1")
+    # the event log must be on before the JVM starts
+    os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join([
+        "--conf", "spark.eventLog.enabled=true",
+        "--conf", f"spark.eventLog.dir=file:{EVDIR}",
+        "--conf", "spark.eventLog.compress=false",
+        "--conf", "spark.eventLog.rolling.enabled=false",
+        "pyspark-shell",
+    ])
+    from datalake_spark.session import get_spark
 
-    from pyspark.sql import SparkSession
-
-    builder_conf = {
-        "spark.eventLog.enabled": "true",
-        "spark.eventLog.dir": f"file:{EVDIR}",
-        "spark.eventLog.compress": "false",
-        "spark.eventLog.rolling.enabled": "false",
-    }
-    # mirror datalake_spark.session.get_spark but with the event log on
-    from datalake_spark import session as sess_mod
-
-    orig = sess_mod.get_spark
-
-    def get_spark_ev(app_name="profile", master=None):
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        b = (
-            SparkSession.builder.appName(app_name)
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.shuffle.partitions", cpus)
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-            .config("spark.sql.adaptive.skewJoin.enabled", "true")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.parquet.filterPushdown", "true")
-            .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-            .config("spark.ui.showConsoleProgress", "false")
-            .config("spark.ui.enabled", "false")
-            .master(f"local[{cpus}]")
-            .config("spark.driver.memory",
-                    os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        )
-        for k, v in builder_conf.items():
-            b = b.config(k, v)
-        sp = b.getOrCreate()
-        sp.sparkContext.setLogLevel("WARN")
-        return sp
-
-    sess_mod.get_spark = get_spark_ev
-    spark = get_spark_ev("profile")
+    spark = get_spark("profile")
 
     from datalake_spark.queries import registry, load
     from datalake_spark.queries.batteries import BATTERY_SUBS
@@ -246,8 +217,6 @@ def main() -> None:
             print(f"  job {jid}: {jdur:.2f}s (+{sched_gap:.2f}s gap before)")
             for s in srows:
                 print(s)
-
-    sess_mod.get_spark = orig
 
 
 if __name__ == "__main__":
