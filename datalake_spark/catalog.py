@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 
@@ -192,6 +193,20 @@ def _new_version_dir(version: int) -> str:
     return f"v{version:08d}-{uuid.uuid4().hex[:8]}"
 
 
+# a version directory's name: ``v{version:08d}-{tag}`` (the tag is a
+# uuid fragment); any other entry under a table root (``_commits``,
+# ``.stage-*`` staging, a legacy ``what=`` partition) is not a version
+_VERSION_DIR = re.compile(r"v(\d+)-[0-9a-z]+")
+
+
+def _dir_version(name: str) -> int | None:
+    """The version number of version directory ``name``, or None when
+    ``name`` is not a version directory — the one parse of these names
+    shared by commit-time GC, ``gc_orphans`` and ``fsck``."""
+    m = _VERSION_DIR.fullmatch(name)
+    return int(m.group(1)) if m else None
+
+
 def _is_retryable_commit_race(
     e: Exception,
     store: ObjectStore | None = None,
@@ -226,18 +241,59 @@ def _is_retryable_commit_race(
     return now != (started_version or 0)
 
 
+def _resolve(store: ObjectStore, table_key: str,
+             seen: list[tuple[str, int]]) -> dict | None:
+    """Read ``table_key``'s manifest inside a commit attempt and record
+    the version resolved in ``seen`` (0 = no table yet), so
+    :func:`_retry_commit` can tell a GC race on it from a real error."""
+    m = _read_manifest(store, table_key)
+    seen.append((table_key, m["version"] if m else 0))
+    return m
+
+
+def _retry_commit(store: ObjectStore, op: str, tries: int, attempt):
+    """The optimistic-commit loop every versioned table runs: call
+    ``attempt(seen)`` until it returns, and return its result.
+
+    An attempt resolves its manifests through :func:`_resolve` (which
+    records each ``(table_key, version)`` in ``seen``), computes against
+    them and commits.  A :class:`CommitConflict` — another writer took
+    the version — retries with a fresh ``seen``, re-resolving the
+    winner's state.  So does any other failure that
+    :func:`_is_retryable_commit_race` confirms against a recorded pair:
+    a concurrent committer's GC removed what this attempt was reading or
+    writing.  Anything else raises at once.  After ``tries`` attempts
+    the loop gives up with a named :class:`CommitConflict`.  The loop
+    itself adds no store call while attempts succeed."""
+    for _ in range(tries):
+        seen: list[tuple[str, int]] = []
+        try:
+            return attempt(seen)
+        except CommitConflict:
+            continue
+        except Exception as e:
+            if any(
+                _is_retryable_commit_race(e, store, key, version)
+                for key, version in seen
+            ):
+                continue
+            raise
+    raise CommitConflict(f"{op}: conflicted on {tries} consecutive attempts")
+
+
 def _gc_versions(
     store: ObjectStore,
     table_key: str,
     keep_dirs: set[str],
-    committed_version: int | None = None,
-) -> None:
+    committed_version: int,
+) -> list[str]:
     """Delete version directories not in ``keep_dirs`` (deletes only —
-    safe and non-atomic-OK on object stores; runs strictly after commit).
+    safe and non-atomic-OK on object stores; runs strictly after commit)
+    and return the names deleted, sorted.
 
     Lockless-concurrency guard: version directories are named
     ``v{version:08d}-{uuid}``, and a committer's GC must never touch a
-    directory numbered BEYOND its own ``committed_version`` — that
+    directory numbered at or BEYOND its own ``committed_version`` — that
     directory belongs to a racing later committer (possibly already
     flipped, possibly a marker-won dead winner awaiting roll-forward)
     OR a same-version loser still mid-write (its Spark job races our
@@ -247,21 +303,23 @@ def _gc_versions(
     v(N+1) data — or yank B's identically-numbered in-flight directory
     out from under its write tasks — both observed in the two-thread
     race tests.  Strictly-older dirs not in ``keep_dirs`` are true
-    orphans (superseded history, stale loser attempts) and go.
+    orphans (superseded history, stale loser attempts) and go.  Entries
+    that are not version directories (see :func:`_dir_version`) are
+    never touched.
 
     LIST cost is O(version directories), not O(table objects): the
     candidates come from one shallow ``subdirs`` resolution, and only
     the dirs actually being reclaimed get a recursive LIST — a
     maintenance commit on a table with millions of retained data
     objects never enumerates them."""
+    gone = []
     for top in store.subdirs(table_key):
-        if not top.startswith("v") or top in keep_dirs:
+        v = _dir_version(top)
+        if v is None or v >= committed_version or top in keep_dirs:
             continue
-        if committed_version is not None:
-            vpart = top[1:].split("-", 1)[0]
-            if vpart.isdigit() and int(vpart) >= committed_version:
-                continue  # a racing committer's (possibly live) directory
         store.delete_prefix(join_key(table_key, top))
+        gone.append(top)
+    return sorted(gone)
 
 
 def _version_dir_state(store: ObjectStore, vkey: str) -> str:
@@ -588,77 +646,59 @@ class Catalog:
         landing between "read base" and "write merged" always collides
         on the base.version+1 marker — there is no window where a stale
         base can commit over an intervening batch."""
-        for _attempt in range(12):
-            cols = [f.name for f in FILES_SCHEMA.fields]
-            base = _read_manifest(self.store, self.LATEST_KEY)
-            # only the full-recompute branch scans the FILES table; its
-            # manifest is read there (and only there) so the hot
-            # incremental-merge path — the per-micro-batch streaming
-            # delegate — pays no extra control-plane GET per attempt
-            files_ver: int | None = None
-            try:
-                existing = (
-                    self._latest_snapshot(base) if new_rows is not None else None
+        cols = [f.name for f in FILES_SCHEMA.fields]
+
+        def attempt(seen: list) -> None:
+            base = _resolve(self.store, self.LATEST_KEY, seen)
+            existing = (
+                self._latest_snapshot(base) if new_rows is not None else None
+            )
+            if existing is not None:
+                src = existing.select(*cols).unionByName(
+                    new_rows.select(*cols)
                 )
-                if existing is not None:
-                    src = existing.select(*cols).unionByName(
-                        new_rows.select(*cols)
-                    )
-                elif new_rows is not None and not self.store.exists_prefix(
-                    self._files_key()
-                ):
-                    # first merge on a catalog with no files table yet
-                    # (streaming writers merge latest before/independently
-                    # of the files append)
-                    src = new_rows.select(*cols)
-                else:
-                    # full recompute: resolve the FILES manifest ONCE and
-                    # scan the exact directory it names — the version the
-                    # retry classifier compares against is then the
-                    # version actually scanned, by construction (a
-                    # concurrent compact's GC of it is a retryable race)
-                    files_m = _read_manifest(self.store, self.FILES_KEY)
-                    files_ver = files_m["version"] if files_m else 0
-                    src = self._files_snapshot(files_m)
-                latest = (
-                    src.groupBy("what", "where")
-                    .agg(
-                        F.max_by(
-                            F.struct(*cols),
-                            # id as the final tiebreak mirrors QueryEngine.
-                            # _latest_rank: (start, create_time) CAN tie across
-                            # distinct records, and the reference's newer-write
-                            # rule has no batch analog — the unique id keeps the
-                            # merge deterministic under any partitioning
-                            F.struct(
-                                F.col("start"), F.col("create_time"), F.col("id")
-                            ),
-                        ).alias("r")
-                    )
-                    .select(
-                        F.concat_ws(":", F.col("what"), F.col("where")).alias("what_where_key"),
-                        F.col("r.*"),
-                    )
+            elif new_rows is not None and not self.store.exists_prefix(
+                self._files_key()
+            ):
+                # first merge on a catalog with no files table yet
+                # (streaming writers merge latest before/independently
+                # of the files append)
+                src = new_rows.select(*cols)
+            else:
+                # full recompute: resolve the FILES manifest ONCE and
+                # scan the exact directory it names — the version the
+                # retry classifier compares against is then the version
+                # actually scanned, by construction (a concurrent
+                # compact's GC of it is a retryable race).  Only this
+                # branch reads it, so the hot incremental-merge path —
+                # the per-micro-batch streaming delegate — pays no extra
+                # control-plane GET per attempt
+                src = self._files_snapshot(
+                    _resolve(self.store, self.FILES_KEY, seen)
                 )
-                self.write_latest(latest, base=base)
-                return
-            except CommitConflict:
-                continue  # re-read the winner's table and re-merge
-            except Exception as e:
-                if _is_retryable_commit_race(
-                    e, self.store, self.LATEST_KEY,
-                    base["version"] if base else 0,
-                ) or (
-                    files_ver is not None
-                    and _is_retryable_commit_race(
-                        e, self.store, self.FILES_KEY, files_ver
-                    )
-                ):
-                    continue
-                raise
-        raise RuntimeError(
-            "refresh_latest: commit conflicted on 12 consecutive attempts"
-        )
+            latest = (
+                src.groupBy("what", "where")
+                .agg(
+                    F.max_by(
+                        F.struct(*cols),
+                        # id as the final tiebreak mirrors QueryEngine.
+                        # _latest_rank: (start, create_time) CAN tie across
+                        # distinct records, and the reference's newer-write
+                        # rule has no batch analog — the unique id keeps the
+                        # merge deterministic under any partitioning
+                        F.struct(
+                            F.col("start"), F.col("create_time"), F.col("id")
+                        ),
+                    ).alias("r")
+                )
+                .select(
+                    F.concat_ws(":", F.col("what"), F.col("where")).alias("what_where_key"),
+                    F.col("r.*"),
+                )
+            )
+            self.write_latest(latest, base=base)
+
+        _retry_commit(self.store, "refresh_latest", 12, attempt)
 
     def _files_snapshot(self, m: dict | None) -> DataFrame:
         """The files table at FILES manifest ``m`` (already read by the
@@ -807,8 +847,10 @@ class Catalog:
         duplicates with scan-captured rows are tolerated by the
         query-path id-dedup, as everywhere."""
         cols = [f.name for f in FILES_SCHEMA.fields]
-        for _attempt in range(12):
-            m = _read_manifest(self.store, self.INDEX_KEY)
+
+        def attempt(seen: list) -> None:
+            nonlocal _race_hook
+            m = _resolve(self.store, self.INDEX_KEY, seen)
             version = (m["version"] + 1) if m else 1
             dirname = _new_version_dir(version)
             new_key = join_key(self.INDEX_KEY, dirname)
@@ -825,56 +867,42 @@ class Catalog:
             known = set(self.store.list(old_key)) if old_key else set()
             # one FILES manifest read serves both the scan path and the
             # race classifier — scanned version == recorded version by
-            # construction (self.files() would re-resolve it)
-            files_m = _read_manifest(self.store, self.FILES_KEY)
+            # construction (self.files() would re-resolve it); the scan
+            # reads the FILES table, so a concurrent compact's GC there
+            # is as retryable as an index-version race
             src = (
-                self._files_snapshot(files_m).select(*cols)
+                self._files_snapshot(_resolve(self.store, self.FILES_KEY, seen))
+                .select(*cols)
                 .filter(F.col("work_id").isNotNull())
             )
-            try:
-                (
-                    src.withColumn(
-                        "wid_bucket",
-                        self._wid_bucket(F.col("work_id"), num_buckets),
-                    )
-                    .repartition(F.col("wid_bucket"))
-                    .write.partitionBy("wid_bucket")
-                    .parquet(self.store.spark_url(new_key))
+            (
+                src.withColumn(
+                    "wid_bucket",
+                    self._wid_bucket(F.col("work_id"), num_buckets),
                 )
-                if _race_hook is not None:
-                    hook, _race_hook = _race_hook, None
-                    hook()  # test-only: a racing append post-scan
-                if old_key:
-                    known = self._sweep_index_stragglers(
-                        old_key, new_key, known, num_buckets
-                    )
-                manifest = _commit_version(
-                    self.store, self.INDEX_KEY, version, dirname, m,
-                    self.keep_versions, extra={"num_buckets": num_buckets},
+                .repartition(F.col("wid_bucket"))
+                .write.partitionBy("wid_bucket")
+                .parquet(self.store.spark_url(new_key))
+            )
+            if _race_hook is not None:
+                hook, _race_hook = _race_hook, None
+                hook()  # test-only: a racing append post-scan
+            if old_key:
+                known = self._sweep_index_stragglers(
+                    old_key, new_key, known, num_buckets
                 )
-                if old_key:
-                    self._sweep_index_stragglers(
-                        old_key, new_key, known, num_buckets
-                    )
-            except CommitConflict:
-                continue  # concurrent rebuild won this version; retry
-            except Exception as e:
-                # the scan reads the FILES table: a concurrent compact's
-                # GC there is as retryable as an index-version race
-                if _is_retryable_commit_race(
-                    e, self.store, self.INDEX_KEY, m["version"] if m else 0
-                ) or _is_retryable_commit_race(
-                    e, self.store, self.FILES_KEY,
-                    files_m["version"] if files_m else 0,
-                ):
-                    continue
-                raise
+            manifest = _commit_version(
+                self.store, self.INDEX_KEY, version, dirname, m,
+                self.keep_versions, extra={"num_buckets": num_buckets},
+            )
+            if old_key:
+                self._sweep_index_stragglers(
+                    old_key, new_key, known, num_buckets
+                )
             keep = {dirname} | {h["dir"] for h in manifest["history"]}
             _gc_versions(self.store, self.INDEX_KEY, keep, version)
-            return
-        raise RuntimeError(
-            "build_work_id_index: commit conflicted on 12 consecutive attempts"
-        )
+
+        _retry_commit(self.store, "build_work_id_index", 12, attempt)
 
     def _sweep_index_stragglers(
         self, old_key: str, new_key: str, known: set[str], num_buckets: int
@@ -1052,10 +1080,11 @@ class Catalog:
         CONCURRENTLY that happens to match the predicate survives (the
         straggler sweeps copy raced-in files verbatim) — deletion is a
         point-in-time operation, not a standing filter; re-run it for
-        late arrivals.  Note the previous table version remains readable
-        via files_at() until the retention window rolls it out — run a
-        second compact() (or set keep_versions=1) when the deletion must
-        also purge history.
+        late arrivals.  Note the deleted rows stay on disk in the
+        previous table version — readable via files_at() until the
+        retention window rolls it out, and kept by compact for in-flight
+        readers even with keep_versions=1 — so run a second compact()
+        when the deletion must also purge history.
         """
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         self.compact(target_file_rows=target_file_rows, _drop_where=pred)
@@ -1366,16 +1395,9 @@ class Catalog:
             if m is None:
                 continue
             referenced = {m["dir"]} | {h["dir"] for h in m.get("history", [])}
-            victims = sorted(
-                d for d in self.store.subdirs(table_key)
-                if d.startswith("v") and d not in referenced
-                and d[1:].split("-", 1)[0].isdigit()
-                and int(d[1:].split("-", 1)[0]) < m["version"]
-            )
-            for d in victims:
-                self.store.delete_prefix(join_key(table_key, d))
-            if victims:
-                out[table_key] = victims
+            gone = _gc_versions(self.store, table_key, referenced, m["version"])
+            if gone:
+                out[table_key] = gone
         return out
 
     def fsck(self, deep: bool = True) -> dict:
@@ -1419,7 +1441,7 @@ class Catalog:
             }
             orphans = sorted(
                 d for d in top_dirs
-                if d.startswith("v") and d not in referenced
+                if _dir_version(d) is not None and d not in referenced
             )
             if orphans:
                 report["info"][f"{name}_orphan_dirs"] = orphans

@@ -31,12 +31,6 @@ def blake2b_udf(content: pd.Series) -> pd.Series:
     return content.map(h)
 
 
-def hash64(col: Column | str, seed: int = 42) -> Column:
-    """Deterministic 64-bit hash (JVM xxhash64)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.xxhash64(c, F.lit(seed))
-
-
 def md5hash60(col: Column | str) -> Column:
     """Cross-engine 60-bit hash of a string: first 15 hex chars of md5 as a
     bigint.  Unlike xxhash64 this is reproducible in DuckDB

@@ -23,14 +23,6 @@ def tokenize(text: Column | str) -> Column:
     return F.split(F.trim(c), r"\s+")
 
 
-def bpe_ish_tokens(text: Column | str) -> Column:
-    """BPE-ish sub-word token count proxy: splits on whitespace AND
-    punctuation/digit boundaries, the regex families BPE pre-tokenizers use."""
-    c = F.col(text) if isinstance(text, str) else text
-    pieces = F.split(c, r"\s+|(?<=[a-z])(?=[A-Z0-9])|(?<=[0-9])(?=[a-zA-Z])|(?=[^\w\s])")
-    return F.filter(pieces, lambda x: x != "")
-
-
 def token_count(text: Column | str) -> Column:
     return F.size(tokenize(text)).cast("bigint")
 
@@ -39,12 +31,6 @@ def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Co
     toks = tokenize(text)
     stops = stopwords or _LANG_STOPWORDS["en"]
     return F.size(F.filter(toks, lambda x: x.isin(*stops))).cast("double") / F.size(toks)
-
-
-def punct_ratio(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    n_punct = F.length(F.regexp_replace(c, r"[^\p{Punct}]", ""))
-    return n_punct.cast("double") / F.greatest(F.length(c), F.lit(1))
 
 
 def quality_score(text: Column | str) -> Column:

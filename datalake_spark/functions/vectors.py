@@ -77,25 +77,6 @@ def normalize(a: Column | str) -> Column:
     return F.transform(_c(a), lambda x: x.cast("double") / n)
 
 
-def hyperplane_signature(a: Column | str, planes: list[list[float]]) -> Column:
-    """Random-hyperplane (SRP) LSH signature: one bit per plane, packed into a
-    bigint.  ``planes`` is a driver-side list of unit vectors (deterministic
-    seed); the expression is pure codegen — the map stage of cosine LSH."""
-    bits = []
-    for j, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(v)) for v in p])
-        d = F.aggregate(
-            F.zip_with(_c(a), plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(d >= 0, F.lit(1).cast("bigint")).otherwise(F.lit(0)) * F.lit(2**j).cast("bigint"))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
 def quantize_micro_unit(a: Column | str) -> Column:
     """array<long>: micro-quantized components of the UNIT-normalized
     vector — floor(q_i / ||q|| * 1e6 + 0.5) where q_i = floor(x_i*1e6+0.5)

@@ -12,7 +12,6 @@ object storage, only metadata enters the engine (the reference's own
 from __future__ import annotations
 
 import os
-import uuid
 from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -165,6 +164,3 @@ def hash_content(df: DataFrame, content_col: str = "content") -> DataFrame:
     variant of push-time hash inference."""
     return df.withColumn("hash", blake2b_udf(F.col(content_col)))
 
-
-def new_id() -> str:
-    return uuid.uuid4().hex

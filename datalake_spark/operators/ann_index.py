@@ -42,7 +42,8 @@ conditional-put discipline, ingester/datalake_ingester/storage.py:64-137):
   new model (the contract ``append`` already implements).  This is the
   missing lifecycle verb: ``build`` refuses an existing root and
   ``append`` never retrains (epoch comparability), so without rebuild a
-  long-lived index could never re-fit drifted codebooks.
+  long-lived index could never re-fit drifted codebooks.  Each
+  rebuild GCs the root down to the current and previous version dirs.
 
 Readers never lock; concurrent appenders serialize on the version
 marker (losers re-resolve the manifest and retry, re-encoding if a
@@ -64,15 +65,19 @@ never touches a raw vector.
 from __future__ import annotations
 
 import os
+import uuid
+from dataclasses import asdict, dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datalake_spark.catalog import (
-    CommitConflict,
     _commit_version,
+    _gc_versions,
     _new_version_dir,
     _read_manifest,
+    _resolve,
+    _retry_commit,
 )
 from datalake_spark.operators.similarity import (
     ivf_assign_cells,
@@ -100,6 +105,47 @@ class EpochProvenanceConflict(Exception):
     finding).  Raising at the collision point makes the mixed-use
     hazard loud; the fix is operational (rebuild into a new lifetime,
     or append under an epoch number outside every stream's range)."""
+
+
+@dataclass
+class _Fields:
+    """The index fields a manifest version carries beside the commit
+    protocol's own (``version``, ``dir``, ``history``): the committed
+    epochs, the model geometry and ids layout, and the lineage — the
+    index lifetime id, the per-epoch writer provenance map and the
+    registered-streams map.  A commit writes ``asdict`` of one of these,
+    so the fields keep the manifest's key order."""
+
+    epochs: list
+    m: int
+    ksub: int
+    num_centroids: int
+    residual: bool
+    ids_buckets: int
+    index_id: str | None
+    epoch_src: dict
+    streams: dict
+
+    @classmethod
+    def of(cls, manifest: dict) -> "_Fields":
+        """The fields of a committed ``manifest`` — the one place their
+        names and legacy defaults are spelled.  Every successor version
+        starts from this and ``replace``s what it changes, so no commit
+        site can drop an inherited field.  Legacy manifests lack
+        ``residual`` and ``ids_buckets`` (pre-bucketing: the ids tree is
+        flat) and the lineage; the defaults keep those indexes
+        serveable."""
+        return cls(
+            epochs=[int(e) for e in manifest["epochs"]],
+            m=int(manifest["m"]),
+            ksub=int(manifest["ksub"]),
+            num_centroids=int(manifest["num_centroids"]),
+            residual=bool(manifest.get("residual", False)),
+            ids_buckets=int(manifest.get("ids_buckets", 0)),
+            index_id=manifest.get("index_id"),
+            epoch_src=dict(manifest.get("epoch_src", {})),
+            streams=dict(manifest.get("streams", {})),
+        )
 
 
 class IvfPqIndex:
@@ -165,19 +211,21 @@ class IvfPqIndex:
         None when the index has never been built."""
         return _read_manifest(self.store, "")
 
-    @staticmethod
-    def _lineage(m: dict) -> dict:
-        """Manifest fields every successor version inherits verbatim:
-        the index lifetime id, the per-epoch writer provenance map, and
-        the registered-streams map.  Centralized so a new inheritable
-        field cannot be dropped by one of the three commit sites
-        (append / rebuild / register_stream).  Legacy manifests lack
-        all three — ``get`` defaults keep old indexes serveable."""
-        return {
-            "index_id": m.get("index_id"),
-            "epoch_src": dict(m.get("epoch_src", {})),
-            "streams": dict(m.get("streams", {})),
-        }
+    def _built(self, seen: list) -> dict:
+        """The committed manifest for one commit attempt (recorded in
+        ``seen``); raises :class:`IndexNotBuilt` when there is none."""
+        m = _resolve(self.store, "", seen)
+        if m is None:
+            raise IndexNotBuilt(self.store.url)
+        return m
+
+    def _commit(self, prev: dict | None, vdir: str, fields: _Fields) -> dict:
+        """Commit ``vdir`` with ``fields`` as the version after ``prev``
+        (None = the first version) through the marker CAS."""
+        return _commit_version(
+            self.store, "", prev["version"] + 1 if prev else 1, vdir,
+            prev=prev, extra=asdict(fields),
+        )
 
     def _read_model(self, m: dict) -> tuple[DataFrame, DataFrame]:
         vdir = m["dir"]
@@ -225,6 +273,12 @@ class IvfPqIndex:
             )
         return F.pmod(F.xxhash64(col.cast("string")), F.lit(nb))
 
+    def _write_codes(self, codes: DataFrame, vdir: str, epoch: int) -> None:
+        """Write one epoch's (c_id, sub, code) rows, partitioned by cell."""
+        codes.repartition("cent_id").write.mode("overwrite").partitionBy(
+            "cent_id"
+        ).parquet(self._url(vdir, self.CODES, f"epoch={epoch}"))
+
     def _write_ids(
         self, ids: DataFrame, vdir: str, epoch: int, nb: int
     ) -> None:
@@ -258,11 +312,12 @@ class IvfPqIndex:
         touched buckets instead of the whole corpus-ids column).
         Legacy indexes (no ``ids_buckets`` in the manifest) read the
         unpruned tree."""
+        f = _Fields.of(m)
         prior = (
             self.spark.read.parquet(self._url(m["dir"], self.IDS))
-            .filter(F.col("epoch").isin([int(e) for e in m["epochs"]]))
+            .filter(F.col("epoch").isin(f.epochs))
         )
-        nb = int(m.get("ids_buckets", 0))
+        nb = f.ids_buckets
         if nb > 0:
             touched = sorted(
                 r[0]
@@ -287,64 +342,57 @@ class IvfPqIndex:
         and should reopen the winner's index."""
         if self.manifest() is not None:
             raise IndexAlreadyBuilt(self.store.url)
+        fields = _Fields(
+            epochs=[0], m=self.m, ksub=self.ksub,
+            num_centroids=self.num_centroids, residual=self.residual,
+            ids_buckets=self.ids_buckets,
+            # lifetime identity + per-epoch writer provenance: a stream
+            # registration is bound to THIS index_id, and append refuses
+            # to treat a replay as idempotent when the epoch was
+            # committed by a different writer class
+            index_id=uuid.uuid4().hex, epoch_src={"0": "build"}, streams={},
+        )
         vdir = _new_version_dir(1)
+        self._train_and_write(candidates, vdir, fields, self.train_iters)
+        return self._commit(None, vdir, fields)
+
+    def _train_and_write(
+        self, corpus: DataFrame, vdir: str, f: _Fields, iters: int
+    ) -> None:
+        """Train the coarse centroids and the PQ codebooks on ``corpus``
+        (geometry from ``f``), encode it, and write centroids, codebooks,
+        codes and ids as epoch 0 of ``vdir`` — the body build and
+        rebuild share."""
         frames: list = []
         cents, assign = ivf_index_build(
-            candidates, self.num_centroids,
-            id_col=self.id_col, vec_col=self.vec_col,
+            corpus, f.num_centroids, id_col=self.id_col, vec_col=self.vec_col,
         )
         # assign carries (c_id, c_vec, cent_id) row-locally (r14): train
         # and encode read the cell tag off the row — no corpus-sized
         # cells join anywhere in the build
         cells = assign.select("c_id", "cent_id")
-        rcents = cents if self.residual else None
-        if self.residual:
+        rcents = cents if f.residual else None
+        if f.residual:
             cb = pq_train(
-                assign, m=self.m, ksub=self.ksub,
-                iters=self.train_iters, id_col="c_id", vec_col="c_vec",
-                frames_out=frames, cells="cent_id", centroids=rcents,
+                assign, m=f.m, ksub=f.ksub, iters=iters,
+                id_col="c_id", vec_col="c_vec", frames_out=frames,
+                cells="cent_id", centroids=rcents,
             )
         else:
             cb = pq_train(
-                candidates, m=self.m, ksub=self.ksub,
-                iters=self.train_iters,
-                id_col=self.id_col, vec_col=self.vec_col,
-                frames_out=frames,
+                corpus, m=f.m, ksub=f.ksub, iters=iters,
+                id_col=self.id_col, vec_col=self.vec_col, frames_out=frames,
             )
         codes = pq_encode(
-            assign, cb, m=self.m, id_col="c_id", vec_col="c_vec",
+            assign, cb, m=f.m, id_col="c_id", vec_col="c_vec",
             cells="cent_id", centroids=rcents,
         )
         cents.write.mode("overwrite").parquet(self._url(vdir, self.CENTS))
         cb.write.mode("overwrite").parquet(self._url(vdir, self.CB))
-        codes.repartition("cent_id").write.mode(
-            "overwrite"
-        ).partitionBy("cent_id").parquet(
-            self._url(vdir, self.CODES, "epoch=0")
-        )
-        self._write_ids(cells, vdir, 0, self.ids_buckets)
-        for f in frames:
-            f.unpersist()
-        import uuid
-
-        return _commit_version(
-            self.store, "", 1, vdir, prev=None,
-            extra={
-                "epochs": [0],
-                "m": self.m,
-                "ksub": self.ksub,
-                "num_centroids": self.num_centroids,
-                "residual": self.residual,
-                "ids_buckets": self.ids_buckets,
-                # lifetime identity + per-epoch writer provenance: a
-                # stream registration is bound to THIS index_id, and
-                # append refuses to treat a replay as idempotent when
-                # the epoch was committed by a different writer class
-                "index_id": uuid.uuid4().hex,
-                "epoch_src": {"0": "build"},
-                "streams": {},
-            },
-        )
+        self._write_codes(codes, vdir, 0)
+        self._write_ids(cells, vdir, 0, f.ids_buckets)
+        for frame in frames:
+            frame.unpersist()
 
     def append(
         self,
@@ -415,13 +463,11 @@ class IvfPqIndex:
     def _append(
         self, batch: DataFrame, epoch: int, _race_hook, provenance: str
     ) -> dict:
-        last: Exception | None = None
-        for _ in range(5):
-            m = self.manifest()
-            if m is None:
-                raise IndexNotBuilt(self.store.url)
-            if epoch in m["epochs"]:
-                src = m.get("epoch_src", {}).get(str(int(epoch)))
+        def attempt(seen: list) -> dict:
+            m = self._built(seen)
+            f = _Fields.of(m)
+            if epoch in f.epochs:
+                src = f.epoch_src.get(str(int(epoch)))
                 if src is not None and src != provenance:
                     raise EpochProvenanceConflict(
                         f"epoch {int(epoch)} of {self.store.url} is "
@@ -453,40 +499,24 @@ class IvfPqIndex:
                 keep_vec=True,
             )
             codes = pq_encode(
-                cells, cb, m=int(m["m"]),
+                cells, cb, m=f.m,
                 id_col="c_id", vec_col="c_vec", cells="cent_id",
                 # manifest, not constructor: appended codes must use the
                 # layout the index was BUILT with
-                centroids=cents if m.get("residual") else None,
+                centroids=cents if f.residual else None,
             )
-            codes.repartition("cent_id").write.mode(
-                "overwrite"
-            ).partitionBy("cent_id").parquet(
-                self._url(vdir, self.CODES, f"epoch={epoch}")
-            )
-            self._write_ids(
-                cells, vdir, epoch, int(m.get("ids_buckets", 0))
-            )
+            self._write_codes(codes, vdir, epoch)
+            self._write_ids(cells, vdir, epoch, f.ids_buckets)
             if _race_hook is not None:
                 _race_hook()
-            lineage = self._lineage(m)
-            lineage["epoch_src"][str(int(epoch))] = provenance
-            try:
-                return _commit_version(
-                    self.store, "", m["version"] + 1, vdir, prev=m,
-                    extra={
-                        "epochs": [int(e) for e in m["epochs"]] + [epoch],
-                        "m": m["m"],
-                        "ksub": m["ksub"],
-                        "num_centroids": m["num_centroids"],
-                        "residual": bool(m.get("residual", False)),
-                        "ids_buckets": int(m.get("ids_buckets", 0)),
-                        **lineage,
-                    },
-                )
-            except CommitConflict as e:
-                last = e  # re-resolve and retry
-        raise last  # type: ignore[misc]
+            return self._commit(m, vdir, replace(
+                f, epochs=f.epochs + [epoch],
+                epoch_src={**f.epoch_src, str(int(epoch)): provenance},
+            ))
+
+        # a lost CAS (a concurrent appender, or a rebuild that swapped
+        # the version dir) re-resolves and re-encodes
+        return _retry_commit(self.store, "IvfPqIndex.append", 5, attempt)
 
     def rebuild(
         self,
@@ -517,36 +547,43 @@ class IvfPqIndex:
         and re-encodes against the new model (``append`` already does).
         The committed ``epochs`` list carries over even though all
         codes land in the new version's ``epoch=0`` dirs, so replays of
-        folded epochs stay post-commit no-ops."""
+        folded epochs stay post-commit no-ops.  After the commit, GC
+        keeps the new and the previous version dirs (the catalog's
+        retention) and reclaims older ones and losing attempts'
+        orphans; an appender caught writing into a reclaimed dir
+        retries like one that lost the CAS."""
         source = source.select(
             F.col(self.id_col).alias(self.id_col),
             F.col(self.vec_col).alias(self.vec_col),
         )
-        last: Exception | None = None
-        for _ in range(5):
-            mfst = self.manifest()
-            if mfst is None:
-                raise IndexNotBuilt(self.store.url)
-            nc = int(num_centroids if num_centroids is not None
-                     else mfst["num_centroids"])
-            mm = int(m if m is not None else mfst["m"])
-            ks = int(ksub if ksub is not None else mfst["ksub"])
-            it = int(train_iters if train_iters is not None
-                     else self.train_iters)
-            res = bool(mfst.get("residual", False)
-                       if residual is None else residual)
-            # physical ids layout comes from the HANDLE, not the
-            # manifest: rebuild rewrites the whole ids tree anyway, so
-            # it is the one safe point to (up)grade a legacy flat
-            # layout to the bucketed one (mixed per-epoch layouts would
-            # break partition discovery, which is why append always
-            # follows the manifest)
-            nb = int(self.ids_buckets)
+        it = int(train_iters if train_iters is not None else self.train_iters)
+        tries = 0
+
+        def attempt(seen: list) -> dict:
+            nonlocal tries
+            tries += 1
+            mfst = self._built(seen)
+            cur = _Fields.of(mfst)
+            nxt = replace(
+                cur,
+                num_centroids=int(
+                    num_centroids if num_centroids is not None
+                    else cur.num_centroids
+                ),
+                m=int(m if m is not None else cur.m),
+                ksub=int(ksub if ksub is not None else cur.ksub),
+                residual=bool(cur.residual if residual is None else residual),
+                # physical ids layout comes from the HANDLE, not the
+                # manifest: rebuild rewrites the whole ids tree anyway, so
+                # it is the one safe point to (up)grade a legacy flat
+                # layout to the bucketed one (mixed per-epoch layouts
+                # would break partition discovery, which is why append
+                # always follows the manifest)
+                ids_buckets=int(self.ids_buckets),
+            )
             committed = (
                 self.spark.read.parquet(self._url(mfst["dir"], self.IDS))
-                .filter(
-                    F.col("epoch").isin([int(e) for e in mfst["epochs"]])
-                )
+                .filter(F.col("epoch").isin(cur.epochs))
                 .select("c_id")
             )
             corpus = source.join(
@@ -584,10 +621,10 @@ class IvfPqIndex:
                 race = (
                     " (NOTE: a concurrent append won the version race "
                     "during this rebuild — the committed corpus grew to "
-                    f"epochs {[int(e) for e in mfst['epochs']]}; "
+                    f"epochs {cur.epochs}; "
                     "re-supply a source covering the newly appended "
                     "vectors rather than suspecting the original one)"
-                    if last is not None else ""
+                    if tries > 1 else ""
                 )
                 raise ValueError(
                     f"rebuild source covers {n_ids} of "
@@ -601,60 +638,22 @@ class IvfPqIndex:
                     "index contract"
                 )
             vdir = _new_version_dir(mfst["version"] + 1)
-            frames: list = []
-            cents, assign = ivf_index_build(
-                corpus, nc, id_col=self.id_col, vec_col=self.vec_col
-            )
-            # row-local cell tag on the assignment (r14): train/encode
-            # read it off the row, no corpus-sized cells join
-            cells = assign.select("c_id", "cent_id")
-            rcents = cents if res else None
-            if res:
-                cb = pq_train(
-                    assign, m=mm, ksub=ks, iters=it,
-                    id_col="c_id", vec_col="c_vec", frames_out=frames,
-                    cells="cent_id", centroids=rcents,
-                )
-            else:
-                cb = pq_train(
-                    corpus, m=mm, ksub=ks, iters=it,
-                    id_col=self.id_col, vec_col=self.vec_col,
-                    frames_out=frames,
-                )
-            codes = pq_encode(
-                assign, cb, m=mm, id_col="c_id", vec_col="c_vec",
-                cells="cent_id", centroids=rcents,
-            )
-            cents.write.mode("overwrite").parquet(
-                self._url(vdir, self.CENTS)
-            )
-            cb.write.mode("overwrite").parquet(self._url(vdir, self.CB))
-            codes.repartition("cent_id").write.mode(
-                "overwrite"
-            ).partitionBy("cent_id").parquet(
-                self._url(vdir, self.CODES, "epoch=0")
-            )
-            self._write_ids(cells, vdir, 0, nb)
-            for f in frames:
-                f.unpersist()
+            self._train_and_write(corpus, vdir, nxt, it)
             if _race_hook is not None:
                 _race_hook()
-            try:
-                return _commit_version(
-                    self.store, "", mfst["version"] + 1, vdir, prev=mfst,
-                    extra={
-                        "epochs": [int(e) for e in mfst["epochs"]],
-                        "m": mm,
-                        "ksub": ks,
-                        "num_centroids": nc,
-                        "residual": res,
-                        "ids_buckets": nb,
-                        **self._lineage(mfst),
-                    },
-                )
-            except CommitConflict as e:
-                last = e  # an append won the version: retrain on it
-        raise last  # type: ignore[misc]
+            manifest = self._commit(mfst, vdir, nxt)
+            # reclaim superseded dirs and losing attempts' orphans; an
+            # appender still writing into one of them retries (its
+            # attempt recorded the version it resolved)
+            _gc_versions(
+                self.store, "",
+                {vdir} | {h["dir"] for h in manifest["history"]},
+                manifest["version"],
+            )
+            return manifest
+
+        # an append that won the version makes this attempt retrain on it
+        return _retry_commit(self.store, "IvfPqIndex.rebuild", 5, attempt)
 
     def search(
         self, queries: DataFrame, k: int = 10, nprobe: int = 4
@@ -665,17 +664,16 @@ class IvfPqIndex:
         m = self.manifest()
         if m is None:
             raise IndexNotBuilt(self.store.url)
-        vdir = m["dir"]
+        f = _Fields.of(m)
         cents, cb = self._read_model(m)
         codes = (
-            self.spark.read.parquet(self._url(vdir, self.CODES))
-            .filter(F.col("epoch").isin([int(e) for e in m["epochs"]]))
+            self.spark.read.parquet(self._url(m["dir"], self.CODES))
+            .filter(F.col("epoch").isin(f.epochs))
             .select("c_id", "sub", "code", "cent_id")
         )
         return ivfpq_search(
-            cents, cb, codes, queries, k=k, nprobe=nprobe, m=int(m["m"]),
-            id_col=self.id_col, vec_col=self.vec_col,
-            residual=bool(m.get("residual", False)),
+            cents, cb, codes, queries, k=k, nprobe=nprobe, m=f.m,
+            id_col=self.id_col, vec_col=self.vec_col, residual=f.residual,
         )
 
     # -- streaming maintenance -------------------------------------------
@@ -744,27 +742,23 @@ class IvfPqIndex:
         before its first batch (typo'd landing dir) must not burn the
         checkpoint forever."""
         ck = self._checkpoint_key(checkpoint_dir)
-        last: Exception | None = None
-        for _ in range(5):
-            m = self.manifest()
-            if m is None:
-                raise IndexNotBuilt(self.store.url)
-            streams = dict(m.get("streams", {}))
+        stride = int(self.STREAM_EPOCH_STRIDE)
+
+        def attempt(seen: list) -> tuple[str, int]:
+            m = self._built(seen)
+            f = _Fields.of(m)
             # legacy manifests (pre-normalization) may hold the raw
             # spelling — honor it so an existing binding keeps working
-            key = ck if ck in streams else (
+            key = ck if ck in f.streams else (
                 str(checkpoint_dir)
-                if str(checkpoint_dir) in streams else ck
+                if str(checkpoint_dir) in f.streams else ck
             )
-            ent = streams.get(key)
-            stride = int(self.STREAM_EPOCH_STRIDE)
+            ent = f.streams.get(key)
             if ent is not None:
                 sid, base = ent["stream_id"], int(ent["epoch_base"])
                 mine = f"stream:{sid}"
-                srcs = m.get("epoch_src", {})
-                used = any(v == mine for v in srcs.values())
                 if ent.get("landing_dir") != landing_dir:
-                    if used:
+                    if any(v == mine for v in f.epoch_src.values()):
                         raise ValueError(
                             f"checkpoint {key} is registered to landing "
                             f"dir {ent.get('landing_dir')!r}, not "
@@ -775,98 +769,67 @@ class IvfPqIndex:
                     # never-used binding (first start died before its
                     # first batch): rebind in place instead of burning
                     # the checkpoint dir on a typo'd landing dir
-                    lineage = self._lineage(m)
-                    lineage["streams"][key] = {
-                        **ent, "landing_dir": landing_dir,
-                    }
-                    try:
-                        _commit_version(
-                            self.store, "", m["version"] + 1, m["dir"],
-                            prev=m,
-                            extra={
-                                "epochs": [int(e) for e in m["epochs"]],
-                                "m": m["m"],
-                                "ksub": m["ksub"],
-                                "num_centroids": m["num_centroids"],
-                                "residual": bool(m.get("residual", False)),
-                                "ids_buckets": int(m.get("ids_buckets", 0)),
-                                **lineage,
-                            },
+                    ent = {**ent, "landing_dir": landing_dir}
+                else:
+                    if (
+                        f.index_id is not None
+                        and ent.get("index_id") is not None
+                        and ent["index_id"] != f.index_id
+                    ):
+                        raise ValueError(
+                            f"checkpoint {key} was registered to a "
+                            f"previous index lifetime at {self.store.url}"
+                            " — the index was torn down and rebuilt; use "
+                            "a fresh checkpoint dir"
                         )
-                    except CommitConflict as e:
-                        last = e
-                        continue  # re-resolve and retry
+                    foreign = sorted(
+                        e for e in f.epochs
+                        if base < e <= base + stride
+                        and f.epoch_src.get(str(e), mine) != mine
+                    )
+                    if foreign:
+                        raise EpochProvenanceConflict(
+                            f"epochs {foreign} of {self.store.url} were "
+                            "committed by another writer inside this "
+                            f"stream's reserved range ({base}, "
+                            f"{base + stride}] — a future micro-batch "
+                            "would collide; rebuild into a new lifetime "
+                            "or use a fresh checkpoint dir"
+                        )
                     return sid, base
-                if (
-                    m.get("index_id") is not None
-                    and ent.get("index_id") is not None
-                    and ent["index_id"] != m["index_id"]
-                ):
-                    raise ValueError(
-                        f"checkpoint {key} was registered to a previous "
-                        f"index lifetime at {self.store.url} — the "
-                        "index was torn down and rebuilt; use a fresh "
-                        "checkpoint dir"
-                    )
-                foreign = sorted(
-                    int(e) for e in m["epochs"]
-                    if base < int(e) <= base + stride
-                    and srcs.get(str(int(e)), mine) != mine
-                )
-                if foreign:
-                    raise EpochProvenanceConflict(
-                        f"epochs {foreign} of {self.store.url} were "
-                        "committed by another writer inside this "
-                        f"stream's reserved range ({base}, "
-                        f"{base + stride}] — a future micro-batch "
-                        "would collide; rebuild into a new lifetime or "
-                        "use a fresh checkpoint dir"
-                    )
-                return sid, base
-            import uuid
-
-            sid = uuid.uuid4().hex[:16]
-            # the index's FIRST stream bases directly above the
-            # committed epochs (compact numbering, matches the manual-
-            # append clock); every LATER registration lands one full
-            # stride above all reserved ranges and committed epochs,
-            # aligned to a stride boundary — disjoint from every live
-            # peer, so concurrent streams cannot allocate one number
-            if not streams:
-                base = max((int(e) for e in m["epochs"]), default=0)
             else:
-                floor = max(
-                    max((int(e) for e in m["epochs"]), default=0),
-                    max(
+                sid = uuid.uuid4().hex[:16]
+                # the index's FIRST stream bases directly above the
+                # committed epochs (compact numbering, matches the
+                # manual-append clock); every LATER registration lands
+                # one full stride above all reserved ranges and committed
+                # epochs, aligned to a stride boundary — disjoint from
+                # every live peer, so concurrent streams cannot allocate
+                # one number
+                top = max(f.epochs, default=0)
+                if not f.streams:
+                    base = top
+                else:
+                    floor = max(top, max(
                         int(s["epoch_base"]) + stride
-                        for s in streams.values()
-                    ),
-                )
-                base = ((floor // stride) + 1) * stride
-            lineage = self._lineage(m)
-            lineage["streams"][ck] = {
-                "stream_id": sid,
-                "epoch_base": base,
-                "landing_dir": landing_dir,
-                "index_id": m.get("index_id"),
-            }
-            try:
-                _commit_version(
-                    self.store, "", m["version"] + 1, m["dir"], prev=m,
-                    extra={
-                        "epochs": [int(e) for e in m["epochs"]],
-                        "m": m["m"],
-                        "ksub": m["ksub"],
-                        "num_centroids": m["num_centroids"],
-                        "residual": bool(m.get("residual", False)),
-                        "ids_buckets": int(m.get("ids_buckets", 0)),
-                        **lineage,
-                    },
-                )
-                return sid, base
-            except CommitConflict as e:
-                last = e  # re-resolve (maybe another start won) and retry
-        raise last  # type: ignore[misc]
+                        for s in f.streams.values()
+                    ))
+                    base = ((floor // stride) + 1) * stride
+                ent = {
+                    "stream_id": sid,
+                    "epoch_base": base,
+                    "landing_dir": landing_dir,
+                    "index_id": f.index_id,
+                }
+            self._commit(
+                m, m["dir"], replace(f, streams={**f.streams, key: ent})
+            )
+            return sid, base
+
+        # a lost CAS re-resolves (maybe another start registered first)
+        return _retry_commit(
+            self.store, "IvfPqIndex.register_stream", 5, attempt
+        )
 
     def start_stream(
         self,

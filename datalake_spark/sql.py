@@ -46,15 +46,6 @@ def register_functions(spark: SparkSession) -> None:
     spark.udtf.register("token_chunker", TokenChunker)
 
 
-def register_test_tables(spark: SparkSession, sf_dir: str) -> None:
-    """The driver's test tables as temp views (same loader the declared
-    queries use — events gets its ts/ts_ms normalization)."""
-    from datalake_spark.queries import TABLES, load
-
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def register_catalog(spark: SparkSession, catalog: Catalog) -> None:
     """The files catalog as SQL views: ``files``, ``latest``,
     ``file_buckets`` (the reference's DatalakeRecord shape)."""

@@ -198,6 +198,26 @@ class TestIvfPqIndexLifecycle:
         assert _topk(IvfPqIndex(spark, str(tmp_path / "idxr"))
                      .search(q, k=5, nprobe=3)) == got
 
+    def test_rebuild_gcs_superseded_version_dirs(self, spark, emb,
+                                                 tmp_path):
+        """Rebuild reclaims what it supersedes: after build -> append ->
+        rebuild -> rebuild the root holds exactly the current and the
+        previous version dir (the catalog's default retention)."""
+        import os
+
+        root = tmp_path / "idxgc"
+        idx = IvfPqIndex(spark, str(root), num_centroids=8, m=16, ksub=16)
+        idx.build(emb.filter("vec_id >= 3 and vec_id < 60"))
+        idx.append(emb.filter("vec_id >= 60 and vec_id < 120"), 1)
+        src = emb.filter("vec_id >= 3 and vec_id < 120")
+        prev = idx.rebuild(src)
+        man = idx.rebuild(src)
+        assert sorted(d for d in os.listdir(root) if d.startswith("v")) \
+            == sorted([prev["dir"], man["dir"]])
+        assert man["history"] == [
+            {"version": prev["version"], "dir": prev["dir"]}
+        ]
+
     def test_rebuild_refuses_short_source_and_unbuilt(self, spark, emb,
                                                       tmp_path):
         idx = IvfPqIndex(spark, str(tmp_path / "idxs"),
@@ -646,6 +666,36 @@ class TestEpochProvenance:
         v = idx.manifest()["version"]
         assert idx.append(b, 1, provenance="stream:x")["version"] == v
         assert idx.append(b, 1)["version"] == v
+
+    def test_register_stream_gives_up_after_five_conflicts(
+            self, spark, monkeypatch):
+        """A registration that loses every CAS retries exactly 5 times,
+        then raises a CommitConflict naming the operation.  The manifest
+        is committed directly, so no Spark build runs."""
+        import uuid
+
+        from datalake_spark.catalog import CommitConflict, _commit_version
+        from datalake_spark.operators import ann_index
+
+        idx = IvfPqIndex(spark, f"mem://ann-{uuid.uuid4().hex[:8]}/idx")
+        _commit_version(
+            idx.store, "", 1, "v00000001-0000abcd", prev=None,
+            extra={"epochs": [0], "m": 8, "ksub": 16, "num_centroids": 16,
+                   "residual": False, "ids_buckets": 64},
+        )
+        calls = []
+
+        def always_conflict(store, table_key, version, *a, **k):
+            calls.append(version)
+            raise CommitConflict(f"v{version} taken")
+
+        monkeypatch.setattr(ann_index, "_commit_version", always_conflict)
+        with pytest.raises(
+            CommitConflict,
+            match="register_stream: conflicted on 5 consecutive attempts",
+        ):
+            idx.register_stream("/ck/x", "/landing/x")
+        assert calls == [2] * 5
 
     def test_two_concurrent_streams_never_collide(self, spark, emb,
                                                   tmp_path):

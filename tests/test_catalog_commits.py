@@ -651,6 +651,35 @@ class TestDeleteWhere:
         assert ids == {"keep_null", "keep_other"}
 
 
+    def test_second_compact_purges_deleted_rows_from_disk(
+            self, spark, tmp_path):
+        """keep_versions=1 does not purge a deletion from disk: compact
+        keeps the version it scanned for in-flight readers, so the
+        deleted row stays in a parquet file under files/ until one more
+        compact() supersedes that version."""
+        import pyarrow.parquet as pq
+
+        cat = Catalog(spark, str(tmp_path), keep_versions=1)
+        cat.append(make_files_df(spark, _rows(0)))
+        cat.compact()  # leave the legacy flat layout: a versioned table
+        cat.refresh_latest()
+
+        def ids_on_disk():
+            ids: set = set()
+            for p in glob.glob(os.path.join(cat.files_path, "**",
+                                            "*.parquet"), recursive=True):
+                ids |= set(pq.read_table(p, columns=["id"])
+                           .column("id").to_pylist())
+            return ids
+
+        cat.delete_where("id = 'b0f3'")
+        assert "b0f3" not in {r["id"] for r in cat.files().collect()}
+        assert "b0f3" in ids_on_disk()
+        cat.compact()
+        assert "b0f3" not in ids_on_disk()
+        assert "b0f2" in ids_on_disk()
+
+
 class TestCollectStats:
     def test_single_pass_column_stats(self, spark, tmp_path):
         cat = Catalog(spark, str(tmp_path))
@@ -995,6 +1024,29 @@ class TestOptimisticCommits:
         assert catmod._is_retryable_commit_race(e)
         assert m["version"] == 1
 
+    def test_refresh_latest_gives_up_after_twelve_conflicts(
+            self, spark, monkeypatch):
+        """A merge that loses every CAS retries exactly 12 times, then
+        raises a CommitConflict naming the operation."""
+        from datalake_spark import catalog as catmod
+
+        cat = self._mem_cat(spark)
+        calls = []
+
+        def always_conflict(store, table_key, version, *a, **k):
+            calls.append(version)
+            raise catmod.CommitConflict(f"{table_key}: v{version} taken")
+
+        monkeypatch.setattr(catmod, "_commit_version", always_conflict)
+        with pytest.raises(
+            catmod.CommitConflict,
+            match="refresh_latest: conflicted on 12 consecutive attempts",
+        ):
+            cat.refresh_latest(make_files_df(spark, [
+                {"id": "a", "what": "nginx", "where": "h0",
+                 "start": T0, "end": None, "work_id": None}]))
+        assert calls == [1] * 12
+
     def test_roll_forward_unwedges_dead_winner(self, spark):
         """A winner that died between winning its marker and flipping
         _CURRENT must not wedge the table: the next committer completes
@@ -1237,6 +1289,26 @@ class TestGcOrphans:
         assert cat.store.list("latest/v00000009-race00")
         # table still reads; the planted future dir is mere info to fsck
         assert {r["id"] for r in cat.latest_table().collect()} == {"a", "b"}
+
+    def test_only_version_dir_names_are_reclaimed(self, spark):
+        """Commit-time GC, gc_orphans and fsck share one parse of
+        ``v{N}-{tag}``: a ``v``-prefixed dir that is not a version dir
+        is neither deleted nor reported as an orphan."""
+        import uuid as _uuid
+
+        cat = Catalog(spark, f"mem://gv-{_uuid.uuid4().hex[:8]}/cat")
+        mk = lambda i: make_files_df(spark, [
+            {"id": f"r{i}", "what": "nginx", "where": "h0",
+             "start": T0 + i, "end": None, "work_id": None}])
+        cat.refresh_latest(mk(0))
+        cat.refresh_latest(mk(1))
+        cat.store.put("latest/vendor/notes.txt", b"n")
+        cat.store.put("latest/v00000001-loser0/part-x.parquet", b"x")
+        assert cat.gc_orphans() == {"latest": ["v00000001-loser0"]}
+        cat.refresh_latest(mk(2))  # commit-time GC sweeps the table too
+        assert cat.store.list("latest/vendor")
+        report = cat.fsck()
+        assert "vendor" not in report["info"].get("latest_orphan_dirs", [])
 
     def test_cli_fsck_gc_orphans(self, spark, tmp_path):
         import io

@@ -15,6 +15,7 @@ Planning is analysis-only (no execution), so the sweep stays cheap while
 pinning every future query added to the surface.
 """
 
+import ast
 import os
 import pathlib
 import re
@@ -422,6 +423,34 @@ def test_env_knob_inventory():
     for path in root.rglob("*.py"):
         names |= set(re.findall(r"SPARK_GRAFT_\w+", path.read_text()))
     assert names == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
+
+
+def test_commit_conflict_caught_only_by_retry_helper():
+    """Every optimistic-commit retry runs through catalog._retry_commit:
+    nothing else under the package catches CommitConflict, so a
+    hand-rolled attempt loop cannot come back beside it."""
+    import datalake_spark
+
+    root = pathlib.Path(datalake_spark.__file__).parent
+    found = []
+
+    def visit(node, path, fn):
+        for child in ast.iter_child_nodes(node):
+            if (
+                isinstance(child, ast.ExceptHandler)
+                and child.type is not None
+                and "CommitConflict" in ast.unparse(child.type)
+            ):
+                found.append((path, fn))
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, path, child.name)
+            else:
+                visit(child, path, fn)
+
+    for path in sorted(root.rglob("*.py")):
+        visit(ast.parse(path.read_text()),
+              path.relative_to(root).as_posix(), None)
+    assert found == [("catalog.py", "_retry_commit")]
 
 
 def test_spread_floor_declines_on_any_arrow_error(spark, tmp_path,
