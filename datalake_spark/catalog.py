@@ -110,6 +110,12 @@ def _read_manifest(store: ObjectStore, table_key: str) -> dict | None:
     return cur
 
 
+def _table_name(store: ObjectStore, table_key: str) -> str:
+    """A table's name for messages: its store URL plus its key (the IVF-PQ
+    index commits at the store root, key ``""``)."""
+    return f"{store.url}/{table_key}" if table_key else store.url
+
+
 def _commit_version(
     store: ObjectStore,
     table_key: str,
@@ -164,7 +170,9 @@ def _commit_version(
                     pass
                 else:
                     store.put(join_key(table_key, _MANIFEST), won)
-        raise CommitConflict(f"{table_key}: version {version} already committed")
+        raise CommitConflict(
+            f"{_table_name(store, table_key)}: version {version} already committed"
+        )
     cur = _read_manifest(store, table_key)
     if cur is not None and cur.get("version", 0) > version:
         # stale writer beyond the marker GC horizon: someone advanced
@@ -177,7 +185,8 @@ def _commit_version(
         # made the next winner abort its own commit.)
         store.delete(marker)
         raise CommitConflict(
-            f"{table_key}: manifest already at v{cur['version']} > {version}"
+            f"{_table_name(store, table_key)}: manifest already at "
+            f"v{cur['version']} > {version}"
         )
     store.put(join_key(table_key, _MANIFEST), payload)
     # reclaim old markers (deletes only, strictly after the flip)

@@ -54,17 +54,19 @@ def lang_id(text: Column | str) -> Column:
     def in_set(sw: list[str]):
         return lambda x: x.isin(*sw)
 
-    scored = [
-        (lang, F.size(F.filter(toks, in_set(sw))))
+    # greatest() orders structs field by field: most hits, then the
+    # highest rank.  'und' has 0 hits and outranks every language, so it
+    # wins only when no language has a hit (a NULL text's NULL hits sort
+    # below 0); among languages the alphabetically first wins a tie.
+    candidates = [(F.lit(0), "und")] + [
+        (F.size(F.filter(toks, in_set(sw))), lang)
         for lang, sw in sorted(_LANG_STOPWORDS.items())
     ]
-    best = F.lit("und")
-    best_n = F.lit(0)
-    for lang, n in scored:
-        take = n > best_n
-        best = F.when(take, F.lit(lang)).otherwise(best)
-        best_n = F.when(take, n).otherwise(best_n)
-    return best
+    return F.greatest(*[
+        F.struct(hits.alias("hits"), F.lit(-rank).alias("rank"),
+                 F.lit(lang).alias("lang"))
+        for rank, (hits, lang) in enumerate(candidates)
+    ])["lang"]
 
 
 def doc_fingerprint_portable(text: Column | str, k: int = 8) -> Column:

@@ -4,12 +4,15 @@ binary content — the distributed form of the reference's per-file sniff
 ``1f 8b 08``, mimetypes on the checksum-stripped path).
 
 All pure Column expressions (whole-stage codegen): the gzip check is a
-3-byte binary prefix compare, and the mimetypes table is materialized as a
-literal MapType lookup keyed by lower-cased extension — identical results
-to :class:`datalake_spark.archive.ArchiveFile` because the map is built
-from the same ``mimetypes`` registry at plan time.  At 100 TB this is a
-map-only stage over a ``binaryFile`` (or content-table) scan: no shuffle,
-no Python in the hot path.
+3-byte binary prefix compare, and the type rule is ``mimetypes``' own:
+two literal maps built at import from the module-level registries
+``guess_type`` reads, looked up by the path's last one or two
+``posixpath.splitext`` suffixes.  So the bulk operator answers exactly
+what :class:`datalake_spark.archive.ArchiveFile` answers, including
+``a.c++``, ``a.h++``, ``a.x_b`` and ``dir/.tgz`` (``data:`` URLs aside,
+which are not file paths).  At 100 TB this is a map-only stage over a
+``binaryFile`` (or content-table) scan: no shuffle, no Python in the hot
+path, and a plan whose size is linear in the two tables.
 """
 
 from __future__ import annotations
@@ -20,28 +23,31 @@ from itertools import chain
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Derived at import from the MODULE-LEVEL registries mimetypes.guess_type
-# itself consults (init() also folds in system mime.types files — a fresh
-# MimeTypes() instance would NOT see those), so the bulk Column path and
-# ArchiveFile.content_type can never disagree on which suffixes get
-# rewritten/stripped:
-# - suffix_map rewrites (.tgz -> .tar.gz, ...) match case-INsensitively,
-# - encodings_map strips (.gz/.Z/.bz2/.xz/.br) match case-SENSITIVELY and
-#   at most once — exactly guess_type's loop-then-single-strip order.
+# init() folds the system mime.types files into the MODULE-LEVEL
+# registries guess_type consults (a fresh MimeTypes() would not see them).
 mimetypes.init()
-_SUFFIX_MAP = dict(mimetypes.suffix_map)
-_ENCODING_SUFFIXES = dict(mimetypes.encodings_map)
+# guess_type lower-cases a suffix before its types_map lookup, so only
+# lower-case keys can ever match
+TYPE_OF = {
+    ext: ctype for ext, ctype in mimetypes.types_map.items() if ext == ext.lower()
+}
+# the type of a path's last suffix when no encoding suffix follows it:
+# suffix_map rewrites (.tgz -> .tar.gz -> .tar) are resolved by guess_type
+# itself and take precedence over types_map, as in guess_type's loop
+LAST = {
+    **TYPE_OF,
+    **{suf: mimetypes.guess_type("x" + suf)[0] for suf in mimetypes.suffix_map},
+}
+
+# a basename: optional leading dots (never a suffix), a non-dot character,
+# then anything up to the suffixes; _SUFFIX is one splitext suffix
+_NAME = r"(?s)(?:^|/)\.*[^./][^/]*"
+_SUFFIX = r"(\.[^./]*)"
 
 
-def _mime_map() -> Column:
-    """Literal map: lower-cased extension (no dot) -> content type, from the
-    module-level STRICT mimetypes table — the same table guess_type's
-    default ``strict=True`` consults — so the bulk operator and the point
-    API can never disagree."""
-    pairs: dict[str, str] = {}
-    for ext, ctype in mimetypes.types_map.items():
-        pairs[ext.lstrip(".").lower()] = ctype
-    return F.create_map(*[F.lit(x) for x in chain.from_iterable(pairs.items())])
+def _lookup(table: dict, key: Column) -> Column:
+    """``table[key]`` as a literal-map lookup (NULL for a missing key)."""
+    return F.create_map(*map(F.lit, chain.from_iterable(table.items())))[key]
 
 
 def adjusted_path(path: Column | str) -> Column:
@@ -58,36 +64,21 @@ def sniff_content(
     path_col: str = "path",
 ) -> DataFrame:
     """Add ``content_encoding`` (gzip magic on the binary header) and
-    ``content_type`` (mimetypes lookup on the checksum-stripped path,
-    name-encoding suffixes like ``.gz`` stripped first) columns."""
-    adj = adjusted_path(path_col)
-    # rewrite compound suffixes (.tgz -> .tar.gz, ...) — guess_type matches
-    # these case-insensitively; one pass suffices because no stdlib
-    # replacement is itself a suffix_map key
-    for suf, repl in _SUFFIX_MAP.items():
-        adj = F.when(
-            F.lower(adj).endswith(suf.lower()),
-            F.concat(
-                adj.substr(F.lit(1), F.length(adj) - len(suf)), F.lit(repl)
-            ),
-        ).otherwise(adj)
-    # strip AT MOST ONE trailing encoding suffix, case-sensitively, as
-    # guess_type does ('.Z' strips, '.z' does not) — a single when-chain so
-    # the first match wins and no second suffix is stripped
-    stripped = None
-    for suf in _ENCODING_SUFFIXES:
-        cond = adj.endswith(suf)
-        val = adj.substr(F.lit(1), F.length(adj) - len(suf))
-        stripped = F.when(cond, val) if stripped is None else stripped.when(cond, val)
-    adj = stripped.otherwise(adj)
-    ext = F.lower(F.regexp_extract(adj, r"\.([A-Za-z0-9]+)$", 1))
+    ``content_type`` (``guess_type`` of the checksum-stripped path)."""
+    # guess_type drops a leading "scheme:" (urllib's splittype) first
+    path = F.regexp_replace(adjusted_path(path_col), r"^[^/:]+:", "")
+    last = F.regexp_extract(path, _NAME + _SUFFIX + "$", 1)
+    before = F.regexp_extract(path, _NAME + _SUFFIX + r"\.[^./]*$", 1)
+    # an encoding suffix (case-sensitive: '.Z' strips, '.z' does not) is
+    # stripped once, and the suffix before it names the type
+    content_type = F.when(
+        last.isin(*mimetypes.encodings_map),
+        _lookup(TYPE_OF, F.lower(before)),
+    ).otherwise(_lookup(LAST, F.lower(last)))
     is_gzip = F.hex(F.col(content_col).substr(1, 3)) == "1F8B08"
     return df.withColumn(
         "content_encoding", F.when(is_gzip, F.lit("gzip"))
-    ).withColumn(
-        "content_type",
-        F.when(ext != "", F.element_at(_mime_map(), ext)),
-    )
+    ).withColumn("content_type", content_type)
 
 
 def sniff_directory(spark, path: str) -> DataFrame:

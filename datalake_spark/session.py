@@ -20,6 +20,22 @@ from pyspark.sql import SparkSession
 _LOCAL_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's physical memory, capped at 16g (the gate SFs' size);
+    16g where ``meminfo`` cannot be read.  In local mode the driver heap
+    is the whole executor memory too, so a heap larger than the host lets
+    the JVM grow until the kernel kills it instead of spilling."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{min(kib // 2 // 1024, 16 * 1024)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "16g"
+
+
 def get_spark(app_name: str = "datalake_spark", master: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -40,13 +56,13 @@ def get_spark(app_name: str = "datalake_spark", master: str | None = None) -> Sp
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):
         # local mode is one JVM: the "driver" heap is the whole
-        # executor memory too.  16g suits the gate SFs; sf10 one-offs
-        # (60 M-row windows under the 180-plan fuzz battery) need more
-        # — env-tunable so the scale harness can raise it without
+        # executor memory too.  sf10 one-offs (60 M-row windows under
+        # the 180-plan fuzz battery) need more than the default —
+        # env-tunable so the scale harness can raise it without
         # changing the driver's defaults.
         builder = builder.master(f"local[{cpus}]").config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -311,6 +311,12 @@ class TestBulkSniffOperator:
             ("k", "pic.svgz", b"ss"),
             ("l", "logs.txt.bz2", b"bb"),
             ("m", "page.html.xz", b"hh"),
+            # suffixes outside [A-Za-z0-9] and a dotfile that merely ends
+            # in a suffix_map key
+            ("n", "a.c++", b"cc"),
+            ("o", "a.h++", b"hh"),
+            ("p", "a.x_b", b"xx"),
+            ("q", "dir/.tgz", b"tt"),
         ]
         point = {}
         for fid, path, content in cases:
@@ -326,6 +332,38 @@ class TestBulkSniffOperator:
             for r in sniff_content(df).collect()
         }
         assert bulk == point
+
+    def test_sweep_matches_point_api(self, spark):
+        """Every suffix mimetypes knows, in three cases, bare, behind each
+        encoding suffix (and the non-encodings '.z'/'.GZ'), with and
+        without a 40-hex checksum, under plain, dotfile and dot-only
+        basenames: one sniff_content call, no row may disagree with
+        ArchiveFile.content_type."""
+        import io
+        import mimetypes
+
+        from datalake_spark.archive import ArchiveFile
+        from datalake_spark.operators.sniff import sniff_content
+
+        suffixes = sorted(set(mimetypes.types_map) | set(mimetypes.suffix_map))
+        paths = {
+            base + case(suf) + enc + tail
+            for suf in suffixes
+            for case in (str, str.upper, str.title)
+            for enc in ("", *mimetypes.encodings_map, ".z", ".GZ")
+            for tail in ("", "-" + "0f" * 20)
+            for base in ("a", "dir.d/.a", "x/..")
+        }
+        paths |= {"..gz", "a..gz", "x.", "a:.txt", "s3://b/k.tar.gz",
+                  "x:y:.txt", "a/b/", "README"}
+        df = spark.createDataFrame([(p, b"") for p in paths],
+                                   "path string, content binary")
+        bulk = {r.path: r.content_type for r in
+                sniff_content(df).select("path", "content_type").collect()}
+        point = {p: ArchiveFile(io.BytesIO(b""), {"path": p}).content_type
+                 for p in paths}
+        assert bulk.keys() == point.keys()
+        assert {p: (bulk[p], t) for p, t in point.items() if bulk[p] != t} == {}
 
     def test_sniff_directory(self, spark, tmp_path):
         from datalake_spark.operators.sniff import sniff_directory

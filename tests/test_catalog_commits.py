@@ -928,6 +928,25 @@ class TestOptimisticCommits:
         got = catmod._read_manifest(st, "latest")
         assert got["version"] == 2 and got["dir"] == "v2-winner"
 
+    def test_conflicts_name_the_table_even_at_the_store_root(self):
+        """The IVF-PQ index commits at the store root (table key ""): a
+        losing or stale writer's CommitConflict still names the table."""
+        import uuid as _uuid
+
+        from datalake_spark import catalog as catmod
+        from datalake_spark.store import open_store
+
+        st = open_store(f"mem://cas-{_uuid.uuid4().hex[:8]}/idx")
+        m = catmod._commit_version(st, "", 1, "v00000001-aaaa", None)
+        with pytest.raises(catmod.CommitConflict) as lost:
+            catmod._commit_version(st, "", 1, "v00000001-bbbb", None)
+        assert str(lost.value) == f"{st.url}: version 1 already committed"
+        for v in range(2, 20):  # past the marker GC horizon (16)
+            m = catmod._commit_version(st, "", v, f"v{v:08d}-aaaa", m)
+        with pytest.raises(catmod.CommitConflict) as stale:
+            catmod._commit_version(st, "", 2, "v00000002-cccc", None)
+        assert str(stale.value) == f"{st.url}: manifest already at v19 > 2"
+
     @pytest.mark.no_fsck  # fabricated manifests point at no real dirs
     def test_stale_writer_behind_manifest_conflicts(self, spark, tmp_path):
         from datalake_spark import catalog as catmod

@@ -535,12 +535,15 @@ class TestMultimodal:
 class TestTextFunctions:
     def test_lang_id_english(self, spark):
         df = spark.createDataFrame(
-            [("the cat is in the house and the dog",), ("le chat est dans la maison et le chien",)],
-            ["text"],
+            [("the cat is in the house and the dog",), ("le chat est dans la maison et le chien",),
+             ("la de que",), ("cat dog",), (None,)],
+            "text string",
         )
         got = [r["l"] for r in df.select(lang_id("text").alias("l")).collect()]
         assert got[0] == "en"
         assert got[1] == "fr"
+        # es and fr tie on 3 hits: the alphabetically first wins
+        assert got[2:] == ["es", "und", "und"]
 
     def test_quality_and_tokens(self, spark, docs):
         out = docs.select(

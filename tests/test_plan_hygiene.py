@@ -12,7 +12,9 @@ sf0.001 and its physical plan scanned for scale hazards:
   reintroduce it).
 
 Planning is analysis-only (no execution), so the sweep stays cheap while
-pinning every future query added to the surface.
+pinning every future query added to the surface.  The same sweep bounds
+each entry's analyzed-plan size and pins which entries launch Spark jobs
+while building their DataFrame.
 """
 
 import ast
@@ -40,15 +42,49 @@ def _surface():
 # multi-job plans that can't be captured as one static DataFrame plan
 _DYNAMIC = {"streaming_ingest_e2e", "dedup_clusters", "embedding_dedup_clusters"}
 
+# entries whose build launches Spark jobs (an eager count/collect/fill
+# before the DataFrame is returned); the set may only shrink
+_JOBS_AT_BUILD = {
+    "ann_clustered_recall", "ann_index_lifecycle", "ann_ivf_topk",
+    "ann_ivfpq_topk", "ann_pq_topk", "ann_recall_verdict", "asof_generic",
+    "audio_roundtrip", "bpe_merges", "bpe_segment_corpus",
+    "embedding_centroids", "fuzz_plans", "fuzzy_join_lev1",
+    "hll_distinct_verdict", "kmeans_2iter", "minhash_incremental",
+    "minhash_lsh_dedup", "ngram_jaccard", "pagerank_2iter",
+    "pipeline_battery", "q10_returned_items", "q14_promo_share",
+    "q2_min_cost_supplier", "q_subquery_battery", "semantic_dedup",
+    "semantic_incremental", "span_dedup", "text_battery",
+}
+
+# 2x the largest analyzed plan on the surface (fuzz_plans, 1,506,952
+# chars), so a plan that grows by orders of magnitude fails here
+_MAX_ANALYZED_PLAN_CHARS = 3_014_000
+
+
+def _analyzed_chars(df) -> int:
+    return len(df._jdf.queryExecution().analyzed().toString())
+
 
 def test_no_cartesian_products_or_single_partition_sorts(spark):
     from datalake_spark.queries import registry  # noqa: F401 (session warm)
 
-    offenders = {}
+    sc = spark.sparkContext
+    offenders, jobs, plan_chars = {}, {}, {}
     for name, build in _surface():
         if name in _DYNAMIC:
             continue
-        df = build(spark, SF_DIR)
+        group = f"plan-hygiene-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            df = build(spark, SF_DIR)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job events reach the status tracker asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        if n_jobs:
+            jobs[name] = n_jobs
+        plan_chars[name] = _analyzed_chars(df)
         plan = df._jdf.queryExecution().executedPlan().toString()
         problems = []
         if "CartesianProduct" in plan:
@@ -60,6 +96,24 @@ def test_no_cartesian_products_or_single_partition_sorts(spark):
         if problems:
             offenders[name] = problems
     assert not offenders, f"plan hazards: {offenders}"
+    too_big = {n: c for n, c in plan_chars.items()
+               if c >= _MAX_ANALYZED_PLAN_CHARS}
+    assert not too_big, f"analyzed plans over the bound: {too_big}"
+    new = {n: c for n, c in jobs.items() if n not in _JOBS_AT_BUILD}
+    assert not new, f"builds that newly launch Spark jobs: {new}"
+
+
+def test_sniff_and_lang_id_plans_are_small(spark):
+    """Both rule-table operators plan in size linear in their tables: a
+    fold whose every step references the previous step more than once
+    doubles per rule and exhausted a 1 GB driver heap during analysis."""
+    from datalake_spark.functions.text import lang_id
+    from datalake_spark.operators.sniff import sniff_content
+
+    df = spark.createDataFrame([("a.tgz", b"", "the cat")],
+                               "path string, content binary, text string")
+    assert _analyzed_chars(sniff_content(df)) < 10_000
+    assert _analyzed_chars(df.select(lang_id("text"))) < 10_000
 
 
 def test_near_dup_sig_frames_are_persisted_single_pass(spark):
@@ -423,6 +477,19 @@ def test_env_knob_inventory():
     for path in root.rglob("*.py"):
         names |= set(re.findall(r"SPARK_GRAFT_\w+", path.read_text()))
     assert names == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
+
+
+def test_default_driver_memory_fits_the_host(tmp_path):
+    """The default local heap is half the host's memory, capped at 16g,
+    and 16g where the host's meminfo cannot be read."""
+    from datalake_spark.session import _default_driver_memory
+
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemTotal:       16479424 kB\nMemFree: 1 kB\n")
+    assert _default_driver_memory(str(meminfo)) == "8046m"
+    meminfo.write_text("MemTotal:       67108864 kB\n")
+    assert _default_driver_memory(str(meminfo)) == "16384m"
+    assert _default_driver_memory(str(tmp_path / "absent")) == "16g"
 
 
 def test_commit_conflict_caught_only_by_retry_helper():
