@@ -86,6 +86,7 @@ from datalake_spark.operators.similarity import (
     pq_encode,
     pq_train,
 )
+from datalake_spark.session import persisted, released
 from datalake_spark.store import ObjectStore, join_key, open_store
 
 
@@ -356,14 +357,14 @@ class IvfPqIndex:
         self._train_and_write(candidates, vdir, fields, self.train_iters)
         return self._commit(None, vdir, fields)
 
+    @released()
     def _train_and_write(
         self, corpus: DataFrame, vdir: str, f: _Fields, iters: int
     ) -> None:
         """Train the coarse centroids and the PQ codebooks on ``corpus``
         (geometry from ``f``), encode it, and write centroids, codebooks,
         codes and ids as epoch 0 of ``vdir`` — the body build and
-        rebuild share."""
-        frames: list = []
+        rebuild share.  The training caches are released on return."""
         cents, assign = ivf_index_build(
             corpus, f.num_centroids, id_col=self.id_col, vec_col=self.vec_col,
         )
@@ -375,13 +376,13 @@ class IvfPqIndex:
         if f.residual:
             cb = pq_train(
                 assign, m=f.m, ksub=f.ksub, iters=iters,
-                id_col="c_id", vec_col="c_vec", frames_out=frames,
+                id_col="c_id", vec_col="c_vec",
                 cells="cent_id", centroids=rcents,
             )
         else:
             cb = pq_train(
                 corpus, m=f.m, ksub=f.ksub, iters=iters,
-                id_col=self.id_col, vec_col=self.vec_col, frames_out=frames,
+                id_col=self.id_col, vec_col=self.vec_col,
             )
         codes = pq_encode(
             assign, cb, m=f.m, id_col="c_id", vec_col="c_vec",
@@ -391,9 +392,8 @@ class IvfPqIndex:
         cb.write.mode("overwrite").parquet(self._url(vdir, self.CB))
         self._write_codes(codes, vdir, 0)
         self._write_ids(cells, vdir, 0, f.ids_buckets)
-        for frame in frames:
-            frame.unpersist()
 
+    @released()
     def append(
         self,
         batch: DataFrame,
@@ -434,31 +434,28 @@ class IvfPqIndex:
         narrows the window; determinism of the batch plan is the
         contract that closes it (foreachBatch micro-batches satisfy
         it)."""
-        batch = batch.select(
+        batch = persisted(batch.select(
             F.col(self.id_col).alias(self.id_col),
             F.col(self.vec_col).alias(self.vec_col),
-        ).persist()
-        try:
-            # NULL guard (r13 review): a NULL vector would assign a NULL
-            # cent_id (cosine over NULL is NULL) — the id lands in the
-            # ids tree with no searchable code, and the re-delivery
-            # guard then blocks a later CORRECT delivery forever.  A
-            # NULL id breaks the bucket hash the same way.  Raising here
-            # (one cached limit-1 scan; the batch is persisted) beats
-            # both silent corruptions.
-            bad = batch.filter(
-                F.col(self.id_col).isNull() | F.col(self.vec_col).isNull()
+        ))
+        # NULL guard (r13 review): a NULL vector would assign a NULL
+        # cent_id (cosine over NULL is NULL) — the id lands in the
+        # ids tree with no searchable code, and the re-delivery
+        # guard then blocks a later CORRECT delivery forever.  A
+        # NULL id breaks the bucket hash the same way.  Raising here
+        # (one cached limit-1 scan; the batch is persisted) beats
+        # both silent corruptions.
+        bad = batch.filter(
+            F.col(self.id_col).isNull() | F.col(self.vec_col).isNull()
+        )
+        if not bad.isEmpty():
+            raise ValueError(
+                "append batch contains NULL ids or NULL vectors — "
+                "a NULL vector would commit an unsearchable id that "
+                "permanently blocks its own correct re-delivery; "
+                "filter them out (or fix the source) first"
             )
-            if not bad.isEmpty():
-                raise ValueError(
-                    "append batch contains NULL ids or NULL vectors — "
-                    "a NULL vector would commit an unsearchable id that "
-                    "permanently blocks its own correct re-delivery; "
-                    "filter them out (or fix the source) first"
-                )
-            return self._append(batch, epoch, _race_hook, provenance)
-        finally:
-            batch.unpersist()
+        return self._append(batch, epoch, _race_hook, provenance)
 
     def _append(
         self, batch: DataFrame, epoch: int, _race_hook, provenance: str

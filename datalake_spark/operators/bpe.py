@@ -46,6 +46,8 @@ from collections import Counter, defaultdict
 
 from pyspark.sql import DataFrame, functions as F
 
+from datalake_spark.session import persisted
+
 
 def _local_bpe_train(
     rows: list[tuple[str, int]], n_merges: int
@@ -200,7 +202,7 @@ def bpe_train(
         df.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
         .filter(F.col("w") != "")
     )
-    wc = words.groupBy("w").agg(F.count(F.lit(1)).alias("freq")).persist()
+    wc = persisted(words.groupBy("w").agg(F.count(F.lit(1)).alias("freq")))
     if wc.count() <= local_vocab_budget:
         rows = [(r["w"], r["freq"]) for r in wc.collect()]
         wc.unpersist()
@@ -212,9 +214,9 @@ def bpe_train(
             ],
             "rank int, left string, right string, pair_count bigint",
         )
-    seq = wc.select(
+    seq = persisted(wc.select(
         "freq", F.concat_ws(" ", F.split(F.col("w"), "")).alias("seq")
-    ).persist()
+    ))
     wc.unpersist()
     merge_rows: list[tuple[int, str, str, int]] = []
     for r in range(1, n_merges + 1):
@@ -241,7 +243,7 @@ def bpe_train(
             break
         merge_rows.append((r, trow["ta"], trow["tb"], int(trow["tcnt"])))
         fused = _merge_rule(F.col("seq"), trow["ta"], trow["tb"])
-        new_seq = seq.select("freq", fused.alias("seq")).persist()
+        new_seq = persisted(seq.select("freq", fused.alias("seq")))
         # materialize the round's frame while its predecessor is still
         # cached (else the unpersist forces a full-lineage recompute),
         # then release the predecessor — bounds the training to two

@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from datalake_spark.functions.text import doc_fingerprint, tokenize
+from datalake_spark.session import persisted
 
 
 def shingles(text_col, n: int = 3) -> F.Column:
@@ -253,9 +254,9 @@ def minhash_lsh_pairs(
     # from) turns that into one pass + two cache reads; recompute-on-loss
     # keeps it safe on a real cluster, and LRU eviction bounds the
     # footprint.  tests/test_plan_hygiene.py pins the single-scan shape.
-    sig = _minhash_sig(
+    sig = persisted(_minhash_sig(
         df, text_col, id_col, num_hashes, band_rows, shingle_n
-    ).persist()
+    ))
     banded = _minhash_banded(sig)
     # candidate pairs: same (band, bandhash) bucket; cap degenerate
     # buckets BEFORE the collect (_capped_buckets: row_number prefix →
@@ -267,7 +268,7 @@ def minhash_lsh_pairs(
     if trunc_out is not None:
         # one bucket agg feeds pairs AND sentinel — persist so the banding
         # shuffle runs once (count is exact pre-cap size: free column)
-        buckets = buckets.persist()
+        buckets = persisted(buckets)
         trunc_out.append(
             buckets.filter(F.col("_bsz") > max_bucket).select(
                 F.col("_band").alias("band"),
@@ -482,7 +483,7 @@ def ngram_jaccard_pairs(
     # side, sig); size ≈ one (id, string, long) per doc-shingle; disk
     # spill + LRU eviction bound the footprint, recompute-on-loss keeps
     # it cluster-safe.
-    sh_flat = sh_flat.persist()
+    sh_flat = persisted(sh_flat)
     df_counts = sh_flat.groupBy("_h").agg(F.count(F.lit(1)).alias("_df"))
     if trunc_out is not None:
         # one row per dropped stop-shingle with its document frequency —
@@ -513,13 +514,11 @@ def ngram_jaccard_pairs(
     # every shingle — reported Jaccard stays exact even through shingles
     # above max_df (same shuffle cost as the pre-r13 explode-regroup);
     # persisted so the regroup happens once, not per verify side
-    sig = (
-        sh_flat.groupBy("_id")
-        .agg(
+    sig = persisted(
+        sh_flat.groupBy("_id").agg(
             F.collect_list("_h").alias("_hps"),
             F.count(F.lit(1)).alias("_n_sh"),
         )
-        .persist()
     )
     sa = sig.select(
         F.col("_id").alias("doc_a"),
@@ -766,20 +765,19 @@ def connected_components(
     small-graph shortcut GraphFrames-style systems take before falling
     back to distributed label propagation.  Both paths produce the same
     min-id labeling; a test pins them equal."""
-    edges = (
+    # persisted: the count fills the cache the local collect reads, so
+    # the upstream pair generation runs once; the collect is bounded by
+    # the budget the count just verified
+    edges = persisted(
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
         .union(pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b")))
         .distinct()
-        # materialize before the loop: the edge list is re-joined every
-        # round (don't recompute the upstream pair generation), and the
-        # truncated lineage keeps upstream constraints out of the
-        # round-plan analysis
-        .localCheckpoint()
     )
-    # count is cheap on the checkpointed edges; the collect is bounded by
-    # the budget we just verified
     if edges.count() <= local_edge_budget:
         return _local_components(edges)
+    # the edge list is re-joined every round: the truncated lineage keeps
+    # upstream constraints out of the round-plan analysis
+    edges = edges.localCheckpoint()
     comp = edges.select(F.col("a").alias("id")).distinct().withColumn(
         "comp", F.col("id")
     )
@@ -1085,7 +1083,9 @@ def duplicated_span_dedup(
     # n_tokens join); unpersisted, each re-scans and re-splits the corpus
     # (5 parquet scans observed).  Persist once — same discipline as the
     # MinHash sig frame; recompute-on-loss keeps it cluster-safe.
-    base = df.select(F.col(id_col).alias("_id"), toks.alias("_parts")).persist()
+    base = persisted(
+        df.select(F.col(id_col).alias("_id"), toks.alias("_parts"))
+    )
     words = base.select(
         "_id", F.posexplode("_parts").alias("_pos", "_word")
     )
@@ -1108,9 +1108,9 @@ def duplicated_span_dedup(
     # frames) and fill it with ONE blocking count — which also fills
     # `base` (grams reads through it), so words and the n_tokens join
     # get warm cache too.  A count() is value-neutral.
-    grams = base.select(
+    grams = persisted(base.select(
         "_id", F.posexplode(gram_arr).alias("_s0", "_gram")
-    ).persist()
+    ))
     grams.count()
     dupg = (
         grams.groupBy("_gram")
@@ -1180,7 +1180,6 @@ def minhash_incremental_pairs(
     shingle_n: int = 3,
     max_bucket: int = 1000,
     corpus_sig: DataFrame | None = None,
-    frames_out: list | None = None,
 ) -> DataFrame:
     """Incremental near-dup: probe a NEW batch against an existing corpus
     (plus the batch itself) WITHOUT re-pairing the corpus — the maintenance
@@ -1217,15 +1216,10 @@ def minhash_incremental_pairs(
         corpus_sig = _minhash_sig(
             corpus, text_col, id_col, num_hashes, band_rows, shingle_n
         )
-    sig_old = corpus_sig.persist()
-    sig_new = _minhash_sig(
+    sig_old = persisted(corpus_sig)
+    sig_new = persisted(_minhash_sig(
         new, text_col, id_col, num_hashes, band_rows, shingle_n
-    ).persist()
-    if frames_out is not None:
-        # loop-driving callers (streaming curation probes one batch per
-        # micro-batch, forever) unpersist these after their action —
-        # otherwise every batch leaks two cached signature frames
-        frames_out.extend([sig_old, sig_new])
+    ))
     # materialize the caches ONCE before the consumers fan out (r15, the
     # ngram_jaccard r14 precedent): sig_new feeds three subtrees (cross
     # join, new×new buckets, verify union) and sig_old two — the final
@@ -1409,7 +1403,6 @@ def semantic_dedup(
     threshold: float = 0.97,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    frames_out: list | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): embedding-space
     semantic deduplication — cluster the corpus with k-means, then look
@@ -1443,7 +1436,7 @@ def semantic_dedup(
     independent, bit-identical across engines (the embedding_near_dup
     discipline)."""
     pairs, assign = _semantic_cluster_pairs(
-        emb, k, iters, threshold, id_col, vec_col, frames_out
+        emb, k, iters, threshold, id_col, vec_col
     )
     comp = connected_components(pairs, "doc_a", "doc_b")
     return (
@@ -1465,14 +1458,13 @@ def semantic_dup_pairs(
     threshold: float = 0.97,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    frames_out: list | None = None,
 ) -> DataFrame:
     """Just the (doc_a, doc_b) near-duplicate pairs of
     :func:`semantic_dedup` — the pair-tier form ``dedup_corpus``'s
     component/quality-winner machinery composes over (strategy
     'semantic'), exactly like the MinHash/SimHash pair operators."""
     pairs, _assign = _semantic_cluster_pairs(
-        emb, k, iters, threshold, id_col, vec_col, frames_out
+        emb, k, iters, threshold, id_col, vec_col
     )
     return pairs
 
@@ -1490,7 +1482,7 @@ _SEMANTIC_DEFAULT_K = 8
 
 def _semantic_cluster_pairs(
     emb: DataFrame, k: int | None, iters: int, threshold: float,
-    id_col: str, vec_col: str, frames_out: list | None = None,
+    id_col: str, vec_col: str,
 ):
     """(pairs(doc_a, doc_b), assign(_aid, cluster)) — the shared guts of
     semantic_dedup / semantic_dup_pairs.  ``k=None`` means the caller
@@ -1504,12 +1496,9 @@ def _semantic_cluster_pairs(
     # final verdict join; el feeds norms + both pair sides — without the
     # cache each consumer re-runs the k-means lineage / embedding scan
     # (the repo's standing shared-frame discipline, test_plan_hygiene)
-    assign = kmeans_iterate(
+    assign = persisted(kmeans_iterate(
         emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-        frames_out=frames_out,
-    ).select(F.col(id_col).alias("_aid"), "cluster").persist()
-    if frames_out is not None:
-        frames_out.append(assign)
+    ).select(F.col(id_col).alias("_aid"), "cluster"))
     # k guardrail (r9 judge finding 3): the within-cluster exact pair
     # join is O(Σ|cluster|²·dim) — correct at any k, quadratic in the
     # MEAN CLUSTER SIZE.  The paper's k ~ n/target-cluster-size rule
@@ -1535,7 +1524,7 @@ def _semantic_cluster_pairs(
                 RuntimeWarning,
                 stacklevel=3,
             )
-    el = (
+    el = persisted(
         emb.select(
             F.col(id_col).alias("_vid"),
             F.posexplode(F.col(vec_col)).alias("_pos", "_val"),
@@ -1543,10 +1532,7 @@ def _semantic_cluster_pairs(
         .withColumn("_val", F.col("_val").cast("double"))
         .join(assign, F.col("_vid") == F.col("_aid"))
         .select("_vid", "cluster", "_pos", "_val")
-        .persist()
     )
-    if frames_out is not None:
-        frames_out.append(el)
     norms = el.groupBy("_vid").agg(
         F.sum((F.col("_val") * F.col("_val")).cast("decimal(30,12)"))
         .cast("double")
@@ -1601,7 +1587,6 @@ def semantic_index_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
-    frames_out: list | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Build the STANDING SemDeDup cluster index over an existing corpus:
     ``(centroids, elements, norms)`` — the ivf_index_build/ivf_search
@@ -1628,7 +1613,6 @@ def semantic_index_build(
     if centroids is None:
         centroids = kmeans_centroids(
             corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-            frames_out=frames_out,
         )
     # row-local assignment carrying the vector through (r14): elements
     # reads (id, vector, cluster) off one map-stage frame — the pre-r14
@@ -1664,7 +1648,6 @@ def semantic_incremental_pairs(
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
     index: tuple[DataFrame, DataFrame, DataFrame] | None = None,
-    frames_out: list | None = None,
     batch_index_out: list | None = None,
 ) -> DataFrame:
     """Incremental SemDeDup: probe a NEW embedding batch against an
@@ -1698,11 +1681,9 @@ def semantic_incremental_pairs(
     every pair involves at least one NEW doc.  Cosine is the exact
     DECIMAL-accumulated value, engine-portable.
 
-    ``frames_out`` (optional list) receives every frame persisted here
-    so a per-batch driver loop can unpersist after acting on the pairs
-    — REQUIRED hygiene when calling this in a long-lived session, or
-    each batch leaks its cached element frames (the
-    minhash_incremental_pairs discipline).
+    A per-batch driver loop in a long-lived session calls this inside
+    ``session.released()``, or each batch leaks its cached element
+    frames.
 
     ``batch_index_out`` (optional list) receives the batch's persisted
     element frame (_vid, cluster, _pos, _val) so an index-maintaining
@@ -1717,22 +1698,20 @@ def semantic_incremental_pairs(
     elif corpus is not None:
         centroids, el_old, norms_old = semantic_index_build(
             corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-            centroids=centroids, frames_out=frames_out,
+            centroids=centroids,
         )
     elif centroids is None:
         raise ValueError(
             "semantic_incremental_pairs needs corpus= or centroids= or index="
         )
-    centroids = centroids.persist()
-    if frames_out is not None:
-        frames_out.append(centroids)
+    centroids = persisted(centroids)
 
     # row-local assignment with the vector on the row (r14): the batch
     # explode reads the cluster tag in place — no batch-sized join back
     a_new = assign_to_centroids(
         new, centroids, id_col=id_col, vec_col=vec_col, keep_vec=True
     )
-    el_new = (
+    el_new = persisted(
         a_new.select(
             F.col(id_col).alias("_vid"),
             "cluster",
@@ -1740,10 +1719,7 @@ def semantic_incremental_pairs(
         )
         .withColumn("_val", F.col("_val").cast("double"))
         .select("_vid", "cluster", "_pos", "_val")
-        .persist()
     )
-    if frames_out is not None:
-        frames_out.append(el_new)
     if batch_index_out is not None:
         batch_index_out.append(el_new)
     norms_new = el_new.groupBy("_vid").agg(
@@ -1757,11 +1733,9 @@ def semantic_incremental_pairs(
         # by k, not corpus size), and against a cluster-partitioned
         # parquet index this is partition pruning
         touched = el_new.select("cluster").distinct()
-        el_old = el_old.join(
+        el_old = persisted(el_old.join(
             F.broadcast(touched), "cluster", "left_semi"
-        ).persist()
-        if frames_out is not None:
-            frames_out.append(el_old)
+        ))
         # norms too: every pair id lives in a touched cluster, so corpus
         # norms outside them can never match a dots row — prune before
         # the shuffle instead of joining |corpus| rows against ≤k
@@ -1939,7 +1913,7 @@ def hamming_band_pairs(
         size_alias="_bsz" if trunc_out is not None else None,
     )
     if trunc_out is not None:
-        buckets = buckets.persist()
+        buckets = persisted(buckets)
         trunc_out.append(
             buckets.filter(F.col("_bsz") > max_bucket).select(
                 F.col("_band").alias("band"),

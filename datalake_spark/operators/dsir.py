@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from datalake_spark.functions.hashing import md5hash60
 from datalake_spark.functions.intmath import log2_fp
+from datalake_spark.session import persisted
 
 
 def hashed_features(
@@ -99,7 +100,6 @@ def dsir_train(
     num_buckets: int = 1024,
     features_target: DataFrame | None = None,
     features_raw: DataFrame | None = None,
-    frames_out: list | None = None,
 ) -> DataFrame:
     """Train the importance model as one PERSISTABLE B-row frame:
     (bucket, c_t, c_r, llr_fp) where
@@ -119,10 +119,7 @@ def dsir_train(
     ``features_target`` / ``features_raw`` (optional, (doc_id, bucket))
     reuse already-extracted :func:`hashed_features` frames so a caller
     scoring the same corpus pays one tokenization (the lm_train
-    ``bigrams=`` hand-off).  ``frames_out`` (optional list) receives the
-    persisted B-row count frame — it feeds both the totals aggregate
-    and the output join, and without the persist its lineage (the two
-    corpus-sized count shuffles) would run twice."""
+    ``bigrams=`` hand-off)."""
     ft = features_target if features_target is not None else (
         hashed_features(target, text_col, id_col, num_buckets))
     fr = features_raw if features_raw is not None else (
@@ -133,9 +130,10 @@ def dsir_train(
     cr = _bucket_counts(fr, num_buckets).select(
         "bucket", F.col("c").alias("c_r")
     )
-    m = ct.join(cr, "bucket").persist()
-    if frames_out is not None:
-        frames_out.append(m)
+    # persisted: the B-row count frame feeds both the totals aggregate
+    # and the output join — else the two corpus-sized count shuffles
+    # run twice
+    m = persisted(ct.join(cr, "bucket"))
     totals = m.agg(
         (F.sum("c_t") + num_buckets).alias("_tb"),
         (F.sum("c_r") + num_buckets).alias("_rb"),

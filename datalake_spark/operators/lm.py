@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datalake_spark.session import persisted
+
 
 def lm_bigrams(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -62,7 +64,6 @@ def lm_train(
     text_col: str = "text",
     id_col: str = "doc_id",
     bigrams: DataFrame | None = None,
-    frames_out: list | None = None,
 ) -> DataFrame:
     """Train the bigram model as one PERSISTABLE frame:
     (l, r, c_lr, c_l, v_sz) — pair count, left-context marginal
@@ -78,9 +79,9 @@ def lm_train(
     # cxy feeds the marginal, the vocab count, and the output join —
     # persist per the shared-frame discipline (or the reference corpus
     # re-tokenizes three times)
-    cxy = bi.groupBy("l", "r").agg(F.count(F.lit(1)).alias("c_lr")).persist()
-    if frames_out is not None:
-        frames_out.append(cxy)
+    cxy = persisted(
+        bi.groupBy("l", "r").agg(F.count(F.lit(1)).alias("c_lr"))
+    )
     cx = cxy.groupBy("l").agg(F.sum("c_lr").alias("c_l"))
     vocab = cxy.select(F.explode(F.array("l", "r")).alias("w")).agg(
         F.count_distinct("w").alias("v_sz")

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datalake_spark.functions.vectors import cosine_micro_exact
+from datalake_spark.session import persisted
 
 
 def brute_force_topk(
@@ -385,7 +386,6 @@ def kmeans_iterate(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids_out: list | None = None,
-    frames_out: list | None = None,
 ) -> DataFrame:
     """Fixed-iteration Lloyd k-means: (id, cluster, dist_sq) after ``iters``
     assign/update rounds, deterministic and ENGINE-PORTABLE.
@@ -409,21 +409,13 @@ def kmeans_iterate(
     (cluster, pos, cval) — the persistable "index" half incremental
     consumers (semantic_incremental_pairs) assign new batches against
     without re-clustering.
-
-    ``frames_out`` (optional list): receives every frame this call
-    persisted, so loop-driving callers can unpersist after acting on
-    the result (the repo's standing cache-release discipline,
-    minhash_incremental_pairs precedent) — without it each call leaks
-    one cached exploded frame for the session's lifetime.
     """
     # persisted: el feeds the seed-centroid build plus a distance join
     # AND a centroid update per iteration (~2·iters+1 consumers) — each
     # would re-run the explode lineage against the source otherwise
-    el = emb.select(
+    el = persisted(emb.select(
         F.col(id_col).alias("_id"), F.posexplode(vec_col).alias("_pos", "_val")
-    ).withColumn("_val", F.col("_val").cast("double")).persist()
-    if frames_out is not None:
-        frames_out.append(el)
+    ).withColumn("_val", F.col("_val").cast("double")))
     # Round-0 centroids as a LOCAL relation (r14, guide §5): the seed
     # collect was already paying one bounded TakeOrdered job — collecting
     # the k seed VECTORS instead of just their ids costs the same job and
@@ -512,7 +504,6 @@ def kmeans_centroids(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    frames_out: list | None = None,
 ) -> DataFrame:
     """Just the final (cluster, pos, cval) centroid frame of
     :func:`kmeans_iterate` — the standing cluster index an incremental
@@ -520,7 +511,7 @@ def kmeans_centroids(
     out: list = []
     kmeans_iterate(
         emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-        centroids_out=out, frames_out=frames_out,
+        centroids_out=out,
     )
     return out[0]
 
@@ -949,7 +940,6 @@ def pq_train(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    frames_out: list | None = None,
     cells: str | None = None,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
@@ -985,10 +975,6 @@ def pq_train(
     per (vector, subspace), never a sorted rank.  Callers at 100 TB
     should train on a bounded sample (pass a ``.limit``-ed or sampled
     frame); the codebook stays m*ksub rows regardless.
-
-    ``frames_out`` (optional list): receives every frame this call
-    persisted (the exploded subvectors + each round's codebook), the
-    kmeans_iterate cache-release discipline.
 
     ``cells`` + ``centroids`` (r11): train on IVFADC RESIDUALS —
     ``cells`` names the column of ``candidates`` holding each vector's
@@ -1032,11 +1018,9 @@ def pq_train(
         return cb
     # persisted: sv feeds one row-local assign per round — each would
     # re-run the quantize+slice lineage against the source otherwise
-    sv = _pq_subvectors(
+    sv = persisted(_pq_subvectors(
         candidates, m, id_col, vec_col, cells, centroids
-    ).persist()
-    if frames_out is not None:
-        frames_out.append(sv)
+    ))
     for _ in range(iters):
         # row-local assign KEEPS sv_micro on the row, so the update
         # aggregates it directly — the pre-r14 corpus-wide
@@ -1207,14 +1191,13 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_iters: int = 2,
-    frames_out: list | None = None,
 ) -> DataFrame:
     """PQ-ADC ANN in one call: :func:`pq_train` + :func:`pq_encode` +
     :func:`pq_search`.  A per-batch pipeline should instead build the
     codebooks/codes once, write them to parquet, and serve every later
     search from the stored index (the ivf_index_build/ivf_search split)."""
     cb = pq_train(candidates, m=m, ksub=ksub, iters=train_iters,
-                  id_col=id_col, vec_col=vec_col, frames_out=frames_out)
+                  id_col=id_col, vec_col=vec_col)
     codes = pq_encode(candidates, cb, m=m, id_col=id_col, vec_col=vec_col)
     return pq_search(
         cb, codes, queries, k=k, m=m, id_col=id_col, vec_col=vec_col
@@ -1349,7 +1332,6 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_iters: int = 2,
-    frames_out: list | None = None,
     residual: bool = False,
 ) -> DataFrame:
     """IVF-PQ ANN in one call: :func:`ivf_index_build` (coarse cells) +
@@ -1373,12 +1355,10 @@ def ivfpq_topk(
     if residual:
         cb = pq_train(assign, m=m, ksub=ksub, iters=train_iters,
                       id_col="c_id", vec_col="c_vec",
-                      frames_out=frames_out,
                       cells="cent_id", centroids=rcents)
     else:
         cb = pq_train(candidates, m=m, ksub=ksub, iters=train_iters,
-                      id_col=id_col, vec_col=vec_col,
-                      frames_out=frames_out)
+                      id_col=id_col, vec_col=vec_col)
     codes = pq_encode(
         assign, cb, m=m, id_col="c_id", vec_col="c_vec",
         cells="cent_id", centroids=rcents,

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from datalake_spark.export import write_training_shards
 from datalake_spark.operators.dedup import dedup_corpus
+from datalake_spark.session import persisted, released
 
 DEFAULT_STOPWORDS = ("the", "a")
 
@@ -283,18 +284,18 @@ def curate_corpus(
         """(_dsid) ids of the dsir_top_n docs of ``frame`` by importance
         weight — one feature extraction shared by the raw-count half of
         training and the scoring pass (the lm-stage single-tokenization
-        discipline); session-scoped persist like the other
-        curation-stage caches."""
+        discipline); persisted like the other curation-stage caches,
+        until the enclosing ``released()`` scope exits."""
         from datalake_spark.operators.dsir import (
             dsir_sample,
             dsir_train,
             hashed_features,
         )
 
-        fk = hashed_features(
+        fk = persisted(hashed_features(
             frame, text_col=text_col, id_col=id_col,
             num_buckets=dsir_num_buckets,
-        ).persist()
+        ))
         model = dsir_train(
             dsir_target, frame, text_col=text_col, id_col=id_col,
             num_buckets=dsir_num_buckets, features_raw=fk,
@@ -448,6 +449,7 @@ def curate_corpus(
     return surviving
 
 
+@released()
 def curate_and_export(
     df: DataFrame,
     path: str,
@@ -465,7 +467,8 @@ def curate_and_export(
     with per-rule attribution (see curate_corpus).  ``fmt`` is
     ``parquet`` / ``jsonl`` (write_training_shards) or ``webdataset``
     (tar shards with {key}.txt/{key}.json member pairs) — all three
-    share the same seeded membership and order contract."""
+    share the same seeded membership and order contract.  Every cache
+    the curation stages make is released on return."""
     n_input = df.count()
     curated = curate_corpus(
         df,

@@ -26,6 +26,7 @@ from datalake_spark.functions.hashing import md5hash60, sql_md5hash60
 from datalake_spark.functions.text import doc_fingerprint_portable, lang_id, quality_score
 from datalake_spark.queries import Q, load
 from datalake_spark.queries.pipeline_q import NGRAM_JACCARD_SQL
+from datalake_spark.session import persisted
 
 
 # ---------------------------------------------------------------------------
@@ -936,7 +937,7 @@ def ann_clustered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     # persisted: the totals branch re-reads all four pipelines
-    out = out.persist()
+    out = persisted(out)
     totals = (
         out.groupBy("config")
         .agg(

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from datalake_spark.functions.hashing import sql_md5hash60
 from datalake_spark.queries import Q, load, dsum, sql_dsum
+from datalake_spark.session import persisted
 
 
 # ---------------------------------------------------------------------------
@@ -154,14 +155,14 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side and the bucket pass recomputes scan+explode (3× `Scan parquet`,
     # no ReusedExchange — the repartition leaves groupBy exchange-free, so
     # there is no exchange to reuse).
-    buckets = sh.groupBy("shingle").agg(
+    buckets = persisted(sh.groupBy("shingle").agg(
         F.sort_array(F.collect_list("doc_id")).alias("ids")
-    ).persist()
-    sizes = (
+    ))
+    # tiny (one row per doc); read by both broadcast sides
+    sizes = persisted(
         buckets.select(F.explode("ids").alias("doc_id"))
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_sh"))
-        .persist()  # tiny (one row per doc); read by both broadcast sides
     )
     # materialize the caches ONCE before the consumers fan out (r14):
     # the final action launches both broadcast builds and the main pair
@@ -1795,10 +1796,10 @@ def near_dup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the edge list feeds all three join legs — persist it so the
     # near-dup pipeline (norms + dot products) runs once, not thrice
     # (the sig-frame discipline from the LSH operators)
-    e = pairs.select(
+    e = persisted(pairs.select(
         F.least("id_a", "id_b").alias("a"),
         F.greatest("id_a", "id_b").alias("b"),
-    ).distinct().persist()
+    ).distinct())
     tri = (
         e.alias("e1")
         .join(
@@ -2278,12 +2279,12 @@ def funnel_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select("user_id", "event_type", "ts_ms")
     # t1/t2 each feed the next step's join AND the final left join;
     # persist so each per-user min-agg shuffle runs once
-    t1 = (
+    t1 = persisted(
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts_ms").alias("t1_ms"))
-    ).persist()
-    t2 = (
+    )
+    t2 = persisted(
         ev.filter(F.col("event_type") == "click")
         .join(t1, "user_id")
         .filter(
@@ -2292,7 +2293,7 @@ def funnel_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id")
         .agg(F.min("ts_ms").alias("t2_ms"))
-    ).persist()
+    )
     t3 = (
         ev.filter(F.col("event_type") == "purchase")
         .join(t2, "user_id")
@@ -2372,7 +2373,9 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # first-event frame feeds the cell join AND the cohort sizes; persist
     # so the per-user min shuffle runs once
-    first = ev.groupBy("user_id").agg(F.min("day").alias("cohort_day")).persist()
+    first = persisted(
+        ev.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
+    )
     cells = (
         ev.join(first, "user_id")
         .select(
@@ -2492,7 +2495,7 @@ def pagerank_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct on the INT pair before string labels (narrower shuffle rows),
     # persist the half-size pair list once — both edge directions, degrees,
     # and the node set all derive from this cache (map-only unions)
-    pairs = (
+    pairs = persisted(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select("o_custkey", "l_suppkey")
         .distinct()
@@ -2500,16 +2503,17 @@ def pagerank_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("c"), F.col("o_custkey")).alias("a"),
             F.concat(F.lit("s"), F.col("l_suppkey")).alias("b"),
         )
-        .persist()
     )
     edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
     # nodes (a distinct over the edge list) and deg each feed every round
     # plus r0/nn — persist or the shuffles re-run per consumer
-    nodes = edges.select("src").distinct().persist()
+    nodes = persisted(edges.select("src").distinct())
     nn = nodes.agg(F.count(F.lit(1)).alias("n"))
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
+    deg = persisted(
+        edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    )
     base = F.expr(f"(15 * ({_PR_SCALE} div n)) div 100")
 
     def step(r):  # r: (src, r)
@@ -2608,7 +2612,9 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("b.l").alias("l"), F.col("b.r").alias("r"))
     # the bigram-count frame feeds four consumers (filter, both marginals,
     # the total); persist so the corpus-wide count shuffle runs once
-    cxy = bi.groupBy("l", "r").agg(F.count(F.lit(1)).alias("c_xy")).persist()
+    cxy = persisted(
+        bi.groupBy("l", "r").agg(F.count(F.lit(1)).alias("c_xy"))
+    )
     cx = cxy.groupBy("l").agg(F.sum("c_xy").alias("c_x"))
     cy = cxy.groupBy("r").agg(F.sum("c_xy").alias("c_y"))
     nn = cxy.agg(F.sum("c_xy").alias("n_bi"))
@@ -2661,7 +2667,7 @@ def lm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_spark.operators.lm import lm_bigrams, lm_score, lm_train
 
     docs = load(spark, sf_dir, "documents")
-    bi = lm_bigrams(docs).persist()
+    bi = persisted(lm_bigrams(docs))
     # the model trains on the REFERENCE slice (even doc ids — the CCNet
     # shape: train on the clean reference, score the whole crawl) so the
     # smoothing/OOV paths score genuinely unseen contexts
@@ -2734,7 +2740,7 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the scoring pass (the lm_quality_score bigrams= shape); the
     # persisted frames ride the gate run's session — the documented
     # pipeline_q persist pattern
-    fb = hashed_features(docs, num_buckets=_DSIR_B).persist()
+    fb = persisted(hashed_features(docs, num_buckets=_DSIR_B))
     en = docs.filter(F.col("lang") == "en").select("doc_id")
     model = dsir_train(
         docs, docs, num_buckets=_DSIR_B,
@@ -2947,7 +2953,7 @@ def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (user, day) distinct pairs feed both DAU and the window fan-out;
     # persist so the distinct shuffle runs once; the day list derives from
     # the cache too (no second raw-event scan)
-    daily = ev.distinct().persist()
+    daily = persisted(ev.distinct())
     days = daily.select("day").distinct()
     dau = daily.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
     contrib = daily.select(
@@ -3479,7 +3485,7 @@ def quality_classifier_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize ONCE: the persisted term frame feeds both the df
     # aggregation and the scoring explode (split+bigram over the corpus
     # was previously paid twice — the r6 idle bench flagged it)
-    d = _qc_term_frame(docs).persist()
+    d = persisted(_qc_term_frame(docs))
     e = d.select("doc_id", F.explode("terms").alias("term"))
     wt = (
         e.groupBy("term")
@@ -4062,10 +4068,12 @@ def budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-(source, shard) totals: n_src × n_shards rows — persisted so the
     # offsets self-join and the budget agg read it, not the corpus.  No
-    # unpersist: gate queries leak their tiny persisted frames into the
-    # run's session by design (the documented pipeline_q pattern — the
-    # driver process is per-run; ADVICE r10 reviewed and accepted)
-    t = docs.groupBy("source", "_shard").agg(F.sum("w").alias("_sw")).persist()
+    # unpersist: outside a released() scope gate queries keep their tiny
+    # persisted frames for the run's session by design (the documented
+    # pipeline_q pattern — the driver process is per-run)
+    t = persisted(
+        docs.groupBy("source", "_shard").agg(F.sum("w").alias("_sw"))
+    )
     # budget = half an equal share of the corpus: total DIV (2 * n_sources)
     tot = t.agg(
         F.sum("_sw").alias("tot_w"),

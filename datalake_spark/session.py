@@ -9,9 +9,12 @@ results are oracle-comparable (DuckDB timestamps are UTC-naive).
 
 from __future__ import annotations
 
+import contextvars
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # At 100 TB the shuffle-partition count should target ~128-256 MB per
 # partition post-shuffle; AQE coalesces down from a high initial number, so on
@@ -67,3 +70,40 @@ def get_spark(app_name: str = "datalake_spark", master: str | None = None) -> Sp
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# Open ``released()`` scopes, innermost last.  A ContextVar, so each
+# thread sees its own stack: ``foreachBatch`` bodies run on Py4J
+# callback threads and the HTTP API serves requests concurrently.
+_SCOPES: contextvars.ContextVar[tuple[list[DataFrame], ...]] = (
+    contextvars.ContextVar("datalake_spark_persist_scopes", default=())
+)
+
+
+def persisted(df: DataFrame) -> DataFrame:
+    """``df.persist()``, recorded in the innermost open :func:`released`
+    scope so that scope unpersists it on exit.  Outside any scope it is
+    exactly ``df.persist()``: the cache lives until ``clearCache()``."""
+    df = df.persist()
+    scopes = _SCOPES.get()
+    if scopes:
+        scopes[-1].append(df)
+    return df
+
+
+@contextmanager
+def released() -> Iterator[list[DataFrame]]:
+    """Unpersist (non-blocking) every frame :func:`persisted` caches while
+    this scope is open, on normal exit or on an exception — the release
+    for per-batch and per-build entry points that run their own action.
+    Use as ``with released():`` or, for a whole function, ``@released()``;
+    ``with released() as frames`` names the list being recorded.
+    """
+    frames: list[DataFrame] = []
+    token = _SCOPES.set(_SCOPES.get() + (frames,))
+    try:
+        yield frames
+    finally:
+        _SCOPES.reset(token)
+        for df in frames:
+            df.unpersist()

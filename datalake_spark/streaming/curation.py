@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datalake_spark.export import KEY_COL, SHARD_COL, shard_key, shard_of
+from datalake_spark.session import persisted, released
 from datalake_spark.store import join_key, open_store
 from datalake_spark.streaming.dedup import dedup_stream_within_watermark
 
@@ -179,9 +180,7 @@ class StreamingCurator:
             if lm_model_path is not None else None
         )
 
-    def _near_dup_filter(
-        self, batch: DataFrame
-    ) -> tuple[DataFrame, list]:
+    def _near_dup_filter(self, batch: DataFrame) -> DataFrame:
         from datalake_spark.operators.dedup import (
             minhash_incremental_pairs,
             minhash_signatures,
@@ -193,14 +192,12 @@ class StreamingCurator:
             # first batch: no standing signatures yet — an empty typed
             # frame keeps the probe's plan shape identical
             corpus_sig = minhash_signatures(batch.limit(0), id_col=self.id_col)
-        frames: list = []
         pairs = minhash_incremental_pairs(
             None,
             batch,
             id_col=self.id_col,
             threshold=self.near_dup_threshold,
             corpus_sig=corpus_sig,
-            frames_out=frames,
         )
         cid = corpus_sig.select(F.col("_id").alias("_cid"))
         # drop a NEW doc when it matches anything already retained (the
@@ -221,11 +218,9 @@ class StreamingCurator:
         drops = drop_vs_corpus_b.unionByName(drop_vs_corpus_a).unionByName(
             in_batch
         ).distinct()
-        survivors = batch.join(
+        return persisted(batch.join(
             drops, F.col(self.id_col) == F.col("_drop"), "left_anti"
-        ).persist()
-        frames.append(survivors)
-        return survivors, frames
+        ))
 
     def _crash(self, point: str) -> None:
         """Fire the installed crash hook for ``point`` (no-op when none
@@ -234,6 +229,7 @@ class StreamingCurator:
         if fn is not None:
             fn()
 
+    @released()
     def _write_batch(self, batch: DataFrame, epoch: int) -> None:
         """foreachBatch sink.  The shard append is made idempotent per
         epoch: the batch is written (mode=overwrite, replay-safe) to a
@@ -248,14 +244,9 @@ class StreamingCurator:
         # persisted for the sink's whole lifetime: the batch plan (the
         # full rules + watermark-dedup pipeline) otherwise re-executes
         # per consumer — the isEmpty probe, the staging write, and the
-        # index append each replayed it (r13 review finding)
-        batch = batch.persist()
-        try:
-            self._write_batch_inner(batch, epoch)
-        finally:
-            batch.unpersist()
-
-    def _write_batch_inner(self, batch: DataFrame, epoch: int) -> None:
+        # index append each replayed it (r13 review finding); released
+        # with every other cache of the batch on exit, crash or not
+        batch = persisted(batch)
         if batch.isEmpty():
             # stateful upstream ops (the watermark dedup) flush state
             # through trailing EMPTY micro-batches; committing those
@@ -281,9 +272,8 @@ class StreamingCurator:
             batch = batch.join(
                 low, F.col(self.id_col) == F.col("_lmid"), "left_anti"
             )
-        frames: list = []
         if self.near_dup_threshold is not None:
-            batch, frames = self._near_dup_filter(batch)
+            batch = self._near_dup_filter(batch)
         keyed = batch.withColumn(
             KEY_COL, shard_key(self.id_col, self.seed)
         ).withColumn(SHARD_COL, shard_of(F.col(KEY_COL), self.n_shards))
@@ -370,8 +360,6 @@ class StreamingCurator:
                 "append"
             ).parquet(self.sig_path)
             self._crash("signatures")
-            for f in frames:
-                f.unpersist()
         if self.compact_every and (epoch + 1) % self.compact_every == 0:
             from datalake_spark.export import compact_shards
 

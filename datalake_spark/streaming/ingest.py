@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from datalake_spark.catalog import Catalog, with_bucket_date
 from datalake_spark.schema import FILES_SCHEMA, INGEST_EVENT_SCHEMA
+from datalake_spark.session import persisted, released
 
 SUPPORTED_EVENTS = {
     "ObjectCreated:Put": "store",
@@ -77,6 +78,7 @@ class StreamingIngester:
         # countable in tests) even when several pipelines share a session
         self.job_group = f"ingest-{uuid.uuid4().hex[:8]}"
 
+    @released()
     def _handle_batch(self, batch: DataFrame, epoch_id: int) -> None:
         """One data pass per micro-batch: both metrics (ok-record and error
         counts) ride the plan as ``observe`` aggregates and are fired by a
@@ -107,7 +109,7 @@ class StreamingIngester:
         # (QueryEngine.dropDuplicates), mirroring the reference's
         # tolerated duplicate puts (storage.py:64-73).
         w = Window.partitionBy("file_id").orderBy(F.col("event_time").desc())
-        files = (
+        files = persisted(
             ok.filter(F.col("metadata").isNotNull())
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
@@ -128,7 +130,6 @@ class StreamingIngester:
                 F.coalesce(F.col("size"), F.lit(0)).alias("size"),
             )
             .observe(obs_files, F.count(F.lit(1)).alias("n_ok"))
-            .cache()
         )
         try:
             files.write.format("noop").mode("overwrite").save()
@@ -155,7 +156,6 @@ class StreamingIngester:
             )
             report.write.mode("append").parquet(self.reports_path)
         finally:
-            files.unpersist()
             spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
 
     def start(

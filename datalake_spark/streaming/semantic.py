@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datalake_spark.session import persisted, released
+
 VEC_EVENT_SCHEMA = "vec_id long, embedding array<double>, ms long"
 
 
@@ -105,6 +107,7 @@ class SemanticStreamDeduper:
         norms_raw = self.spark.read.parquet(f"{self.index_path}/norms")
         return cents, el, norms_raw
 
+    @released()
     def _append_index(
         self,
         survivors: DataFrame,
@@ -137,7 +140,7 @@ class SemanticStreamDeduper:
         el_s = el_new.join(sid, F.col("_vid") == F.col("_sid"), "left_semi")
         if prior_vids is not None:
             el_s = el_s.join(prior_vids, "_vid", "left_anti")
-        el_s = el_s.persist()
+        el_s = persisted(el_s)
         # match the standing index's layout (set by _load_index; a fresh
         # index takes the partitioned one): appending cluster-partitioned
         # epochs under a legacy unpartitioned root would leave files at
@@ -155,34 +158,31 @@ class SemanticStreamDeduper:
                 .alias("_norm_sq")
             )
         ).parquet(f"{self.index_path}/norms/epoch={epoch}")
-        el_s.unpersist()
 
     # -- foreachBatch sink ----------------------------------------------
 
+    @released()
     def _process_batch(self, batch: DataFrame, epoch: int) -> None:
         from datalake_spark.operators.dedup import (
             semantic_incremental_pairs,
         )
         from datalake_spark.operators.similarity import kmeans_centroids
 
-        batch = batch.persist()
-        frames = [batch]
+        batch = persisted(batch)
         bidx: list = []
         index = self._load_index()
         if index is None:
             # first batch: train the standing centroids ON the batch
             # (deterministic k-means — a replay retrains identically)
             # and probe new x new only
-            cents = kmeans_centroids(
+            cents = persisted(kmeans_centroids(
                 batch, k=self.k, iters=self.iters,
                 id_col=self.id_col, vec_col=self.vec_col,
-            ).persist()
-            frames.append(cents)
+            ))
             pairs = semantic_incremental_pairs(
                 None, batch, threshold=self.threshold,
                 id_col=self.id_col, vec_col=self.vec_col,
-                centroids=cents, frames_out=frames,
-                batch_index_out=bidx,
+                centroids=cents, batch_index_out=bidx,
             )
             corpus_ids = None
             prior_vids = None
@@ -208,8 +208,7 @@ class SemanticStreamDeduper:
             pairs = semantic_incremental_pairs(
                 None, batch, threshold=self.threshold,
                 id_col=self.id_col, vec_col=self.vec_col,
-                index=(cents, el_old, norms_old), frames_out=frames,
-                batch_index_out=bidx,
+                index=(cents, el_old, norms_old), batch_index_out=bidx,
             )
             corpus_ids = norms_old.select(F.col("_vid").alias("_cid"))
             # ids already indexed under EARLIER epochs (epoch is the
@@ -227,8 +226,7 @@ class SemanticStreamDeduper:
         # in-batch residue, and through drops the survivors anti-join) —
         # persist per the repo's shared-frame discipline or each subtree
         # re-runs the whole probe plan
-        pairs = pairs.persist()
-        frames.append(pairs)
+        pairs = persisted(pairs)
         # drop rule (the MinHash streaming stage's): a NEW doc dies when
         # it pairs with anything already retained (either side), or with
         # a smaller-id doc inside its own batch (keep-first)
@@ -249,11 +247,10 @@ class SemanticStreamDeduper:
             drops = drop_b.unionByName(drop_a).unionByName(in_batch)
         else:
             drops = pairs.select(F.col("doc_b").alias("_drop"))
-        survivors = batch.join(
+        survivors = persisted(batch.join(
             drops.distinct(), F.col(self.id_col) == F.col("_drop"),
             "left_anti",
-        ).persist()
-        frames.append(survivors)
+        ))
 
         survivors.write.mode("overwrite").parquet(
             f"{self.out_path}/vecs/epoch={epoch}"
@@ -267,8 +264,6 @@ class SemanticStreamDeduper:
             cents.write.mode("overwrite").parquet(
                 f"{self.index_path}/centroids"
             )
-        for f in frames:
-            f.unpersist()
 
     def start(
         self,

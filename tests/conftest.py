@@ -2,18 +2,87 @@ from __future__ import annotations
 
 import random
 import uuid
+from dataclasses import dataclass
 
 import pytest
+from pyspark.sql import DataFrame
 
-from datalake_spark.session import get_spark
+from datalake_spark.session import get_spark, released
 
 SF_DIR = "/root/testdata/sf0.001"
+
+# streaming / iterative / driver-loop queries build side-effecting or
+# multi-job plans that can't be captured as one static DataFrame plan
+DYNAMIC = {"streaming_ingest_e2e", "dedup_clusters", "embedding_dedup_clusters"}
 
 
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests")
     yield s
+
+
+def surface():
+    """(name, build) of every registry entry and battery sub, by name."""
+    from datalake_spark.queries import registry
+    from datalake_spark.queries.batteries import BATTERY_SUBS
+
+    qs = {q.name: q.build for q in registry()}
+    for subs in BATTERY_SUBS.values():
+        for sub in subs:
+            qs.setdefault(sub.q.name, sub.q.build)
+    return sorted(qs.items())
+
+
+def rdd_ids(spark) -> set:
+    """Ids of the session's persistent RDDs (cached or checkpointed)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+@dataclass
+class Built:
+    df: DataFrame
+    jobs: int              # Spark jobs launched while building
+    analyzed_chars: int
+    executed_plan: str     # taken inside the scope, caches in place
+    leaked_rdds: set       # persistent RDD ids left after the scope
+    leaked_cache: bool     # a cacheManager entry left after the scope
+
+
+@pytest.fixture(scope="session")
+def built_surface(spark) -> dict[str, Built]:
+    """Every surface entry but DYNAMIC, built once per session inside a
+    ``released()`` scope under its own job group.  The plan-hygiene
+    sweep and the battery schema check both read it, so no entry's
+    build-time jobs run twice."""
+    sc = spark.sparkContext
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    out = {}
+    for name, build in surface():
+        if name in DYNAMIC:
+            continue
+        group = f"plan-hygiene-{name}"
+        before = rdd_ids(spark)
+        with released():
+            sc.setJobGroup(group, name)
+            try:
+                df = build(spark, SF_DIR)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            qe = df._jdf.queryExecution()
+            analyzed_chars = len(qe.analyzed().toString())
+            plan = qe.executedPlan().toString()
+        # job events reach the status tracker asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        out[name] = Built(
+            df, len(sc.statusTracker().getJobIdsForGroup(group)),
+            analyzed_chars, plan, rdd_ids(spark) - before,
+            not cache.isEmpty(),
+        )
+        # a leak is charged to the entry that made it, not its successors
+        spark.catalog.clearCache()
+    return out
 
 
 def random_metadata(rng: random.Random, **overrides) -> dict:

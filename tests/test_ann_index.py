@@ -16,7 +16,7 @@ from datalake_spark.operators.ann_index import (
     IvfPqIndex,
 )
 from datalake_spark.queries import load
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, rdd_ids
 
 
 @pytest.fixture(scope="module")
@@ -43,6 +43,23 @@ class TestIvfPqIndexLifecycle:
         want = _topk(similarity.ivfpq_topk(
             q, c, k=5, num_centroids=8, nprobe=3, m=16, ksub=16))
         assert got == want and got
+
+    def test_failed_build_releases_its_caches(self, spark, emb, tmp_path,
+                                              monkeypatch):
+        """A build that raises after training must not keep the
+        training caches: a process that retries failed builds would
+        otherwise hold one cached subvector frame per failure."""
+        def fail(*_a, **_k):
+            raise OSError("codes write failed")
+
+        emb.count()  # the fixture's own cache predates the snapshot
+        before = rdd_ids(spark)
+        monkeypatch.setattr(IvfPqIndex, "_write_codes", fail)
+        idx = IvfPqIndex(spark, str(tmp_path / "idx"),
+                         num_centroids=8, m=16, ksub=16)
+        with pytest.raises(OSError, match="codes write failed"):
+            idx.build(emb.filter("vec_id >= 3"))
+        assert rdd_ids(spark) - before == set()
 
     def test_search_unbuilt_raises_and_double_build_raises(
             self, spark, emb, tmp_path):

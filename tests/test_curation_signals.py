@@ -10,7 +10,8 @@ from collections import Counter
 
 import pytest
 
-from tests.conftest import SF_DIR
+from datalake_spark.session import released
+from tests.conftest import SF_DIR, rdd_ids
 
 from datalake_spark.queries.pipeline_q import (
     chargram_commonness,
@@ -1019,41 +1020,39 @@ class TestSemanticIncremental:
             spark.read.parquet(str(idx / "norms")),
         )
 
-        frames: list = []
-        pairs = semantic_incremental_pairs(
-            None, new, threshold=0.99, index=index, frames_out=frames
-        )
-        # (a) the probe plan touches the corpus ONLY through the index:
-        # no scan leaf over the corpus source path
-        stack = [pairs._jdf.queryExecution().executedPlan()]
-        corpus_scans = []
-        while stack:
-            n = stack.pop()
-            cs = n.children()
-            if cs.isEmpty():
-                if "corpus-src" in n.toString():
-                    corpus_scans.append(n.nodeName())
-            else:
-                for i in range(cs.size()):
-                    stack.append(cs.apply(i))
-        assert not corpus_scans, corpus_scans
+        with released():
+            pairs = semantic_incremental_pairs(
+                None, new, threshold=0.99, index=index
+            )
+            # (a) the probe plan touches the corpus ONLY through the index:
+            # no scan leaf over the corpus source path
+            stack = [pairs._jdf.queryExecution().executedPlan()]
+            corpus_scans = []
+            while stack:
+                n = stack.pop()
+                cs = n.children()
+                if cs.isEmpty():
+                    if "corpus-src" in n.toString():
+                        corpus_scans.append(n.nodeName())
+                else:
+                    for i in range(cs.size()):
+                        stack.append(cs.apply(i))
+            assert not corpus_scans, corpus_scans
 
-        # (b) value parity with the one-shot form
-        got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
-        expect = {
-            (r["doc_a"], r["doc_b"])
-            for r in semantic_incremental_pairs(
-                corpus, new, k=2, threshold=0.99
-            ).collect()
-        }
-        assert got == expect and got  # non-degenerate
-        for f in frames:
-            f.unpersist(blocking=True)
+            # (b) value parity with the one-shot form
+            got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
+            expect = {
+                (r["doc_a"], r["doc_b"])
+                for r in semantic_incremental_pairs(
+                    corpus, new, k=2, threshold=0.99
+                ).collect()
+            }
+            assert got == expect and got  # non-degenerate
 
-    def test_frames_out_releases_every_persisted_frame(self, spark):
-        """Loop-driving callers must be able to unpersist what a batch
-        probe cached: frames_out receives every persisted frame and
-        unpersisting them leaves no blocks behind.
+    def test_scope_releases_every_persisted_frame(self, spark):
+        """Loop-driving callers must be able to release what a batch
+        probe cached: every frame it persists inside ``released()`` is
+        unpersisted when the scope exits, leaving no blocks behind.
 
         The leak check is DELTA-scoped: earlier tests' localCheckpoint
         RDDs (connected_components & co) are released asynchronously by
@@ -1062,21 +1061,13 @@ class TestSemanticIncremental:
         before the op and assert only that no NEW ids survive."""
         from datalake_spark.operators.dedup import semantic_incremental_pairs
 
-        sc = spark.sparkContext
-
-        def _rdd_ids():
-            # JavaSparkContext.getPersistentRDDs → java.util.Map<int, RDD>
-            return set(sc._jsc.getPersistentRDDs().keySet().toArray())
-
-        before = _rdd_ids()
+        before = rdd_ids(spark)
         corpus, new = self._frames(spark)
-        frames: list = []
-        pairs = semantic_incremental_pairs(
-            corpus, new, k=2, threshold=0.99, frames_out=frames
-        )
-        n = pairs.count()
-        assert n >= 1 and len(frames) >= 3  # kmeans el, centroids, sides
-        for f in frames:
-            f.unpersist(blocking=True)
-        leaked = _rdd_ids() - before
+        with released() as frames:
+            pairs = semantic_incremental_pairs(
+                corpus, new, k=2, threshold=0.99
+            )
+            n = pairs.count()
+            assert n >= 1 and len(frames) >= 3  # kmeans el, centroids, sides
+        leaked = rdd_ids(spark) - before
         assert not leaked, f"persisted RDDs leaked by the probe: {leaked}"

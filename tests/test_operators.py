@@ -14,7 +14,8 @@ from datalake_spark.operators.multimodal import extract_features, MEDIA_SCHEMA
 from datalake_spark.functions.text import lang_id, quality_score, token_count
 from datalake_spark.functions.hashing import blake2b_udf
 from datalake_spark.queries import load
-from tests.conftest import SF_DIR
+from datalake_spark.session import released
+from tests.conftest import SF_DIR, rdd_ids
 
 
 @pytest.fixture(scope="module")
@@ -1366,34 +1367,26 @@ class TestPq:
         coreset, trained = recall(0), recall(2)
         assert trained >= coreset, (trained, coreset)
 
-    def test_pq_train_frames_out_releases_every_persisted_frame(self, spark,
-                                                                emb):
-        """Training persists the exploded subvectors; frames_out must
-        receive every persisted frame so loop-driving callers can
-        release (the kmeans_iterate discipline).  r14: the per-round
-        codebooks are no longer persisted DataFrames — they are
-        parameter-bounded local relations (_materialize_small), so the
-        only cluster-cached frame is sv and nothing can leak."""
-        sc = spark.sparkContext
-
-        def _rdd_ids():
-            return set(sc._jsc.getPersistentRDDs().keySet().toArray())
-
+    def test_pq_train_scope_releases_every_persisted_frame(self, spark,
+                                                           emb):
+        """Training persists the exploded subvectors; ``released()``
+        must unpersist every persisted frame so loop-driving callers
+        can release (the kmeans_iterate discipline).  r14: the
+        per-round codebooks are no longer persisted DataFrames — they
+        are parameter-bounded local relations (_materialize_small), so
+        the only cluster-cached frame is sv and nothing can leak."""
         # materialize the fixture's own cache BEFORE the snapshot so the
         # leak check attributes only pq_train's persists (r14: training
         # executes eagerly inside the call, so the fixture cache would
         # otherwise first materialize after `before` and read as a leak)
         emb.count()
-        before = _rdd_ids()
-        frames: list = []
-        cb = similarity.pq_train(
-            emb.filter("vec_id >= 3"), m=8, ksub=16, iters=2,
-            frames_out=frames,
-        )
-        assert cb.count() == 8 * 16 and len(frames) == 1  # sv only (r14)
-        for f in frames:
-            f.unpersist(blocking=True)
-        leaked = _rdd_ids() - before
+        before = rdd_ids(spark)
+        with released() as frames:
+            cb = similarity.pq_train(
+                emb.filter("vec_id >= 3"), m=8, ksub=16, iters=2,
+            )
+            assert cb.count() == 8 * 16 and len(frames) == 1  # sv (r14)
+        leaked = rdd_ids(spark) - before
         assert not leaked, f"persisted RDDs leaked by pq_train: {leaked}"
 
     def test_py_quantize_micro_unit_matches_column_twin(self, spark):

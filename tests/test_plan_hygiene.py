@@ -13,8 +13,9 @@ sf0.001 and its physical plan scanned for scale hazards:
 
 Planning is analysis-only (no execution), so the sweep stays cheap while
 pinning every future query added to the surface.  The same sweep bounds
-each entry's analyzed-plan size and pins which entries launch Spark jobs
-while building their DataFrame.
+each entry's analyzed-plan size, pins which entries launch Spark jobs
+while building their DataFrame, and fails on any cache an entry leaves
+after the ``released()`` scope it was built in (conftest.built_surface).
 """
 
 import ast
@@ -26,21 +27,6 @@ import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
 
-
-def _surface():
-    from datalake_spark.queries import registry
-    from datalake_spark.queries.batteries import BATTERY_SUBS
-
-    qs = {q.name: q.build for q in registry()}
-    for subs in BATTERY_SUBS.values():
-        for sub in subs:
-            qs.setdefault(sub.q.name, sub.q.build)
-    return sorted(qs.items())
-
-
-# streaming / iterative / driver-loop queries build side-effecting or
-# multi-job plans that can't be captured as one static DataFrame plan
-_DYNAMIC = {"streaming_ingest_e2e", "dedup_clusters", "embedding_dedup_clusters"}
 
 # entries whose build launches Spark jobs (an eager count/collect/fill
 # before the DataFrame is returned); the set may only shrink
@@ -65,41 +51,29 @@ def _analyzed_chars(df) -> int:
     return len(df._jdf.queryExecution().analyzed().toString())
 
 
-def test_no_cartesian_products_or_single_partition_sorts(spark):
-    from datalake_spark.queries import registry  # noqa: F401 (session warm)
-
-    sc = spark.sparkContext
-    offenders, jobs, plan_chars = {}, {}, {}
-    for name, build in _surface():
-        if name in _DYNAMIC:
-            continue
-        group = f"plan-hygiene-{name}"
-        sc.setJobGroup(group, name)
-        try:
-            df = build(spark, SF_DIR)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        # job events reach the status tracker asynchronously
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        if n_jobs:
-            jobs[name] = n_jobs
-        plan_chars[name] = _analyzed_chars(df)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+def test_no_cartesian_products_or_single_partition_sorts(built_surface):
+    offenders, leaks = {}, {}
+    for name, b in built_surface.items():
         problems = []
-        if "CartesianProduct" in plan:
+        if "CartesianProduct" in b.executed_plan:
             problems.append("CartesianProduct")
         # a single-partition exchange directly under a full Sort is the
         # global-sort shape; TakeOrderedAndProject does not plan this way
-        if re.search(r"Sort .*\n[^\n]*Exchange SinglePartition", plan):
+        if re.search(r"Sort .*\n[^\n]*Exchange SinglePartition",
+                     b.executed_plan):
             problems.append("global sort via SinglePartition exchange")
         if problems:
             offenders[name] = problems
+        # every cache a build makes is released with its scope
+        if b.leaked_rdds or b.leaked_cache:
+            leaks[name] = (sorted(b.leaked_rdds), b.leaked_cache)
     assert not offenders, f"plan hazards: {offenders}"
-    too_big = {n: c for n, c in plan_chars.items()
-               if c >= _MAX_ANALYZED_PLAN_CHARS}
+    assert not leaks, f"caches left after released(): {leaks}"
+    too_big = {n: b.analyzed_chars for n, b in built_surface.items()
+               if b.analyzed_chars >= _MAX_ANALYZED_PLAN_CHARS}
     assert not too_big, f"analyzed plans over the bound: {too_big}"
-    new = {n: c for n, c in jobs.items() if n not in _JOBS_AT_BUILD}
+    new = {n: b.jobs for n, b in built_surface.items()
+           if b.jobs and n not in _JOBS_AT_BUILD}
     assert not new, f"builds that newly launch Spark jobs: {new}"
 
 
@@ -492,6 +466,51 @@ def test_default_driver_memory_fits_the_host(tmp_path):
     assert _default_driver_memory(str(tmp_path / "absent")) == "16g"
 
 
+def test_released_scope_is_innermost_per_thread_and_exception_safe():
+    """A scope releases exactly what was persisted while it was the
+    innermost open one, also when it exits by an exception; outside any
+    scope nothing is released; another thread's scopes are its own."""
+    import threading
+
+    from datalake_spark.session import persisted, released
+
+    class Frame:
+        def __init__(self):
+            self.cached = False
+
+        def persist(self):
+            self.cached = True
+            return self
+
+        def unpersist(self):
+            self.cached = False
+
+    loose, outer, inner, other = Frame(), Frame(), Frame(), Frame()
+    persisted(loose)
+    thread_in_scope, thread_done = threading.Event(), threading.Event()
+
+    def other_thread():
+        with released():
+            persisted(other)
+            thread_in_scope.set()
+            thread_done.wait(30)
+
+    t = threading.Thread(target=other_thread)
+    t.start()
+    assert thread_in_scope.wait(30)
+    with pytest.raises(RuntimeError):
+        with released():
+            persisted(outer)
+            with released():
+                persisted(inner)
+            assert not inner.cached and outer.cached
+            raise RuntimeError("batch failed")
+    assert not outer.cached and loose.cached and other.cached
+    thread_done.set()
+    t.join(30)
+    assert not t.is_alive() and not other.cached
+
+
 def test_commit_conflict_caught_only_by_retry_helper():
     """Every optimistic-commit retry runs through catalog._retry_commit:
     nothing else under the package catches CommitConflict, so a
@@ -518,6 +537,42 @@ def test_commit_conflict_caught_only_by_retry_helper():
         visit(ast.parse(path.read_text()),
               path.relative_to(root).as_posix(), None)
     assert found == [("catalog.py", "_retry_commit")]
+
+
+def test_persist_only_through_the_scope_helper():
+    """Every cache under the package is made by session.persisted, so an
+    enclosing released() scope owns its release: no other function calls
+    ``.persist()`` or ``.cache()``, and the deleted frame-list
+    out-parameter does not come back beside the scope."""
+    import datalake_spark
+
+    # spelled in two parts so that grepping the tree for the deleted
+    # name finds no use of it
+    banned = "frames" + "_out"
+    root = pathlib.Path(datalake_spark.__file__).parent
+    found, uses = [], []
+
+    def visit(node, path, fn):
+        for child in ast.iter_child_nodes(node):
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("persist", "cache")
+            ):
+                found.append((path, fn))
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, path, child.name)
+            else:
+                visit(child, path, fn)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        text = path.read_text()
+        visit(ast.parse(text), rel, None)
+        if banned in text:
+            uses.append(rel)
+    assert found == [("session.py", "persisted")]
+    assert not uses
 
 
 def test_spread_floor_declines_on_any_arrow_error(spark, tmp_path,

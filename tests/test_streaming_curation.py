@@ -8,6 +8,7 @@ import pytest
 
 from datalake_spark.export import read_training_shard
 from datalake_spark.streaming.curation import StreamingCurator
+from tests.conftest import rdd_ids
 
 T0 = 1_420_070_400_000
 
@@ -360,6 +361,33 @@ class TestComposedCurateIndex:
         assert man2["epochs"] == man1["epochs"]
         assert files1 == files2                    # shards: same names
         assert ids1 == ids2                        # ... same contents
+
+    def test_crashed_batch_releases_its_caches(self, spark, tmp_path):
+        """A micro-batch that crashes after the index append (near-dup
+        stage on) must release the batch, probe and survivor caches: a
+        daemon replaying crashed batches would otherwise grow its cache
+        by one batch's frames per crash."""
+        idx, _ = self._index_and_landing(spark, tmp_path)
+        cur = StreamingCurator(
+            spark, str(tmp_path / "shards"), n_shards=2,
+            near_dup_threshold=0.5, ann_index=idx,
+        )
+
+        def crash():
+            raise RuntimeError("crash after index append")
+
+        cur._crash_hooks["indexed"] = crash
+        emb = spark.read.parquet(
+            "/root/testdata/sf0.001/embeddings.parquet"
+        )
+        batch = spark.createDataFrame(
+            [(i, _good(i), "en", T0 + i) for i in range(4)],
+            "doc_id long, text string, lang string, ms long",
+        ).join(emb.selectExpr("vec_id AS doc_id", "embedding"), "doc_id")
+        before = rdd_ids(spark)
+        with pytest.raises(RuntimeError, match="crash after index append"):
+            cur._write_batch(batch, epoch=0)
+        assert rdd_ids(spark) - before == set()
 
     def test_null_embedding_curates_but_does_not_index(
         self, spark, tmp_path
