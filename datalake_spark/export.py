@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -154,20 +155,45 @@ def compact_shards(
     writer has fragmented it past the threshold; returns whether a
     rewrite ran.  Membership and order live in the persisted shard/_skey
     columns, so the rewrite is a pure repartition+sort — no re-hash, and
-    a training loader sees identical shards afterwards.  Local-mode
-    overwrite-in-place; on object storage, write to a version dir and
-    flip a manifest exactly like Catalog.compact."""
+    a training loader sees identical shards afterwards.
+
+    The rewrite reads the live layout and writes a staging sibling
+    directory, then swaps it in by two renames (live → ``.old``, staging
+    → live) and moves over what is not shard data (the manifest, a
+    curator's ``_signatures`` store).  Nothing is cached or
+    checkpointed, so a long-lived caller keeps no copy of the layout per
+    compaction.  On object storage, write to a version dir and flip a
+    manifest exactly like Catalog.compact."""
     counts = shard_file_counts(path)
     if not counts or max(counts.values()) <= max_files_per_shard:
         return False
-    df = spark.read.parquet(path)
-    n_shards = len(counts)
-    # materialize before the overwrite clobbers the source files
-    rows = df.repartition(n_shards, F.col(SHARD_COL)).sortWithinPartitions(
-        KEY_COL
-    ).localCheckpoint(eager=True)
-    rows.write.mode("overwrite").partitionBy(SHARD_COL).parquet(path)
+    path = path.rstrip("/")
+    staging, old = f"{path}.compacting", f"{path}.old"
+    # an earlier compaction that crashed after its swap: finish it
+    if os.path.isdir(old):
+        _carry_over(old, path)
+        shutil.rmtree(old)
+    shutil.rmtree(staging, ignore_errors=True)
+    spark.read.parquet(path).repartition(
+        len(counts), F.col(SHARD_COL)
+    ).sortWithinPartitions(KEY_COL).write.partitionBy(SHARD_COL).parquet(
+        staging
+    )
+    os.rename(path, old)
+    os.rename(staging, path)
+    _carry_over(old, path)
+    shutil.rmtree(old)
     return True
+
+
+def _carry_over(src: str, dst: str) -> None:
+    """Move the entries of ``src`` that are not shard data and that
+    ``dst`` lacks into ``dst``."""
+    for name in os.listdir(src):
+        if not name.startswith(f"{SHARD_COL}=") and not os.path.exists(
+            os.path.join(dst, name)
+        ):
+            os.rename(os.path.join(src, name), os.path.join(dst, name))
 
 
 def write_webdataset(

@@ -20,7 +20,6 @@ from datalake_spark.functions.text import (
     lang_id,
     doc_fingerprint,
 )
-from datalake_spark.functions.vectors import cosine_similarity, dot, l2_norm
 
 __all__ = [
     "bucket_span_col",
@@ -35,7 +34,4 @@ __all__ = [
     "quality_score",
     "lang_id",
     "doc_fingerprint",
-    "cosine_similarity",
-    "dot",
-    "l2_norm",
 ]

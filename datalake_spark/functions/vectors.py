@@ -11,23 +11,6 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Dot product of two equal-length arrays, accumulated in double."""
-    return F.aggregate(
-        F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def l2_norm(a: Column | str) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
 def quantize_micro(a: Column | str) -> Column:
     """array<long> of FLOOR(x*1e6 + 0.5) per component — the repo's 'd'
     canon applied to the embedding itself.  Pure IEEE double ops on the
@@ -40,41 +23,47 @@ def quantize_micro(a: Column | str) -> Column:
     )
 
 
+def micro_dot(qa: Column | str, qb: Column | str) -> Column:
+    """Exact BIGINT dot product of two :func:`quantize_micro` arrays
+    (``micro_dot(q, q)`` is the micro norm-square).  NULL when either
+    array is NULL, holds a NULL, or the two differ in length —
+    ``zip_with`` pads the shorter one with NULLs."""
+    return F.aggregate(
+        F.zip_with(_c(qa), _c(qb), lambda x, y: x * y),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
+def micro_cosine(dot: Column, na: Column, nb: Column) -> Column:
+    """The one cosine finish: exact BIGINT micro dot and norm-squares to a
+    double through fixed IEEE ops (a cast below 2^53 is exact; sqrt and
+    division are correctly rounded in every engine), so any engine and
+    any accumulation order give the identical bits.
+
+    Malformed input gets the -2.0 sentinel, below the cosine range: a
+    zero norm (under Spark 4's default ANSI mode 0/0 throws
+    DIVIDE_BY_ZERO, so one failed-encoder all-zero embedding would kill
+    the job), and a NULL sum — a NULL vector, a NULL component, or two
+    vectors of different length.  Such a pair ranks after every real
+    cosine in a top-k and fails every similarity threshold."""
+    den = F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))
+    return F.coalesce(
+        F.when(den > 0, dot.cast("double") / den), F.lit(-2.0)
+    )
+
+
 def cosine_micro_exact(a: Column | str, b: Column | str) -> Column:
-    """Cross-engine BIT-IDENTICAL cosine: quantize components to micro
-    ints, fold dot and norms as exact BIGINT sums (order-independent),
-    and finish with fixed IEEE double ops (cast<2^53 is exact, sqrt and
-    div are correctly rounded everywhere).  A plain double fold's sum
-    depends on accumulation order, and a ≤1-ulp disagreement is enough
-    to flip a nearest-centroid assignment and swap entire IVF probe
-    cells — observed at the sf1.0 scale run (r6) on near-parallel
+    """Cross-engine BIT-IDENTICAL cosine of two embeddings: quantize the
+    components to micro ints, fold dot and norms as exact BIGINT sums
+    (order-independent), then :func:`micro_cosine`.  A plain double
+    fold's sum depends on accumulation order, and a ≤1-ulp disagreement
+    is enough to flip a nearest-centroid assignment and swap entire IVF
+    probe cells — observed at the sf1.0 scale run (r6) on near-parallel
     vectors; this ranking key cannot drift."""
     qa, qb = quantize_micro(a), quantize_micro(b)
-    zero = F.lit(0).cast("long")
-
-    def isum(arr):
-        return F.aggregate(arr, zero, lambda acc, x: acc + x)
-
-    d = isum(F.zip_with(qa, qb, lambda x, y: x * y))
-    na = isum(F.transform(qa, lambda x: x * x))
-    nb = isum(F.transform(qb, lambda x: x * x))
-    den = F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))
-    # zero-norm guard: under Spark 4's default ANSI mode 0/0 THROWS
-    # DIVIDE_BY_ZERO — one failed-encoder all-zero embedding would kill
-    # the whole job (and pre-ANSI it NaN'd, which both engines rank
-    # ABOVE every real cosine).  -2.0 sits below the cosine range, so a
-    # zero vector ranks last in every top-k and fails every >= threshold
-    # filter — in DuckDB replays the same rows produce NaN, which also
-    # fails thresholds and ties-to-tiebreak in all-zero partitions; the
-    # few oracles that RANK mixed zero/non-zero candidates carry an
-    # explicit ISNAN→-2.0 CASE twin.
-    return F.when(den > 0, d.cast("double") / den).otherwise(F.lit(-2.0))
-
-
-def normalize(a: Column | str) -> Column:
-    """Unit-normalize an embedding (array<double> out)."""
-    n = l2_norm(a)
-    return F.transform(_c(a), lambda x: x.cast("double") / n)
+    return micro_cosine(micro_dot(qa, qb), micro_dot(qa, qa),
+                        micro_dot(qb, qb))
 
 
 def quantize_micro_unit(a: Column | str) -> Column:
@@ -87,10 +76,7 @@ def quantize_micro_unit(a: Column | str) -> Column:
     cosine (||u-v||² = 2-2·cos for unit u,v), which is what lets PQ's ADC
     — an L2 machine — answer cosine queries."""
     qa = quantize_micro(a)
-    zero = F.lit(0).cast("long")
-    nsq = F.aggregate(
-        F.transform(qa, lambda x: x * x), zero, lambda acc, x: acc + x
-    )
+    nsq = micro_dot(qa, qa)
     # zero-norm guard: an all-zero (or sub-micro) embedding — a classic
     # failed-encoder artifact — would divide 0/0 into NaN components and
     # poison every distance against it.  Divisor 1 pins its unit form to

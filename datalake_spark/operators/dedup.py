@@ -32,6 +32,9 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from datalake_spark.functions.text import doc_fingerprint, tokenize
+from datalake_spark.functions.vectors import (
+    micro_cosine, micro_dot, quantize_micro,
+)
 from datalake_spark.session import persisted
 
 
@@ -749,9 +752,11 @@ def connected_components(
     O(log(component diameter)) rounds, not O(diameter) — the same
     doubling idea as the alternating small-star/large-star MapReduce
     algorithm.  Each round is two shuffles over the edge list; the driver
-    loop only checks a per-round convergence count.  Lineage is cut every
-    round with localCheckpoint (swap for checkpoint() against a cluster
-    checkpoint dir when running distributed).
+    loop only checks a per-round convergence count.  Each round's labels
+    are cached through ``session.persisted`` (so the caller's
+    ``released()`` scope frees them) and re-read through a plan that is
+    one leaf over the cache, which keeps every round's analyzed plan the
+    same size.
 
     Near-dup clusters are typically tiny and shallow; the loop exits on
     the first round with no label changes.  ``max_iter`` bounds
@@ -775,13 +780,12 @@ def connected_components(
     )
     if edges.count() <= local_edge_budget:
         return _local_components(edges)
-    # the edge list is re-joined every round: the truncated lineage keeps
-    # upstream constraints out of the round-plan analysis
-    edges = edges.localCheckpoint()
-    comp = edges.select(F.col("a").alias("id")).distinct().withColumn(
+    # the edge list is re-joined every round: the cut keeps upstream
+    # constraints out of the round-plan analysis
+    edges = _over_cache(edges)
+    comp = _cut(edges.select(F.col("a").alias("id")).distinct().withColumn(
         "comp", F.col("id")
-    )
-    comp = comp.localCheckpoint()
+    ))
     for _ in range(max_iter):
         # (a) edge relaxation: min over own and neighbors' labels.
         # Formulated as join+least rather than union+min: a union whose
@@ -816,7 +820,7 @@ def connected_components(
             )
             .select("id", F.col("comp2").alias("comp"))
         )
-        compressed = compressed.localCheckpoint()
+        compressed = _cut(compressed)
         changed = (
             compressed.alias("n")
             .join(comp.alias("o"), "id")
@@ -828,6 +832,24 @@ def connected_components(
         if changed == 0:
             break
     return comp.select("id", F.col("comp").alias("cluster_id"))
+
+
+def _over_cache(df: DataFrame) -> DataFrame:
+    """A persisted, filled ``df`` as a frame whose plan is one leaf over
+    its cache: a lineage cut that, unlike ``localCheckpoint``, the
+    enclosing ``released()`` scope frees.  The rows never leave the
+    JVM."""
+    jdf = df._jdf
+    return DataFrame(
+        df.sparkSession._jsparkSession.createDataFrame(jdf.rdd(), jdf.schema()),
+        df.sparkSession,
+    )
+
+
+def _cut(df: DataFrame) -> DataFrame:
+    df = persisted(df)
+    df.count()
+    return _over_cache(df)
 
 
 def _fuzzy_variants(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -1431,10 +1453,13 @@ def semantic_dedup(
     distance-ranked one when fidelity to the paper matters more than a
     stable id-only contract).
 
-    Exactness: dot products and norms accumulate through DECIMAL(30,12)
-    sums of double products — partitioning/accumulation-order
-    independent, bit-identical across engines (the embedding_near_dup
-    discipline)."""
+    Exactness: the cosine is functions/vectors.cosine_micro_exact's
+    arithmetic — exact BIGINT sums over micro-quantized components —
+    so it is partitioning/accumulation-order independent and
+    bit-identical across engines.  Malformed input: a NULL vector, a
+    NULL component, or two vectors of different length have no cosine
+    (the -2.0 sentinel), so such a doc pairs with nothing and keeps
+    itself; a NULL or empty vector gets a NULL ``cluster``."""
     pairs, assign = _semantic_cluster_pairs(
         emb, k, iters, threshold, id_col, vec_col
     )
@@ -1492,10 +1517,11 @@ def _semantic_cluster_pairs(
     k_is_default = k is None
     if k is None:
         k = _SEMANTIC_DEFAULT_K
-    # both shared frames persist: assign feeds the element join AND the
-    # final verdict join; el feeds norms + both pair sides — without the
-    # cache each consumer re-runs the k-means lineage / embedding scan
-    # (the repo's standing shared-frame discipline, test_plan_hygiene)
+    # both shared frames persist: assign feeds the guardrail count AND
+    # the rows join; rows feeds both pair sides and the verdict join —
+    # without the cache each consumer re-runs the k-means lineage /
+    # embedding scan (the repo's standing shared-frame discipline,
+    # test_plan_hygiene)
     assign = persisted(kmeans_iterate(
         emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
     ).select(F.col(id_col).alias("_aid"), "cluster"))
@@ -1524,60 +1550,70 @@ def _semantic_cluster_pairs(
                 RuntimeWarning,
                 stacklevel=3,
             )
-    el = persisted(
-        emb.select(
-            F.col(id_col).alias("_vid"),
-            F.posexplode(F.col(vec_col)).alias("_pos", "_val"),
-        )
-        .withColumn("_val", F.col("_val").cast("double"))
-        .join(assign, F.col("_vid") == F.col("_aid"))
-        .select("_vid", "cluster", "_pos", "_val")
+    # every input doc gets a row (a NULL vector has no k-means
+    # assignment: NULL cluster, which pairs with nothing)
+    rows = persisted(_micro_rows(
+        emb.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_vec"))
+        .join(assign, F.col("_vid") == F.col("_aid"), "left")
+    ).select("_vid", "cluster", "_q", "_nsq"))
+    pairs = _verified_pairs(_cluster_pairs(rows, rows), threshold).select(
+        "doc_a", "doc_b"
     )
-    norms = el.groupBy("_vid").agg(
-        F.sum((F.col("_val") * F.col("_val")).cast("decimal(30,12)"))
-        .cast("double")
-        .alias("_norm_sq")
+    return pairs, rows.select(F.col("_vid").alias("_aid"), "cluster")
+
+
+def _micro_rows(df: DataFrame) -> DataFrame:
+    """``df`` plus the micro components ``_q`` of its ``_vec`` column and
+    their exact norm-square ``_nsq`` — computed once per doc, not once
+    per pair."""
+    return df.withColumn("_q", quantize_micro("_vec")).withColumn(
+        "_nsq", micro_dot("_q", "_q")
     )
-    a = el.select(
-        F.col("_vid").alias("_ida"), "cluster",
-        F.col("_pos").alias("_pos"), F.col("_val").alias("_va"),
+
+
+def _cluster_pairs(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Same-cluster pairs ``_ida < _idb`` of two :func:`_micro_rows`
+    frames with both vectors on the row: (_ida, _idb, _dot, _na, _nb).
+    Neither side is hinted to broadcast — each can hold one row per
+    corpus doc (the r1 lesson above; pinned by test_plan_hygiene)."""
+    a = a.select(F.col("_vid").alias("_ida"), "cluster",
+                 F.col("_q").alias("_qa"), F.col("_nsq").alias("_na"))
+    b = b.select(F.col("_vid").alias("_idb"), F.col("cluster").alias("_clb"),
+                 F.col("_q").alias("_qb"), F.col("_nsq").alias("_nb"))
+    return a.join(
+        b, (a["cluster"] == b["_clb"]) & (a["_ida"] < b["_idb"])
+    ).select("_ida", "_idb", micro_dot("_qa", "_qb").alias("_dot"),
+             "_na", "_nb")
+
+
+def _verified_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
+    """The SemDeDup pair verify shared by the batch and incremental
+    paths: (_ida, _idb, _dot, _na, _nb) exact micro sums → (doc_a, doc_b,
+    cosine) at or above ``threshold``."""
+    cos = micro_cosine(F.col("_dot"), F.col("_na"), F.col("_nb"))
+    return pairs.select(
+        F.col("_ida").alias("doc_a"), F.col("_idb").alias("doc_b"),
+        cos.alias("cosine"),
+    ).filter(F.col("cosine") >= F.lit(threshold))
+
+
+class StaleSemanticIndex(ValueError):
+    """A standing SemDeDup index whose ``_norm_sq`` is not the exact
+    BIGINT micro norm-square — written before the cosine moved to the
+    micro-int64 arithmetic.  Its norms are in other units than every
+    probe's dot sums; rebuild it with :func:`semantic_index_build`."""
+
+
+def _index_parts(rows: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(elements, norms) of the standing index from (_vid, cluster, _vec)
+    rows: each vector exploded once, and its exact micro norm-square."""
+    elements = rows.select(
+        "_vid", "cluster", F.posexplode("_vec").alias("_pos", "_val")
+    ).withColumn("_val", F.col("_val").cast("double"))
+    norms = _micro_rows(rows).select(
+        "_vid", "cluster", F.col("_nsq").alias("_norm_sq")
     )
-    b = el.select(
-        F.col("_vid").alias("_idb"), F.col("cluster").alias("_clb"),
-        F.col("_pos").alias("_pos"), F.col("_val").alias("_vb"),
-    )
-    dots = (
-        a.join(b, (a["cluster"] == b["_clb"]) & (a["_pos"] == b["_pos"]))
-        .filter(F.col("_ida") < F.col("_idb"))
-        .groupBy("_ida", "_idb")
-        .agg(
-            F.sum((F.col("_va") * F.col("_vb")).cast("decimal(30,12)"))
-            .cast("double")
-            .alias("_dot")
-        )
-    )
-    # norms has one row per CORPUS document — never broadcast it (the r1
-    # lesson above: corpus-sized frames OOM as broadcasts at scale; the
-    # post-agg dots frame is the small side if anything is, and AQE picks
-    # that at runtime).  Pinned by test_plan_hygiene's no-norms-broadcast
-    # sweep.
-    na = norms.select(F.col("_vid").alias("_ida"), F.col("_norm_sq").alias("_na"))
-    nb = norms.select(F.col("_vid").alias("_idb"), F.col("_norm_sq").alias("_nb"))
-    # Zero-norm guard: Spark 4 ANSI mode turns 0.0/0.0 into a job-killing
-    # DIVIDE_BY_ZERO, so an all-zero embedding would abort the whole dedup
-    # (and poison every streaming replay of the same plan).  -2.0 is below
-    # the cosine range, so the pair simply fails any sane threshold.
-    cos = F.when(
-        (F.col("_na") > 0) & (F.col("_nb") > 0),
-        F.col("_dot") / (F.sqrt("_na") * F.sqrt("_nb")),
-    ).otherwise(F.lit(-2.0))
-    pairs = (
-        dots.join(na, "_ida")
-        .join(nb, "_idb")
-        .filter(cos >= F.lit(threshold))
-        .select(F.col("_ida").alias("doc_a"), F.col("_idb").alias("doc_b"))
-    )
-    return pairs, assign
+    return elements, norms
 
 
 def semantic_index_build(
@@ -1598,8 +1634,9 @@ def semantic_index_build(
       exploded ONCE and tagged with its fixed-centroid assignment.
       Persist/write partitioned by ``cluster`` so batch probes prune to
       the clusters they touch.
-    - ``norms``: (_vid, cluster, _norm_sq) — per-doc squared norm,
-      DECIMAL-accumulated, computed ONCE at build time.
+    - ``norms``: (_vid, cluster, _norm_sq) — per-doc exact BIGINT
+      micro norm-square (functions/vectors.micro_dot of the vector's
+      micro components with themselves), computed ONCE at build time.
 
     A maintenance pipeline builds this once (or appends signed batches to
     it), writes all three to parquet, and every later
@@ -1621,20 +1658,9 @@ def semantic_index_build(
     a = assign_to_centroids(
         corpus, centroids, id_col=id_col, vec_col=vec_col, keep_vec=True
     )
-    elements = (
-        a.select(
-            F.col(id_col).alias("_vid"),
-            "cluster",
-            F.posexplode(F.col(vec_col)).alias("_pos", "_val"),
-        )
-        .withColumn("_val", F.col("_val").cast("double"))
-        .select("_vid", "cluster", "_pos", "_val")
-    )
-    norms = elements.groupBy("_vid", "cluster").agg(
-        F.sum((F.col("_val") * F.col("_val")).cast("decimal(30,12)"))
-        .cast("double")
-        .alias("_norm_sq")
-    )
+    elements, norms = _index_parts(a.select(
+        F.col(id_col).alias("_vid"), "cluster", F.col(vec_col).alias("_vec")
+    ))
     return centroids, elements, norms
 
 
@@ -1678,23 +1704,37 @@ def semantic_incremental_pairs(
 
     Output: (doc_a, doc_b, cosine) with doc_a < doc_b by id (batch ids
     may interleave with corpus ids — orientation is by id, not side);
-    every pair involves at least one NEW doc.  Cosine is the exact
-    DECIMAL-accumulated value, engine-portable.
+    every pair involves at least one NEW doc.  Cosine is
+    functions/vectors.cosine_micro_exact's value, bit for bit: new × new
+    pairs fold both vectors on the row, new × corpus pairs sum exact
+    BIGINT products of the batch's micro components with the exploded
+    index's ``floor(_val*1e6+0.5)`` against the index's BIGINT norms.
+    Malformed input is handled as in :func:`semantic_dedup`: a pair with
+    a NULL vector, a NULL component, or vectors of different length
+    never matches.  An index whose norms are not BIGINT (written before
+    the micro-int64 cosine) raises :class:`StaleSemanticIndex`.
 
     A per-batch driver loop in a long-lived session calls this inside
     ``session.released()``, or each batch leaks its cached element
     frames.
 
     ``batch_index_out`` (optional list) receives the batch's persisted
-    element frame (_vid, cluster, _pos, _val) so an index-maintaining
+    assigned rows (_vid, cluster, _vec, _q, _nsq) so an index-maintaining
     caller (streaming/semantic.py) can append survivors to the standing
-    index WITHOUT re-exploding and re-assigning the batch — the
-    assignment is paid exactly once per batch."""
+    index WITHOUT re-assigning the batch — the assignment is paid
+    exactly once per batch."""
     from datalake_spark.operators.similarity import assign_to_centroids
 
     el_old = norms_old = None
     if index is not None:
         centroids, el_old, norms_old = index
+        norm_t = dict(norms_old.dtypes)["_norm_sq"]
+        if norm_t != "bigint":
+            raise StaleSemanticIndex(
+                f"standing SemDeDup index norms are {norm_t}, not the exact "
+                "BIGINT micro norm-square: the index predates the "
+                "micro-int64 cosine — rebuild it with semantic_index_build"
+            )
     elif corpus is not None:
         centroids, el_old, norms_old = semantic_index_build(
             corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
@@ -1707,103 +1747,53 @@ def semantic_incremental_pairs(
     centroids = persisted(centroids)
 
     # row-local assignment with the vector on the row (r14): the batch
-    # explode reads the cluster tag in place — no batch-sized join back
+    # never explodes — its micro components ride the row
     a_new = assign_to_centroids(
         new, centroids, id_col=id_col, vec_col=vec_col, keep_vec=True
     )
-    el_new = persisted(
-        a_new.select(
-            F.col(id_col).alias("_vid"),
-            "cluster",
-            F.posexplode(F.col(vec_col)).alias("_pos", "_val"),
-        )
-        .withColumn("_val", F.col("_val").cast("double"))
-        .select("_vid", "cluster", "_pos", "_val")
-    )
+    rows = persisted(_micro_rows(a_new.select(
+        F.col(id_col).alias("_vid"), "cluster", F.col(vec_col).alias("_vec")
+    )))
     if batch_index_out is not None:
-        batch_index_out.append(el_new)
-    norms_new = el_new.groupBy("_vid").agg(
-        F.sum((F.col("_val") * F.col("_val")).cast("decimal(30,12)"))
-        .cast("double")
-        .alias("_norm_sq")
-    )
+        batch_index_out.append(rows)
+    pairs = _cluster_pairs(rows, rows)
     if el_old is not None:
         # prune the corpus side to clusters the batch actually touched:
         # ≤k distinct cluster ids — a legitimately TINY broadcast (bounded
         # by k, not corpus size), and against a cluster-partitioned
         # parquet index this is partition pruning
-        touched = el_new.select("cluster").distinct()
-        el_old = persisted(el_old.join(
-            F.broadcast(touched), "cluster", "left_semi"
-        ))
-        # norms too: every pair id lives in a touched cluster, so corpus
-        # norms outside them can never match a dots row — prune before
-        # the shuffle instead of joining |corpus| rows against ≤k
-        # clusters' worth of pairs
-        norms = norms_new.unionByName(
-            norms_old.join(F.broadcast(touched), "cluster", "left_semi")
-            .select("_vid", "_norm_sq")
+        touched = F.broadcast(rows.select("cluster").distinct())
+        old = el_old.join(touched, "cluster", "left_semi").select(
+            F.col("_vid").alias("_idc"), F.col("cluster").alias("_clc"),
+            "_pos",
+            F.floor(F.col("_val") * 1_000_000 + F.lit(0.5))
+            .cast("long").alias("_qc"),
         )
-    else:
-        norms = norms_new
-    el_all = (
-        el_new.unionByName(el_old) if el_old is not None else el_new
-    )
-
-    def _a(el):
-        return el.select(
-            F.col("_vid").alias("_ida"), "cluster",
-            F.col("_pos").alias("_pos"), F.col("_val").alias("_va"),
+        # one join row per (batch doc, corpus element) of a shared
+        # cluster; the corpus vector's length is its element count, so
+        # a length mismatch (or a corpus doc indexed twice) NULLs the dot
+        x = rows.join(
+            old, (rows["cluster"] == old["_clc"]) & (rows["_vid"] != old["_idc"])
         )
-
-    def _b(el):
-        return el.select(
-            F.col("_vid").alias("_idb"), F.col("cluster").alias("_clb"),
-            F.col("_pos").alias("_pos"), F.col("_val").alias("_vb"),
-        )
-
-    def _cands(a, b):
-        return a.join(
-            b, (a["cluster"] == b["_clb"]) & (a["_pos"] == b["_pos"])
-        ).filter(F.col("_ida") < F.col("_idb")).select(
-            "_ida", "_idb", "_va", "_vb"
-        )
-
-    # (new x everything, id-ordered) ∪ (old x new where the old id is
-    # smaller) = every >=1-new pair exactly once; corpus x corpus never
-    # enters a join — the whole point of the incremental mode
-    cand = _cands(_a(el_new), _b(el_all))
-    if el_old is not None:
-        cand = cand.unionByName(_cands(_a(el_old), _b(el_new)))
-    dots = cand.groupBy("_ida", "_idb").agg(
-        F.sum((F.col("_va") * F.col("_vb")).cast("decimal(30,12)"))
-        .cast("double")
-        .alias("_dot")
-    )
-    # norms is corpus∪batch-sized — shuffled join, never broadcast (same
-    # r1 lesson as _semantic_cluster_pairs; pinned by test_plan_hygiene)
-    na = norms.select(F.col("_vid").alias("_ida"), F.col("_norm_sq").alias("_na"))
-    nb = norms.select(F.col("_vid").alias("_idb"), F.col("_norm_sq").alias("_nb"))
-    return (
-        dots.join(na, "_ida")
-        .join(nb, "_idb")
-        .withColumn(
-            # Zero-norm guard (ANSI DIVIDE_BY_ZERO — see
-            # _semantic_cluster_pairs): -2.0 sentinel ranks below any
-            # real cosine and fails every threshold.
-            "cosine",
+        dots = x.groupBy("_vid", "_idc").agg(
             F.when(
-                (F.col("_na") > 0) & (F.col("_nb") > 0),
-                F.col("_dot") / (F.sqrt("_na") * F.sqrt("_nb")),
-            ).otherwise(F.lit(-2.0)),
+                F.count(F.lit(1)) == F.max(F.size("_q")),
+                F.sum(F.try_element_at("_q", F.col("_pos") + 1) * F.col("_qc")),
+            ).alias("_dot"),
+            F.max("_nsq").alias("_na"),
         )
-        .filter(F.col("cosine") >= F.lit(threshold))
-        .select(
-            F.col("_ida").alias("doc_a"),
-            F.col("_idb").alias("doc_b"),
-            "cosine",
+        # norms has one row per corpus doc — shuffled join, never
+        # broadcast (same r1 lesson; pinned by test_plan_hygiene)
+        norms = norms_old.join(touched, "cluster", "left_semi").select(
+            F.col("_vid").alias("_idc"), F.col("_norm_sq")
         )
-    )
+        new_old = dots.join(norms, "_idc")
+        pairs = pairs.unionByName(new_old.select(
+            F.least("_vid", "_idc").alias("_ida"),
+            F.greatest("_vid", "_idc").alias("_idb"),
+            "_dot", "_na", F.col("_norm_sq").alias("_nb"),
+        ))
+    return _verified_pairs(pairs, threshold)
 
 
 def _hamming_banded(

@@ -51,9 +51,10 @@ def brute_force_topk(
     c = candidates.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"))
     sims = (
         c.join(F.broadcast(q))
-        # a zero-norm candidate yields the -2.0 sentinel (see
-        # cosine_micro_exact): ranks last in every top-k instead of
-        # killing the job (ANSI 0/0) or NaN-ranking first
+        # a zero-norm, NULL, NULL-component or different-length vector
+        # yields the -2.0 sentinel (see micro_cosine): ranks last in
+        # every top-k instead of killing the job (ANSI 0/0) or
+        # NaN-ranking first
         .withColumn("cosine", cosine_micro_exact("q_vec", "c_vec"))
         .select("q_id", "c_id", "cosine")
     )

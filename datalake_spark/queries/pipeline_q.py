@@ -2,9 +2,11 @@
 Jaccard near-dup, text statistics/quality, embedding cosine top-k (brute-force
 ANN baseline), as-of join, sessionization.  All oracle-checked against DuckDB.
 
-Float discipline for cross-engine bit-equality: every dot product / norm is
-summed in DECIMAL (exact, order-insensitive) over identical double products,
-then surfaced as double.
+Float discipline for cross-engine bit-equality: every embedding cosine is
+functions/vectors.cosine_micro_exact's exact BIGINT sums over micro-quantized
+components (oracle twin: micro_cosine_ctes); k-means squared-L2 distances
+and centroid means are still summed in DECIMAL over identical double
+products, then surfaced as double.
 """
 
 from __future__ import annotations
@@ -263,145 +265,76 @@ JOIN sizes s ON s.doc_id = a.rep_id
 
 # ---------------------------------------------------------------------------
 # embedding_cosine_topk — brute-force cosine top-3 neighbors for 3 query
-# vectors.  Dot/norm sums go through DECIMAL(30,12) over double products so
-# both engines produce bit-identical similarities.  At scale: the query side
-# broadcasts; candidates stream; the LSH-bucketed variant (operators/
-# similarity.py) cuts the candidate set.
+# vectors: similarity.brute_force_topk, whose cosine is
+# functions/vectors.cosine_micro_exact (exact BIGINT sums over micro
+# components), so both engines produce bit-identical similarities.  At
+# scale: the query side broadcasts; candidates stream; the LSH-bucketed
+# variant (operators/similarity.py) cuts the candidate set.
 # ---------------------------------------------------------------------------
 _N_QUERY_VECS = 3
 _TOP_K = 3
 
 
-def _vec_elements(df: DataFrame, id_col: str) -> DataFrame:
-    return df.select(
-        F.col("vec_id").alias(id_col),
-        F.posexplode("embedding").alias("pos", "val"),
-    ).withColumn("val", F.col("val").cast("double"))
-
-
 def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r14 (guide §2.3/§2.4/§8): the pre-r14 plan exploded BOTH sides to
-    # (id, pos, val) rows and joined them ON pos — a corpus·dim shuffle
-    # into only `dim` distinct keys — plus a second corpus·dim shuffle
-    # for the norms groupBy.  The decision (top-k by cosine) depends
-    # only on per-row folds against the _N_QUERY_VECS query vectors, so
-    # both corpus-sized exchanges are removable: pack the queries (with
-    # their exact-decimal norms) into ONE broadcast row and compute
-    # every dot/norm as a row-local fold.  Arithmetic is term-for-term
-    # identical to the old aggregation — each product/square is cast to
-    # DECIMAL(30,12) BEFORE an exact decimal sum (order-independent),
-    # then cast double — so the values cannot drift (oracle-pinned).
-    # The only remaining exchange is the top-k window on q_id, which
-    # Spark 4's WindowGroupLimit pre-filters map-side to k rows per
-    # (query, partition) before the shuffle.
+    from datalake_spark.operators.similarity import brute_force_topk
+
     emb = load(spark, sf_dir, "embeddings")
-    # candidate side spread (r14): the row-local decimal folds run in
-    # the scan stage, which is a single task on the 1-split input; the
-    # metadata-gated floor parallelizes them (blanket-spread A/B already
-    # showed this entry as the one headline IMPROVEMENT, 0.76 vs 0.95).
-    cand_src = load(spark, sf_dir, "embeddings", spread=True)
-    dec = "decimal(30,12)"
-    acc_t = "decimal(38,12)"
-
-    def _norm_sq(arr):
-        # sum of per-element squares, each quantized to DECIMAL(30,12)
-        # exactly as the old sum((val*val)::decimal(30,12))
-        return F.aggregate(
-            F.transform(
-                arr,
-                lambda x: (x.cast("double") * x.cast("double")).cast(dec),
-            ),
-            F.lit(0).cast(acc_t),
-            lambda a, x: (a + x).cast(acc_t),
-        ).cast("double")
-
-    packed = (
-        emb.filter(F.col("vec_id") < _N_QUERY_VECS)
-        .select(
-            F.struct(
-                F.col("vec_id").alias("q_id"),
-                F.transform(
-                    "embedding", lambda x: x.cast("double")
-                ).alias("q_vec"),
-                _norm_sq(F.col("embedding")).alias("nq"),
-            ).alias("_q")
-        )
-        .agg(F.array_sort(F.collect_list("_q")).alias("_qs"))
-    )
-    dot = lambda q: F.aggregate(  # noqa: E731
-        F.zip_with(
-            F.col("c_vec_d"),
-            q["q_vec"],
-            lambda c, qx: (c * qx).cast(dec),
-        ),
-        F.lit(0).cast(acc_t),
-        lambda a, x: (a + x).cast(acc_t),
-    ).cast("double")
-    # zero-norm guard: ANSI 0/0 throws, pre-ANSI NaN ranks first in
-    # both engines — pin to -2.0 (rank last); the oracle carries the
-    # ISNAN CASE twin
-    cos = lambda q: F.when(  # noqa: E731
-        (q["nq"] > 0) & (F.col("nc") > 0),
-        dot(q) / (F.sqrt(q["nq"]) * F.sqrt("nc")),
-    ).otherwise(F.lit(-2.0))
-    sims = (
-        cand_src.filter(F.col("vec_id") >= _N_QUERY_VECS)
-        .join(F.broadcast(packed))
-        .select(
-            F.col("vec_id").alias("c_id"),
-            F.transform("embedding", lambda x: x.cast("double")).alias(
-                "c_vec_d"
-            ),
-            _norm_sq(F.col("embedding")).alias("nc"),
-            F.col("_qs"),
-        )
-        .select(
-            "c_id",
-            F.explode(
-                F.transform(
-                    "_qs",
-                    lambda q: F.struct(
-                        q["q_id"].alias("q_id"), cos(q).alias("cosine")
-                    ),
-                )
-            ).alias("_p"),
-        )
-        .select(F.col("_p.q_id").alias("q_id"), "c_id", F.col("_p.cosine"))
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        sims.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _TOP_K)
-        .select("q_id", "c_id", "rk", F.round("cosine", 8).alias("cosine_r"))
-    )
+    # candidate side spread (r14): the row-local cosine folds run in the
+    # scan stage, which is a single task on the 1-split input; the
+    # metadata-gated floor parallelizes them
+    cand = load(spark, sf_dir, "embeddings", spread=True)
+    return brute_force_topk(
+        emb.filter(F.col("vec_id") < _N_QUERY_VECS),
+        cand.filter(F.col("vec_id") >= _N_QUERY_VECS),
+        k=_TOP_K,
+    ).select("q_id", "c_id", "rk", F.round("cosine", 8).alias("cosine_r"))
 
 
-EMBEDDING_TOPK_SQL = f"""
-WITH el AS (
-  SELECT vec_id, CAST(UNNEST(embedding) AS DOUBLE) AS val,
-         UNNEST(generate_series(1, len(embedding))) AS pos
-  FROM embeddings),
-norms AS (
-  SELECT vec_id, CAST(SUM(CAST(val * val AS DECIMAL(30,12))) AS DOUBLE) AS norm_sq
-  FROM el GROUP BY vec_id),
-dots AS (
-  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         CAST(SUM(CAST(q.val * c.val AS DECIMAL(30,12))) AS DOUBLE) AS dot
-  FROM el q JOIN el c ON q.pos = c.pos
-  WHERE q.vec_id < {_N_QUERY_VECS} AND c.vec_id >= {_N_QUERY_VECS}
+def micro_cosine_ctes(el: str, pair_join: str) -> str:
+    """DuckDB twin of functions/vectors.cosine_micro_exact, shared by every
+    embedding-cosine oracle: CTEs ``qel`` (id, pos, qv), ``qnorms`` (id,
+    nsq) and ``qcos`` (id_a, id_b, cosine) over the (id, pos, val)
+    relation ``el``.  Components are FLOOR(val*1e6+0.5) as BIGINT, dot
+    and norm-squares exact BIGINT sums, and the finish is
+    micro_cosine's: -2.0 unless the norm product is positive.
+    ``pair_join`` extends ``qel a JOIN qel b ON a.pos = b.pos`` with the
+    candidate-pair constraint (and any WHERE)."""
+    den = "SQRT(CAST(na.nsq AS DOUBLE)) * SQRT(CAST(nb.nsq AS DOUBLE))"
+    return f"""qel AS (
+  SELECT id, pos, CAST(FLOOR(val * 1000000 + 0.5) AS BIGINT) AS qv
+  FROM {el}),
+qnorms AS (
+  SELECT id, CAST(SUM(qv * qv) AS BIGINT) AS nsq FROM qel GROUP BY id),
+qdots AS (
+  SELECT a.id AS id_a, b.id AS id_b, CAST(SUM(a.qv * b.qv) AS BIGINT) AS dt
+  FROM qel a JOIN qel b ON a.pos = b.pos {pair_join}
   GROUP BY 1, 2),
-sims AS (
-  SELECT q_id, c_id,
-         CASE WHEN ISNAN(dot / (SQRT(nq.norm_sq) * SQRT(nc.norm_sq)))
-              THEN -2.0
-              ELSE dot / (SQRT(nq.norm_sq) * SQRT(nc.norm_sq)) END AS cosine
-  FROM dots
-  JOIN norms nq ON nq.vec_id = q_id
-  JOIN norms nc ON nc.vec_id = c_id)
+qcos AS (
+  SELECT id_a, id_b,
+         CASE WHEN {den} > 0 THEN CAST(dt AS DOUBLE) / ({den})
+              ELSE -2.0 END AS cosine
+  FROM qdots
+  JOIN qnorms na ON na.id = id_a
+  JOIN qnorms nb ON nb.id = id_b)"""
+
+
+def _emb_elements(where: str = "") -> str:
+    """(id, pos, val) rows of the embeddings table, for micro_cosine_ctes."""
+    return f"""(
+  SELECT vec_id AS id, CAST(UNNEST(embedding) AS DOUBLE) AS val,
+         UNNEST(generate_series(1, len(embedding))) AS pos
+  FROM embeddings {where})"""
+
+
+_TOPK_PAIRS = micro_cosine_ctes(
+    _emb_elements(), f"AND a.id < {_N_QUERY_VECS} AND b.id >= {_N_QUERY_VECS}"
+)
+EMBEDDING_TOPK_SQL = f"""
+WITH {_TOPK_PAIRS}
 SELECT q_id, c_id, rk, ROUND(cosine, 8) AS cosine_r FROM (
-  SELECT q_id, c_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rk
-  FROM sims) WHERE rk <= {_TOP_K}
+  SELECT id_a AS q_id, id_b AS c_id, cosine,
+         ROW_NUMBER() OVER (PARTITION BY id_a ORDER BY cosine DESC, id_b) AS rk
+  FROM qcos) WHERE rk <= {_TOP_K}
 """
 
 
@@ -493,7 +426,7 @@ FROM sess GROUP BY user_id, session_id
 
 # ---------------------------------------------------------------------------
 # embedding_near_dup — embedding-cosine near-duplicate pairs: all (a < b)
-# pairs above a cosine threshold, exact decimal arithmetic.  The brute-force
+# pairs above a cosine threshold, micro-int64 exact cosine.  The brute-force
 # oracle form of the SRP/IVF candidate generation in operators/similarity.py;
 # bounded to a fixed id range so the pair count is SF-independent.  At scale
 # the same shape runs per LSH bucket instead of globally.
@@ -503,54 +436,29 @@ _ND_THRESHOLD = 0.35
 
 
 def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from datalake_spark.functions.vectors import cosine_micro_exact
+
     emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _ND_MAX_ID)
-    el = _vec_elements(emb, "vid")
-    norms = el.groupBy("vid").agg(
-        F.sum((F.col("val") * F.col("val")).cast("decimal(30,12)"))
-        .cast("double")
-        .alias("norm_sq")
-    )
-    a = el.select(F.col("vid").alias("id_a"), "pos", F.col("val").alias("val_a"))
-    b = el.select(F.col("vid").alias("id_b"), "pos", F.col("val").alias("val_b"))
-    dots = (
-        a.join(b, "pos")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.sum((F.col("val_a") * F.col("val_b")).cast("decimal(30,12)"))
-            .cast("double")
-            .alias("dot")
-        )
-    )
-    na = norms.select(F.col("vid").alias("id_a"), F.col("norm_sq").alias("na"))
-    nb = norms.select(F.col("vid").alias("id_b"), F.col("norm_sq").alias("nb"))
+    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
+    # the id range is bounded (_ND_MAX_ID rows), so one side broadcasts
+    # into a nested-loop join; the hint keeps the plan off
+    # CartesianProduct when the file-size estimate ignores the filter
     return (
-        dots.join(F.broadcast(na), "id_a")
-        .join(F.broadcast(nb), "id_b")
-        .withColumn("cosine", F.col("dot") / (F.sqrt("na") * F.sqrt("nb")))
+        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", cosine_micro_exact("va", "vb").alias("cosine"))
         .filter(F.col("cosine") >= _ND_THRESHOLD)
         .select("id_a", "id_b", F.round("cosine", 8).alias("cosine_r"))
     )
 
 
+_ND_PAIRS = micro_cosine_ctes(
+    _emb_elements(f"WHERE vec_id < {_ND_MAX_ID}"), "AND a.id < b.id"
+)
 EMBEDDING_NEAR_DUP_SQL = f"""
-WITH el AS (
-  SELECT vec_id, CAST(UNNEST(embedding) AS DOUBLE) AS val,
-         UNNEST(generate_series(1, len(embedding))) AS pos
-  FROM embeddings WHERE vec_id < {_ND_MAX_ID}),
-norms AS (
-  SELECT vec_id, CAST(SUM(CAST(val * val AS DECIMAL(30,12))) AS DOUBLE) AS norm_sq
-  FROM el GROUP BY vec_id),
-dots AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         CAST(SUM(CAST(a.val * b.val AS DECIMAL(30,12))) AS DOUBLE) AS dot
-  FROM el a JOIN el b ON a.pos = b.pos AND a.vec_id < b.vec_id
-  GROUP BY 1, 2)
-SELECT id_a, id_b, ROUND(dot / (SQRT(na.norm_sq) * SQRT(nb.norm_sq)), 8) AS cosine_r
-FROM dots
-JOIN norms na ON na.vec_id = id_a
-JOIN norms nb ON nb.vec_id = id_b
-WHERE dot / (SQRT(na.norm_sq) * SQRT(nb.norm_sq)) >= {_ND_THRESHOLD}
+WITH {_ND_PAIRS}
+SELECT id_a, id_b, ROUND(cosine, 8) AS cosine_r
+FROM qcos WHERE cosine >= {_ND_THRESHOLD}
 """
 
 
@@ -581,23 +489,7 @@ def embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 EMBEDDING_DEDUP_CLUSTERS_SQL = f"""
 WITH RECURSIVE
-el AS (
-  SELECT vec_id, CAST(UNNEST(embedding) AS DOUBLE) AS val,
-         UNNEST(generate_series(1, len(embedding))) AS pos
-  FROM embeddings WHERE vec_id < {_ND_MAX_ID}),
-norms AS (
-  SELECT vec_id, CAST(SUM(CAST(val * val AS DECIMAL(30,12))) AS DOUBLE) AS norm_sq
-  FROM el GROUP BY vec_id),
-dots AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         CAST(SUM(CAST(a.val * b.val AS DECIMAL(30,12))) AS DOUBLE) AS dot
-  FROM el a JOIN el b ON a.pos = b.pos AND a.vec_id < b.vec_id
-  GROUP BY 1, 2),
-pairs AS (
-  SELECT id_a, id_b FROM dots
-  JOIN norms na ON na.vec_id = id_a
-  JOIN norms nb ON nb.vec_id = id_b
-  WHERE dot / (SQRT(na.norm_sq) * SQRT(nb.norm_sq)) >= {_ND_THRESHOLD}),
+pairs AS (SELECT id_a, id_b FROM ({EMBEDDING_NEAR_DUP_SQL}) nd),
 edges AS (
   SELECT id_a AS a, id_b AS b FROM pairs
   UNION ALL SELECT id_b, id_a FROM pairs),
@@ -810,24 +702,13 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "cluster", "canonical", "keep")
 
 
+_SD_PAIRS = micro_cosine_ctes("el", """AND a.id < b.id
+  JOIN a2 ca ON ca.id = a.id
+  JOIN a2 cb ON cb.id = b.id AND cb.cid = ca.cid""")
 SEMANTIC_DEDUP_SQL = f"""
 WITH RECURSIVE {_KMEANS_CTES},
-norms AS (
-  SELECT id, CAST(SUM(CAST(val * val AS DECIMAL(30,12))) AS DOUBLE) AS norm_sq
-  FROM el GROUP BY id),
-sdots AS (
-  SELECT a.id AS id_a, b.id AS id_b,
-         CAST(SUM(CAST(a.val * b.val AS DECIMAL(30,12))) AS DOUBLE) AS dot
-  FROM el a
-  JOIN el b ON a.pos = b.pos AND a.id < b.id
-  JOIN a2 ca ON ca.id = a.id
-  JOIN a2 cb ON cb.id = b.id AND cb.cid = ca.cid
-  GROUP BY 1, 2),
-spairs AS (
-  SELECT id_a, id_b FROM sdots
-  JOIN norms na ON na.id = id_a
-  JOIN norms nb ON nb.id = id_b
-  WHERE dot / (SQRT(na.norm_sq) * SQRT(nb.norm_sq)) >= {_SD_THRESHOLD}),
+{_SD_PAIRS},
+spairs AS (SELECT id_a, id_b FROM qcos WHERE cosine >= {_SD_THRESHOLD}),
 sedges AS (
   SELECT id_a AS a, id_b AS b FROM spairs
   UNION ALL SELECT id_b, id_a FROM spairs),
@@ -863,6 +744,10 @@ def semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_a", "doc_b", "cosine")
 
 
+_SI_PAIRS = micro_cosine_ctes("el", """AND a.id < b.id
+  JOIN a3 ca ON ca.id = a.id
+  JOIN a3 cb ON cb.id = b.id AND cb.cid = ca.cid
+  WHERE a.id % 4 = 0 OR b.id % 4 = 0""")
 SEMANTIC_INCREMENTAL_SQL = f"""
 WITH el AS (
   SELECT vec_id AS id, CAST(UNNEST(embedding) AS DOUBLE) AS val,
@@ -911,24 +796,9 @@ a3 AS (
   SELECT id, cid FROM (
     SELECT id, cid, ROW_NUMBER() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
     FROM d3) WHERE rn = 1),
-norms AS (
-  SELECT id, CAST(SUM(CAST(val * val AS DECIMAL(30,12))) AS DOUBLE) AS norm_sq
-  FROM el GROUP BY id),
-idots AS (
-  SELECT a.id AS id_a, b.id AS id_b,
-         CAST(SUM(CAST(a.val * b.val AS DECIMAL(30,12))) AS DOUBLE) AS dot
-  FROM el a
-  JOIN el b ON a.pos = b.pos AND a.id < b.id
-  JOIN a3 ca ON ca.id = a.id
-  JOIN a3 cb ON cb.id = b.id AND cb.cid = ca.cid
-  WHERE a.id % 4 = 0 OR b.id % 4 = 0
-  GROUP BY 1, 2)
-SELECT id_a AS doc_a, id_b AS doc_b,
-       dot / (SQRT(na.norm_sq) * SQRT(nb.norm_sq)) AS cosine
-FROM idots
-JOIN norms na ON na.id = id_a
-JOIN norms nb ON nb.id = id_b
-WHERE dot / (SQRT(na.norm_sq) * SQRT(nb.norm_sq)) >= {_SD_THRESHOLD}
+{_SI_PAIRS}
+SELECT id_a AS doc_a, id_b AS doc_b, cosine
+FROM qcos WHERE cosine >= {_SD_THRESHOLD}
 """
 
 

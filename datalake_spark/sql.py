@@ -2,7 +2,7 @@
 engine's tables as views and its Python-side functions as SQL-callable
 UDFs/UDTFs, so every capability is reachable from plain SQL text.
 
-Column-expression helpers (tokenize, quality_score, cosine_similarity …)
+Column-expression helpers (tokenize, quality_score, cosine_micro_exact …)
 need no registration — they compile to the same Catalyst expressions SQL
 already has (split, aggregate, transform, …); what SQL cannot reach without
 registration is the Python-backed surface: blake2b (no Spark built-in), the

@@ -13,10 +13,11 @@ Replay safety (the at-least-once foreachBatch contract): every write this
 sink performs is keyed by epoch id and mode=overwrite — survivors land in
 ``vecs/epoch=N/``, index growth in ``_semindex/elements/epoch=N/`` and
 ``_semindex/norms/epoch=N/`` — so a crash-and-replay of an epoch re-runs
-the identical deterministic plan (exact-integer assignment, DECIMAL dot
-sums) and overwrites the same objects with the same contents.  Centroids
-are trained once, on the first batch, and never move afterwards — the
-standing-index property that makes the probe incremental at all.
+the identical deterministic plan (exact-integer assignment, exact BIGINT
+micro dot sums) and overwrites the same objects with the same contents.
+Centroids are trained once, on the first batch, and never move
+afterwards — the standing-index property that makes the probe
+incremental at all.
 """
 
 from __future__ import annotations
@@ -111,13 +112,13 @@ class SemanticStreamDeduper:
     def _append_index(
         self,
         survivors: DataFrame,
-        el_new: DataFrame,
+        rows: DataFrame,
         epoch: int,
         prior_vids: DataFrame | None = None,
     ) -> None:
-        """Append the SURVIVORS' slice of the probe's already-computed
-        (persisted) element frame — the batch's posexplode + centroid
-        assignment is paid exactly once, inside the probe.
+        """Append the SURVIVORS' slice of the probe's already-assigned
+        (persisted) batch rows — the batch's centroid assignment is paid
+        exactly once, inside the probe.
 
         ``prior_vids`` (ids already in the standing index under EARLIER
         epochs) guards cross-epoch at-least-once re-delivery: a vec_id
@@ -136,11 +137,13 @@ class SemanticStreamDeduper:
         ``partitionBy("cluster")`` so the standing index gets the
         file-level pruning the probe's touched-cluster semi-join is
         designed around (semantic_index_build's contract)."""
+        from datalake_spark.operators.dedup import _index_parts
+
         sid = survivors.select(F.col(self.id_col).alias("_sid"))
-        el_s = el_new.join(sid, F.col("_vid") == F.col("_sid"), "left_semi")
+        rows_s = rows.join(sid, F.col("_vid") == F.col("_sid"), "left_semi")
         if prior_vids is not None:
-            el_s = el_s.join(prior_vids, "_vid", "left_anti")
-        el_s = persisted(el_s)
+            rows_s = rows_s.join(prior_vids, "_vid", "left_anti")
+        elements, norms = _index_parts(persisted(rows_s))
         # match the standing index's layout (set by _load_index; a fresh
         # index takes the partitioned one): appending cluster-partitioned
         # epochs under a legacy unpartitioned root would leave files at
@@ -150,14 +153,8 @@ class SemanticStreamDeduper:
             return w.partitionBy("cluster") if getattr(
                 self, "_partitioned_layout", True
             ) else w
-        _w(el_s).parquet(f"{self.index_path}/elements/epoch={epoch}")
-        _w(
-            el_s.groupBy("_vid", "cluster").agg(
-                F.sum((F.col("_val") * F.col("_val")).cast("decimal(30,12)"))
-                .cast("double")
-                .alias("_norm_sq")
-            )
-        ).parquet(f"{self.index_path}/norms/epoch={epoch}")
+        _w(elements).parquet(f"{self.index_path}/elements/epoch={epoch}")
+        _w(norms).parquet(f"{self.index_path}/norms/epoch={epoch}")
 
     # -- foreachBatch sink ----------------------------------------------
 

@@ -115,6 +115,39 @@ class TestCompactShards:
         assert keys == sorted(keys)
 
 
+    def test_compaction_caches_nothing_and_keeps_the_manifest(
+        self, spark, corpus, tmp_path
+    ):
+        """The rewrite goes through a staging directory, so nothing is
+        cached or checkpointed: a compaction inside ``released()`` leaves
+        no persistent RDD, and the manifest survives the swap."""
+        from datalake_spark.export import (
+            KEY_COL, SHARD_COL, compact_shards, shard_file_counts, shard_key,
+            shard_of,
+        )
+        from datalake_spark.session import released
+        from pyspark.sql import functions as F
+        from tests.conftest import rdd_ids
+
+        path = str(tmp_path / "frag")
+        manifest = write_training_shards(corpus, path, n_shards=2)
+        keyed = corpus.withColumn(KEY_COL, shard_key("doc_id", "shuf42")) \
+            .withColumn(SHARD_COL, shard_of(F.col(KEY_COL), 2))
+        for i in range(3):
+            keyed.filter(F.col("doc_id") % 3 == i).repartition(
+                2, F.col(SHARD_COL)).write.mode("append") \
+                .partitionBy(SHARD_COL).parquet(path)
+        before = rdd_ids(spark)
+        with released():
+            assert compact_shards(spark, path, max_files_per_shard=2)
+        assert not rdd_ids(spark) - before
+        assert shard_file_counts(path) == {0: 1, 1: 1}
+        assert spark.read.parquet(path).count() == 2 * 200
+        assert read_manifest(path) == manifest
+        assert not os.path.exists(f"{path}.old")
+        assert not os.path.exists(f"{path}.compacting")
+
+
 class TestJsonlShards:
     def test_jsonl_roundtrip_same_membership_and_order(self, spark, tmp_path):
         from datalake_spark.export import (

@@ -4,6 +4,7 @@ frames on a live session."""
 
 from __future__ import annotations
 
+import json
 import math
 
 import pytest
@@ -205,6 +206,20 @@ class TestDedup:
             ).collect()
         }
         assert got == expect
+
+    def test_distributed_components_release_every_round(self, spark):
+        """The distributed path caches each round through ``persisted``:
+        its caller's ``released()`` scope frees every round, and the
+        result's analyzed plan stays one cut, not the rounds' lineage."""
+        edges = [(i, i + 1) for i in range(39) if i % 7 != 6]
+        df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        before = rdd_ids(spark)
+        with released():
+            comp = dedup.connected_components(df, local_edge_budget=0)
+            got = {r.id: r.cluster_id for r in comp.collect()}
+            assert len(comp._jdf.queryExecution().analyzed().toString()) < 2000
+        assert got == {i: i - i % 7 for i in range(40)}
+        assert not rdd_ids(spark) - before
 
     def test_connected_components_empty_pairs(self, spark):
         df = spark.createDataFrame([], "doc_a long, doc_b long")
@@ -1267,6 +1282,158 @@ def _ref_pq_code(sv, codewords):
         sorted(codewords),
         key=lambda code: sum((a - b) ** 2 for a, b in zip(sv, codewords[code])),
     )
+
+
+# SemDeDup reference fixture: group A near e1 (ids 1, 3, 5), group B near
+# e2 (ids 2, 4, 6, 8) and a zero vector (7).  (1, 3) is planted just above
+# _REF_T: its micro cosine 0.98007493... clears it, the real cosine
+# 0.98007468... does not; every other pair is far from the threshold.
+_REF_VECS = {
+    1: [1.0, 0.2972664, 0.2079183, 0.2795934],
+    2: [0.05, 1.0, 0.0, 0.1234567],
+    3: [1.0, 0.1652245, 0.1215935, 0.1203736],
+    4: [0.0500003, 1.0000002, 0.0000004, 0.1234571],
+    5: [1.0, 0.0, 0.0, 0.9],
+    6: [0.0, 1.0, 0.9, 0.0],
+    7: [0.0, 0.0, 0.0, 0.0],
+    8: [0.0499995, 0.9999996, 0.0, 0.1234561],
+}
+_REF_T = 0.9800748
+# malformed vectors: NULL, a NULL component, and doc 1 one component
+# longer (a zero-padded cosine of exactly 1 with doc 1)
+_BAD_VECS = {
+    10: None,
+    11: [1.0, 0.2972664, None, 0.2795934],
+    12: _REF_VECS[1] + [0.0],
+}
+
+
+def _vec_frame(spark, vecs, ids=None):
+    return spark.createDataFrame(
+        [(i, vecs[i]) for i in sorted(ids or vecs)],
+        "vec_id long, embedding array<double>",
+    )
+
+
+def _ref_pairs(vecs, ids, cluster, new=None, t=_REF_T):
+    """Pure-Python within-cluster brute force over _ref_cosine: the
+    (a < b) pairs of ``ids`` sharing a cluster at or above ``t``; with
+    ``new``, only pairs holding at least one new id."""
+    return {
+        (a, b)
+        for a in ids for b in ids
+        if a < b and cluster[a] == cluster[b]
+        and (new is None or a in new or b in new)
+        and vecs[a] is not None and vecs[b] is not None
+        and None not in vecs[a] + vecs[b] and len(vecs[a]) == len(vecs[b])
+        and _ref_cosine(vecs[a], vecs[b]) >= t
+    }
+
+
+class TestMicroCosineReference:
+    """Every embedding cosine is cosine_micro_exact's arithmetic, bit for
+    bit, and malformed vectors never pair (the -2.0 sentinel)."""
+
+    GROUP = {i: "A" if i in (1, 3, 5) else "B" for i in _REF_VECS}
+
+    def test_semantic_dup_pairs_match_reference(self, spark):
+        df = _vec_frame(spark, _REF_VECS)
+        got = {(r.doc_a, r.doc_b) for r in dedup.semantic_dup_pairs(
+            df, k=2, threshold=_REF_T).collect()}
+        cluster = {r.vec_id: r.cluster for r in dedup.semantic_dedup(
+            df, k=2, threshold=_REF_T).collect()}
+        assert got == _ref_pairs(_REF_VECS, _REF_VECS, cluster)
+        assert (1, 3) in got
+
+    def test_incremental_cosines_are_reference_bits(self, spark):
+        new = {3, 4, 5, 7, 8}
+        out = dedup.semantic_incremental_pairs(
+            _vec_frame(spark, _REF_VECS, {1, 2, 6}),
+            _vec_frame(spark, _REF_VECS, new), k=2, threshold=_REF_T,
+        ).collect()
+        for r in out:
+            assert r.cosine == _ref_cosine(_REF_VECS[r.doc_a],
+                                           _REF_VECS[r.doc_b]), r
+        got = {(r.doc_a, r.doc_b) for r in out}
+        assert got == _ref_pairs(_REF_VECS, _REF_VECS, self.GROUP, new)
+        # both verify paths: corpus x new (exploded index) and new x new
+        assert {(1, 3), (4, 8)} <= got
+
+    def test_streaming_survivors_follow_reference_pairs(self, spark, tmp_path):
+        from datalake_spark.streaming.semantic import SemanticStreamDeduper
+
+        landing, out = tmp_path / "landing", str(tmp_path / "out")
+        landing.mkdir()
+        dd = SemanticStreamDeduper(spark, out, k=2, threshold=_REF_T)
+        first, second = [1, 2, 6], [3, 4, 5, 7, 8]
+        for n, ids in enumerate((first, second)):
+            (landing / f"b{n}.json").write_text("".join(
+                json.dumps({"vec_id": i, "embedding": _REF_VECS[i], "ms": i})
+                + "\n" for i in ids))
+            dd.start(str(landing), str(tmp_path / "ck")).awaitTermination(120)
+        pairs = _ref_pairs(_REF_VECS, first + second, self.GROUP, second)
+        # a new doc dies pairing with a kept corpus doc, or with a
+        # smaller-id doc of its own batch
+        drop = {b if a in first or a < b else a for a, b in pairs}
+        got = {r.vec_id for r in spark.read.parquet(f"{out}/vecs").collect()}
+        assert got == set(first + second) - drop
+        assert 3 in drop
+
+    def test_embedding_near_dup_rounds_the_reference(self, spark, tmp_path):
+        from datalake_spark.queries import pipeline_q
+
+        _vec_frame(spark, _REF_VECS).write.parquet(
+            str(tmp_path / "embeddings.parquet"))
+        out = pipeline_q.embedding_near_dup(spark, str(tmp_path)).collect()
+        for r in out:
+            assert r.cosine_r == round(
+                _ref_cosine(_REF_VECS[r.id_a], _REF_VECS[r.id_b]), 8), r
+        same = dict.fromkeys(_REF_VECS, 0)
+        assert {(r.id_a, r.id_b) for r in out} == _ref_pairs(
+            _REF_VECS, _REF_VECS, same, t=pipeline_q._ND_THRESHOLD)
+
+    def test_malformed_vectors_never_pair(self, spark, tmp_path):
+        """A NULL vector, a NULL component and a length mismatch have no
+        cosine: -2.0 in brute_force_topk, and no SemDeDup pair on the
+        batch, incremental or streaming path."""
+        vecs = {**_REF_VECS, **_BAD_VECS,
+                13: [0.05, 1.0, None, 0.1234567]}
+        top = similarity.brute_force_topk(
+            _vec_frame(spark, vecs, {1}), _vec_frame(spark, vecs, set(vecs) - {1}),
+            k=len(vecs))
+        cos = {r.c_id: r.cosine for r in top.collect()}
+        assert {cos[i] for i in (10, 11, 12, 13)} == {-2.0}
+        assert cos[12] < cos[3]
+
+        ids = set(_REF_VECS) | set(_BAD_VECS)
+        df = _vec_frame(spark, vecs, ids)
+        verdict = {r.vec_id: r for r in dedup.semantic_dedup(
+            df, k=2, threshold=_REF_T).collect()}
+        assert set(verdict) == ids
+        assert all(verdict[i].keep for i in _BAD_VECS)
+        assert verdict[10].cluster is None
+        got = {(r.doc_a, r.doc_b) for r in dedup.semantic_dup_pairs(
+            df, k=2, threshold=_REF_T).collect()}
+        assert got == _ref_pairs(_REF_VECS, _REF_VECS, self.GROUP)
+
+        new = {3, 4, 5, 7, 8, 10, 11, 12}
+        got = {(r.doc_a, r.doc_b) for r in dedup.semantic_incremental_pairs(
+            _vec_frame(spark, vecs, {1, 2, 6, 13}), _vec_frame(spark, vecs, new),
+            k=2, threshold=_REF_T).collect()}
+        assert got == _ref_pairs(_REF_VECS, _REF_VECS, self.GROUP, new - {10, 11, 12})
+
+        from datalake_spark.streaming.semantic import SemanticStreamDeduper
+
+        landing, out = tmp_path / "landing", str(tmp_path / "out")
+        landing.mkdir()
+        dd = SemanticStreamDeduper(spark, out, k=2, threshold=_REF_T)
+        for n, batch in enumerate(([1, 2, 6, 13], [3, 10, 11, 12])):
+            (landing / f"b{n}.json").write_text("".join(
+                json.dumps({"vec_id": i, "embedding": vecs[i], "ms": i})
+                + "\n" for i in batch))
+            dd.start(str(landing), str(tmp_path / "ck")).awaitTermination(120)
+        got = {r.vec_id for r in spark.read.parquet(f"{out}/vecs").collect()}
+        assert got == {1, 2, 6, 13, 10, 11, 12}
 
 
 def _column_seed_codebooks(df, id_col, vec_col, m, ksub,

@@ -154,10 +154,11 @@ def test_semantic_norms_never_broadcast(spark):
     frames — one row per corpus document, the exact corpus-sized-broadcast
     shape the repo's r1 postmortem (operators/dedup.py) forbids.  The hints
     are gone; this pins the structure: with autoBroadcastJoinThreshold=-1
-    (so only HINTED joins can broadcast) no BroadcastExchange subtree in
-    either operator's plan may contain the corpus-derived ``_norm_sq``
-    column.  Centroid / touched-cluster broadcasts (bounded by k) stay
-    hinted and allowed."""
+    (so only HINTED joins can broadcast) each operator's plan carries its
+    corpus-sized norm column — the batch pair rows' ``_nsq``, the
+    standing index's ``_norm_sq`` — and no BroadcastExchange subtree
+    contains it.  Centroid / touched-cluster broadcasts (bounded by k)
+    stay hinted and allowed."""
     from datalake_spark.queries import registry
     from datalake_spark.queries.batteries import BATTERY_SUBS
 
@@ -172,16 +173,19 @@ def test_semantic_norms_never_broadcast(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         saw_hinted_broadcast = False
-        for name in ("semantic_dedup", "semantic_incremental"):
+        for name, norm_col in (("semantic_dedup", "_nsq"),
+                               ("semantic_incremental", "_norm_sq")):
             spark.catalog.clearCache()
             df = qs[name](spark, SF_DIR)
+            plan = df._jdf.queryExecution().executedPlan()
+            assert norm_col in plan.toString(), (name, norm_col)
             offending = []
-            stack = [df._jdf.queryExecution().executedPlan()]
+            stack = [plan]
             while stack:
                 n = stack.pop()
                 if "BroadcastExchange" in n.nodeName():
                     saw_hinted_broadcast = True
-                    if "_norm_sq" in n.toString():
+                    if norm_col in n.toString():
                         offending.append((name, n.nodeName()))
                 cs = n.children()
                 for i in range(cs.size()):
@@ -451,6 +455,58 @@ def test_env_knob_inventory():
     for path in root.rglob("*.py"):
         names |= set(re.findall(r"SPARK_GRAFT_\w+", path.read_text()))
     assert names == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
+
+
+# the k-means family — squared-L2 distances and centroid means — still
+# sums DECIMAL(30,12); every cosine is micro-int64 exact
+_DECIMAL_ALLOWED = {
+    "operators/similarity.py": {"kmeans_iterate", "assign_to_centroids"},
+    "queries/pipeline_q.py": {"KMEANS_SQL", "SEMANTIC_INCREMENTAL_SQL",
+                              "embedding_centroids",
+                              "EMBEDDING_CENTROIDS_SQL"},
+}
+
+
+def test_decimal_sums_only_in_kmeans():
+    """DECIMAL(30,12) appears under datalake_spark/ only inside the k-means
+    definitions allowed above, so a new DECIMAL cosine fails here."""
+    import datalake_spark
+
+    root = pathlib.Path(datalake_spark.__file__).parent
+    found = {}
+    for path in root.rglob("*.py"):
+        src = path.read_text()
+        if not re.search(r"decimal\(30,\s*12\)", src, re.I):
+            continue
+        rel = path.relative_to(root).as_posix()
+        for node in ast.parse(src).body:
+            names = (
+                [node.name] if isinstance(node, (ast.FunctionDef, ast.ClassDef))
+                else [t.id for t in getattr(node, "targets", [])
+                      if isinstance(t, ast.Name)]
+            )
+            text = ast.get_source_segment(src, node) or ""
+            if re.search(r"decimal\(30,\s*12\)", text, re.I):
+                found.setdefault(rel, set()).update(names or ["<module>"])
+    assert found == _DECIMAL_ALLOWED
+
+
+def test_stale_semantic_index_is_rejected(spark):
+    """A standing SemDeDup index whose norms are double (written before
+    the micro-int64 cosine) is refused by name, never mixed with BIGINT
+    dot sums."""
+    from datalake_spark.operators.dedup import (
+        StaleSemanticIndex, semantic_incremental_pairs, semantic_index_build,
+    )
+    from pyspark.sql import functions as F
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<double>"
+    )
+    cents, elements, norms = semantic_index_build(corpus, k=2)
+    stale = norms.withColumn("_norm_sq", F.col("_norm_sq").cast("double"))
+    with pytest.raises(StaleSemanticIndex, match="rebuild"):
+        semantic_incremental_pairs(None, corpus, index=(cents, elements, stale))
 
 
 def test_default_driver_memory_fits_the_host(tmp_path):
