@@ -241,7 +241,8 @@ ANCHOR_EXTRAS_R14 = {
 def _serving_search_entry(spark, sf_dir: str):
     """Build a standing IVF-PQ index ONCE (untimed) and return a bench
     entry that times :meth:`IvfPqIndex.search` alone — manifest read,
-    partition-pruned code scan, broadcast cell probe, ADC rank.
+    driver-side cell probe and ADC tables, one partition-pruned codes
+    scan with a per-partition top-k, driver merge.
 
     Geometry and corpus split match the ann_ivfpq_topk gate entry
     (num_centroids=16, nprobe=4, m=32, ksub=32; queries vec_id < 3,

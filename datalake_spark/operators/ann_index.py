@@ -26,11 +26,15 @@ conditional-put discipline, ingester/datalake_ingester/storage.py:64-137):
   indexed under an EARLIER committed epoch are anti-joined out (the
   at-least-once re-delivery guard — a duplicate c_id would appear twice
   in every probe of its cell).
-- ``search(queries)`` loads the manifest, reads ONLY committed epochs
-  (uncommitted crash-orphan epoch dirs are invisible — partition-pruned
-  out by the epoch filter), and runs similarity.ivfpq_search: the
-  broadcast cell-probe join prunes the parquet read to
-  nprobe/num_centroids of the compressed index.
+- ``search(queries)`` loads the manifest and serves the queries from
+  the decoded model (similarity.IvfPqModel: centroids and codebooks as
+  NumPy arrays, kept on the handle per version dir): the probe and the
+  ADC tables are built on the driver, and one partition-pruned
+  ``mapInArrow`` scan reads only the probed cells' codes of COMMITTED
+  epochs (uncommitted crash-orphan epoch dirs are invisible —
+  partition-pruned out by the epoch filter).  A warm single-query
+  search is one Spark job, two when collecting the query frame needs
+  one.
 - ``rebuild(source)`` retrains-and-swaps (the catalog ``compact``
   precedent, catalog.py:1185): fresh centroids/codebooks trained on the
   CURRENT committed corpus (ids recovered from the committed epochs,
@@ -70,6 +74,7 @@ from dataclasses import asdict, dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from datalake_spark.catalog import (
     _commit_version,
@@ -80,9 +85,9 @@ from datalake_spark.catalog import (
     _retry_commit,
 )
 from datalake_spark.operators.similarity import (
+    IvfPqModel,
     ivf_assign_cells,
     ivf_index_build,
-    ivfpq_search,
     pq_encode,
     pq_train,
 )
@@ -201,6 +206,10 @@ class IvfPqIndex:
         # manifest is the authority once built — a reopened handle
         # serves with the layout the index was written in.
         self.residual = residual
+        # (version dir, IvfPqModel, codes schema) of the last search:
+        # a dir's model never changes (append never retrains, rebuild
+        # writes a new dir), so the dir name is the cache key
+        self._model: tuple | None = None
 
     # -- plumbing --------------------------------------------------------
 
@@ -655,22 +664,39 @@ class IvfPqIndex:
     def search(
         self, queries: DataFrame, k: int = 10, nprobe: int = 4
     ) -> DataFrame:
-        """ivfpq_search over the committed index: reads the manifest's
-        version dir, filters codes to COMMITTED epochs (crash-orphan
-        epoch dirs are pruned out at plan time), probes nprobe cells."""
+        """(q_id, c_id, adc, rk): the top-``k`` of every query over the
+        committed index, probing ``nprobe`` cells
+        (similarity.IvfPqModel.search — the one IVF-PQ search path).
+        Every call reads the manifest, so an append is visible to the
+        next search; the codes are filtered to its COMMITTED epochs
+        (crash-orphan epoch dirs are pruned out at plan time).  The
+        decoded model and the codes schema are read once per version
+        dir and kept on the handle, so a warm search reads no centroid
+        or codebook file and infers no parquet schema: it runs the one
+        codes scan, plus a job to collect the queries unless they are a
+        local relation.  The result is a local relation."""
         m = self.manifest()
         if m is None:
             raise IndexNotBuilt(self.store.url)
         f = _Fields.of(m)
-        cents, cb = self._read_model(m)
-        codes = (
-            self.spark.read.parquet(self._url(m["dir"], self.CODES))
-            .filter(F.col("epoch").isin(f.epochs))
-            .select("c_id", "sub", "code", "cent_id")
+        url = self._url(m["dir"], self.CODES)
+        if self._model is None or self._model[0] != m["dir"]:
+            model = IvfPqModel.of(*self._read_model(m), f.m, f.residual)
+            # epochs grow past the int range a first read may infer, and
+            # cent_id takes the centroid ids' own type
+            types = {"epoch": T.LongType(), "cent_id": model.cent_type}
+            schema = T.StructType([
+                T.StructField(x.name, types.get(x.name, x.dataType))
+                for x in self.spark.read.parquet(url).schema
+            ])
+            self._model = (m["dir"], model, schema)
+        _, model, schema = self._model
+        codes = self.spark.read.schema(schema).parquet(url).filter(
+            F.col("epoch").isin(f.epochs)
         )
-        return ivfpq_search(
-            cents, cb, codes, queries, k=k, nprobe=nprobe, m=f.m,
-            id_col=self.id_col, vec_col=self.vec_col, residual=f.residual,
+        return model.search(
+            codes, queries, k=k, nprobe=nprobe,
+            id_col=self.id_col, vec_col=self.vec_col,
         )
 
     # -- streaming maintenance -------------------------------------------

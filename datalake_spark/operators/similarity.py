@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import math
 import random
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -173,6 +174,55 @@ def _list_matrix(col, width: int):
     return mat, null_rows, ~(null_rows | ok)
 
 
+def _micro_centroids(
+    centroids: DataFrame,
+) -> tuple[list, np.ndarray, np.ndarray]:
+    """The parameter-bounded (cent_id, cent_vec) frame collected onto the
+    driver in cent_id order: ``(ids, qcv, sq)`` — the ids, the
+    micro-quantized vectors floor(x·1e6+0.5) as an int64 matrix, and
+    their float64 norms, the centroid side of :func:`_micro_sims`.  A
+    NULL centroid or component raises ValueError."""
+    rows = sorted(
+        centroids.select("cent_id", "cent_vec").collect(),
+        key=lambda r: r["cent_id"],
+    )
+    for r in rows:
+        if r["cent_vec"] is None or any(
+            x is None for x in r["cent_vec"]
+        ):
+            raise ValueError(
+                f"IVF: centroid {r['cent_id']!r} is NULL or has NULL "
+                "components"
+            )
+    qcv = np.array(
+        [
+            [math.floor(float(x) * 1_000_000 + 0.5) for x in r["cent_vec"]]
+            for r in rows
+        ] or np.zeros((0, 0)),
+        dtype=np.int64,
+    )
+    sq = np.sqrt((qcv * qcv).sum(axis=1).astype(np.float64))
+    return [r["cent_id"] for r in rows], qcv, sq
+
+
+def _micro_sims(
+    mat: np.ndarray, qcv: np.ndarray, sq: np.ndarray
+) -> np.ndarray:
+    """(rows, centroids) exact cosines of the float matrix ``mat``
+    against :func:`_micro_centroids` output, by the cosine_micro_exact
+    arithmetic: quantization is floor(x·1e6+0.5) in float64; dot and
+    norm-square are int64 sums; the finish is one int64→float64 cast,
+    one multiply (sqa·sq) and one IEEE divide, with the −2.0 guard when
+    that product is not positive (zero norms)."""
+    qa = np.floor(mat.astype(np.float64) * 1_000_000 + 0.5).astype(np.int64)
+    sqa = np.sqrt((qa * qa).sum(axis=1).astype(np.float64))
+    denom = sqa[:, None] * sq[None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(
+            denom > 0, (qa @ qcv.T).astype(np.float64) / denom, -2.0
+        )
+
+
 def _assign_nearest(
     df: DataFrame, vec_col: str, centroids: DataFrame
 ) -> DataFrame:
@@ -183,52 +233,28 @@ def _assign_nearest(
     frame (a local relation at the build call sites, a tiny parquet
     read on streaming appends) is quantized into NumPy int64 matrices
     in the function closure, and one ``mapInArrow`` stage computes
-    every exact cosine and the argmax over whole Arrow batches: zero
-    shuffles, zero corpus aggregation.
+    every exact cosine (:func:`_micro_sims`) and the argmax over whole
+    Arrow batches: zero shuffles, zero corpus aggregation.
 
-    Exact by construction: quantization is floor(x·1e6+0.5) in float64;
-    dot and norm-square are int64 sums; the finish is one int64→float64
-    cast, one multiply (sqa·sq) and one IEEE divide, with the −2.0
-    guard when that product is not positive (zero norms); np.argmax
-    takes the FIRST maximal element of the cent_id-sorted axis.  A row
-    whose vector is NULL or has NULL components scores −2.0 against
-    every centroid and lands on the smallest cent_id; a vector whose
-    width differs from the centroids' raises ValueError.  An empty
-    centroid frame assigns nothing.  Pinned against a pure-Python
-    integer reference in tests/test_operators.py."""
+    Exact by construction (see :func:`_micro_sims`); np.argmax takes the
+    FIRST maximal element of the cent_id-sorted axis.  A row whose
+    vector is NULL or has NULL components scores −2.0 against every
+    centroid and lands on the smallest cent_id; a vector whose width
+    differs from the centroids' raises ValueError.  An empty centroid
+    frame assigns nothing.  Pinned against a pure-Python integer
+    reference in tests/test_operators.py."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
     cent_type = centroids.schema["cent_id"].dataType
-    cent_rows = sorted(
-        centroids.select("cent_id", "cent_vec").collect(),
-        key=lambda r: r["cent_id"],
-    )
-    if not cent_rows:
+    ids, qcv, sq = _micro_centroids(centroids)
+    if not ids:
         return (
             df.withColumn("cent_id", F.lit(None).cast(cent_type))
             .filter(F.lit(False))
         )
-    for r in cent_rows:
-        if r["cent_vec"] is None or any(
-            x is None for x in r["cent_vec"]
-        ):
-            raise ValueError(
-                f"IVF: centroid {r['cent_id']!r} is NULL or has NULL "
-                "components"
-            )
-    cent_ids = pa.array(
-        [r["cent_id"] for r in cent_rows], type=to_arrow_type(cent_type)
-    )
-    qcv = np.array(
-        [
-            [math.floor(float(x) * 1_000_000 + 0.5) for x in r["cent_vec"]]
-            for r in cent_rows
-        ],
-        dtype=np.int64,
-    )
+    cent_ids = pa.array(ids, type=to_arrow_type(cent_type))
     dim = qcv.shape[1]
-    sq = np.sqrt((qcv * qcv).sum(axis=1).astype(np.float64))
     out_schema = T.StructType(
         list(df.schema.fields)
         + [T.StructField("cent_id", cent_type, True)]
@@ -247,19 +273,10 @@ def _assign_nearest(
                     "IVF: embedding dim mismatch vs centroids in "
                     "_assign_nearest input"
                 )
-            qa = np.floor(
-                mat.astype(np.float64) * 1_000_000 + 0.5
-            ).astype(np.int64)
-            sqa = np.sqrt((qa * qa).sum(axis=1).astype(np.float64))
-            denom = sqa[:, None] * sq[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.where(
-                    denom > 0,
-                    (qa @ qcv.T).astype(np.float64) / denom,
-                    -2.0,
-                )
             arrays = [b.column(c) for c in cols]
-            arrays.append(cent_ids.take(np.argmax(sims, axis=1)))
+            arrays.append(
+                cent_ids.take(np.argmax(_micro_sims(mat, qcv, sq), axis=1))
+            )
             yield pa.RecordBatch.from_arrays(arrays, cols + ["cent_id"])
 
     return df.mapInArrow(assign_batches, out_schema)
@@ -617,11 +634,21 @@ def _py_quantize_micro_unit(vec) -> list[int]:
     — correctly rounded in CPython and the JVM alike.  Pinned against
     the Column twin over adversarial inputs in
     tests/test_operators.py."""
-    qa = [math.floor(float(x) * 1_000_000 + 0.5) for x in vec]
+    return _py_unit_micro(
+        [math.floor(float(x) * 1_000_000 + 0.5) for x in vec]
+    )
+
+
+def _py_unit_micro(qa: list[int]) -> list[int]:
+    """The unit-normalize-and-requantize half of
+    :func:`_py_quantize_micro_unit`, over already micro-quantized
+    components ``qa`` (Python ints, e.g. a :func:`_micro_centroids`
+    row)."""
     nsq = 0
     for q in qa:
         nsq += q * q
-    # the 'fits in the long range' precondition above, ENFORCED: the
+    # the 'fits in the long range' precondition of
+    # _py_quantize_micro_unit, ENFORCED: the
     # cluster fold accumulates over JVM longs and would silently wrap
     # past 2^63-1 (components ≳ 3e3 at micro scale, sooner summed over
     # many dims) while this exact big-int sum would not — fail loudly
@@ -707,7 +734,26 @@ def _seed_codebooks_local(
             rows.append(
                 (sub, code, qv[sub * d_sub : (sub + 1) * d_sub])
             )
-    return spark.createDataFrame(rows, _CB_SCHEMA)
+    return _local_frame(spark, rows, _CB_SCHEMA)
+
+
+def _local_frame(spark, rows: list, schema: T.StructType) -> DataFrame:
+    """``rows`` as a DataFrame built from a pyarrow Table: a small one is
+    a ``LocalRelation``, which a ``collect()`` reads on the driver with
+    no Spark job.  ``createDataFrame`` over a Python list builds a
+    ``LogicalRDD`` instead, and each of its collects runs a job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    cols = list(zip(*rows)) if rows else [[] for _ in schema.fields]
+    arrow = to_arrow_schema(schema)
+    return spark.createDataFrame(
+        pa.table(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+            schema=arrow,
+        ),
+        schema,
+    )
 
 
 def _materialize_small(df: DataFrame) -> DataFrame:
@@ -726,8 +772,7 @@ def _materialize_small(df: DataFrame) -> DataFrame:
     literal rebuild truncates the lineage exactly — values identical
     (exact longs/doubles roundtrip), determinism unchanged, and unlike
     ``localCheckpoint`` nothing can be lost with an executor."""
-    rows = df.collect()
-    return df.sparkSession.createDataFrame(rows, df.schema)
+    return _local_frame(df.sparkSession, df.collect(), df.schema)
 
 
 def _pq_d_sub(m: int):
@@ -1205,6 +1250,321 @@ def pq_topk(
     )
 
 
+def _adc_sums(t):
+    """(q, c_id, adc, n) rows summed per (q, c_id): the ADC total and
+    the number of code rows it covers."""
+    import pyarrow as pa
+
+    g = t.group_by(["q", "c_id"]).aggregate([("adc", "sum"), ("n", "sum")])
+    return pa.table(
+        [g["q"], g["c_id"], g["adc_sum"], g["n_sum"]],
+        names=["q", "c_id", "adc", "n"],
+    )
+
+
+def _topk_by_query(t, k: int):
+    """The first ``k`` (q, c_id, adc, n) rows of every query ``q`` by
+    (adc, c_id), NULL ids first — the order of the ``row_number``
+    window over ``(adc, c_id)`` — with their 1-based ``rk``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = t.take(pc.sort_indices(
+        t,
+        sort_keys=[("q", "ascending"), ("adc", "ascending"),
+                   ("c_id", "ascending")],
+        null_placement="at_start",
+    ))
+    q = t["q"].to_numpy()
+    rk = np.arange(len(q)) - np.searchsorted(q, q, side="left") + 1
+    keep = np.flatnonzero(rk <= k)
+    return t.take(keep).append_column(
+        "rk", pa.array(rk[keep].astype(np.int32))
+    )
+
+
+@dataclass(frozen=True)
+class IvfPqModel:
+    """The parameter-bounded half of an IVF-PQ index, decoded onto the
+    driver: the centroids as :func:`_micro_centroids` matrices (the
+    probe side) and the codebooks as one dense int64 array (the ADC
+    side).  :meth:`of` builds it from the two frames — num_centroids
+    and m·ksub rows, never corpus-scaled — and :meth:`search` serves any
+    number of query frames against it; :class:`IvfPqIndex` keeps one per
+    committed version dir."""
+
+    cent_ids: list  # sorted
+    cent_type: T.DataType
+    qcv: np.ndarray  # (num_centroids, dim) micro-quantized centroids
+    sq: np.ndarray  # their norms
+    cm: np.ndarray | None  # unit-micro centroids; residual layouts only
+    cb: np.ndarray  # (m, ncode, d_sub) codewords
+    has_cb: np.ndarray  # (m, ncode): a codeword exists at that index
+    code0: int  # the code at index 0 of cb's second axis
+
+    @classmethod
+    def of(
+        cls,
+        centroids: DataFrame,
+        codebooks: DataFrame,
+        m: int,
+        residual: bool = False,
+    ) -> "IvfPqModel":
+        """Collect and check both frames.  Codebook rows outside subs
+        0..m-1 are never looked up and are ignored; a NULL codeword, a
+        duplicate (sub, code), ragged widths, or centroids whose dim is
+        not m × the codeword width raise ValueError."""
+        ids, qcv, sq = _micro_centroids(centroids)
+        rows = [
+            r for r in codebooks.select("sub", "code", "cb_micro").collect()
+            if r["sub"] is not None and 0 <= r["sub"] < m
+            and r["code"] is not None
+        ]
+        for r in rows:
+            if r["cb_micro"] is None or any(
+                x is None for x in r["cb_micro"]
+            ):
+                raise ValueError(
+                    f"PQ: codebook (sub={r['sub']}, code={r['code']}) is "
+                    "NULL or has NULL components"
+                )
+        widths = {len(r["cb_micro"]) for r in rows}
+        if len(widths) > 1:
+            raise ValueError(
+                f"PQ: codebook widths differ across subs: {sorted(widths)}"
+            )
+        d_sub = widths.pop() if widths else 0
+        if ids and qcv.shape[1] != m * d_sub:
+            raise ValueError(
+                f"IVF-PQ: centroids have dim {qcv.shape[1]} but m={m} "
+                f"codewords of width {d_sub} span {m * d_sub}"
+            )
+        code0 = min((r["code"] for r in rows), default=0)
+        ncode = max((r["code"] for r in rows), default=code0 - 1) - code0 + 1
+        cb = np.zeros((m, ncode, d_sub), dtype=np.int64)
+        has_cb = np.zeros((m, ncode), dtype=bool)
+        for r in rows:
+            at = (r["sub"], r["code"] - code0)
+            if has_cb[at]:
+                raise ValueError(
+                    f"PQ: codebook (sub={r['sub']}, code={r['code']}) "
+                    "appears twice"
+                )
+            cb[at], has_cb[at] = r["cb_micro"], True
+        cm = None
+        if residual:
+            cm = np.array(
+                [_py_unit_micro(v) for v in qcv.tolist()], dtype=np.int64
+            ).reshape(qcv.shape)
+        return cls(
+            cent_ids=ids,
+            cent_type=centroids.schema["cent_id"].dataType,
+            qcv=qcv, sq=sq, cm=cm, cb=cb, has_cb=has_cb, code0=code0,
+        )
+
+    def search(
+        self,
+        codes: DataFrame,
+        queries: DataFrame,
+        k: int = 10,
+        nprobe: int = 4,
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+    ) -> DataFrame:
+        """(q_id, c_id, adc, rk): the ADC top-``k`` of every query over
+        the (c_id, sub, code, cent_id) ``codes`` of its ``nprobe``
+        nearest cells, ties to the smaller c_id.
+
+        The queries are collected and checked on the driver: a NULL
+        vector, a NULL component, a dim other than the index's, or a
+        repeated query id raises ValueError naming the query.  Probe
+        selection (:func:`_micro_sims`: max cosine, ties to the smaller
+        cent_id) and the exact int64 ADC tables — one per query, or one
+        per (query, probed cell) for a residual layout — are built here
+        too.  Then ONE ``mapInArrow`` scan over the codes, filtered to
+        the probed cent_ids (a partition filter on a
+        ``partitionBy("cent_id")`` parquet index), looks up every code
+        row's distance.  Each partition keeps the top-k of the c_ids
+        whose m code rows it saw in full and passes partial sums
+        through for the rest; the driver sums partials by (query, c_id)
+        and ranks.  The per-partition cut assumes one vector per c_id,
+        the index contract.  A probed code row whose (sub, code) has no
+        codeword raises ValueError.
+
+        The result is built from a pyarrow Table, so it is a local
+        relation: collecting it launches no Spark job."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+
+        spark = queries.sparkSession
+        q_type = queries.schema[id_col].dataType
+        out_schema = T.StructType([
+            T.StructField("q_id", q_type, True),
+            T.StructField("c_id", codes.schema["c_id"].dataType, True),
+            T.StructField("adc", T.LongType(), True),
+            T.StructField("rk", T.IntegerType(), False),
+        ])
+        qrows = queries.select(
+            F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
+        ).collect()
+        self._check_queries(qrows)
+        if not qrows or not self.cent_ids or nprobe <= 0 or k <= 0:
+            return spark.createDataFrame(
+                to_arrow_schema(out_schema).empty_table(), out_schema
+            )
+        top = self._scan(codes, *self._tables(qrows, nprobe), k)
+        q_id = pa.array(
+            [r["q_id"] for r in qrows], type=to_arrow_type(q_type)
+        ).take(top["q"])
+        return spark.createDataFrame(
+            pa.table(
+                [q_id, top["c_id"], top["adc"], top["rk"]],
+                names=out_schema.names,
+            ),
+            out_schema,
+        )
+
+    def _check_queries(self, qrows: list) -> None:
+        """Raise ValueError naming the first query that is NULL, holds a
+        NULL component or has a dim other than the index's, or whose id
+        repeats."""
+        dim = self.qcv.shape[1] if self.cent_ids else None
+        for r in qrows:
+            v = r["q_vec"]
+            if v is None or any(x is None for x in v):
+                raise ValueError(
+                    f"IVF-PQ: query {r['q_id']!r} is NULL or has NULL "
+                    "components"
+                )
+            if dim is not None and len(v) != dim:
+                raise ValueError(
+                    f"IVF-PQ: query {r['q_id']!r} has dim {len(v)}, the "
+                    f"index has dim {dim}"
+                )
+        q_ids = [r["q_id"] for r in qrows]
+        if len(set(q_ids)) != len(q_ids):
+            dup = next(q for q in q_ids if q_ids.count(q) > 1)
+            raise ValueError(f"IVF-PQ: query id {dup!r} appears twice")
+
+    def _tables(self, qrows: list, nprobe: int):
+        """``(cells, slot, tab)`` for checked queries: the model indices
+        of every probed cell, ``slot[q, i]`` — the table query q reads
+        cell ``cells[i]``'s codes through, -1 when q does not probe it —
+        and the exact int64 ADC tables ``tab[table, sub, code index]``,
+        one per query, or one per (query, probed cell) when residual."""
+        m, d_sub = self.cb.shape[0], self.cb.shape[2]
+        probes = np.argsort(
+            -_micro_sims(
+                np.array([r["q_vec"] for r in qrows], dtype=np.float64),
+                self.qcv, self.sq,
+            ),
+            axis=1, kind="stable",
+        )[:, :nprobe]
+        cells = np.unique(probes)
+        at = np.full(len(self.cent_ids), -1)
+        at[cells] = np.arange(len(cells))
+        qv = np.array(
+            [_py_quantize_micro_unit(r["q_vec"]) for r in qrows],
+            dtype=np.int64,
+        )
+        slot = np.full((len(qrows), len(cells)), -1)
+        rows = np.repeat(np.arange(len(qrows)), probes.shape[1])
+        if self.cm is None:
+            slot[rows, at[probes].ravel()] = rows
+            reps = qv
+        else:
+            slot[rows, at[probes].ravel()] = np.arange(probes.size)
+            reps = (qv[:, None, :] - self.cm[probes]).reshape(len(rows), -1)
+        tab = np.empty((len(reps), m, self.cb.shape[1]), dtype=np.int64)
+        for s in range(m):
+            d = reps[:, None, s * d_sub:(s + 1) * d_sub] - self.cb[None, s]
+            tab[:, s] = (d * d).sum(axis=2)
+        return cells, slot, tab
+
+    def _scan(self, codes: DataFrame, cells, slot, tab, k: int):
+        """The one codes scan: (q, c_id, adc, n, rk) rows, the top-``k``
+        of every query index q over its probed cells.  A partition
+        keeps the top-k of the c_ids whose m code rows it saw (n = m)
+        and passes the partial sums of the others through; the driver
+        sums by (q, c_id) and ranks."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        m, has_cb, code0 = self.cb.shape[0], self.has_cb, self.code0
+        ncode = has_cb.shape[1]
+        cell_vals = pa.array(
+            [self.cent_ids[i] for i in cells],
+            type=to_arrow_type(self.cent_type),
+        ).cast(to_arrow_type(codes.schema["cent_id"].dataType))
+        part_schema = T.StructType([
+            T.StructField("q", T.IntegerType(), True),
+            codes.schema["c_id"],
+            T.StructField("adc", T.LongType(), True),
+            T.StructField("n", T.LongType(), True),
+        ])
+        names = part_schema.names
+
+        def scan(batches):
+            sums = []
+            for b in batches:
+                cell = pc.index_in(
+                    b.column("cent_id"), value_set=cell_vals
+                ).fill_null(-1).to_numpy(zero_copy_only=False)
+                live = np.flatnonzero(cell >= 0)
+                if live.size == 0:
+                    continue
+                sub_a = b.column("sub").take(live).cast(pa.int64())
+                code_a = b.column("code").take(live).cast(pa.int64())
+                sub = sub_a.fill_null(-1).to_numpy(zero_copy_only=False)
+                ci = code_a.fill_null(code0 - 1).to_numpy(
+                    zero_copy_only=False
+                ) - code0
+                ok = (sub >= 0) & (sub < m) & (ci >= 0) & (ci < ncode)
+                ok[ok] = has_cb[sub[ok], ci[ok]]
+                if not ok.all():
+                    # a q = -1 row reports a code row with no codeword:
+                    # adc carries its sub and n its code
+                    bad = np.flatnonzero(~ok)[:1]
+                    yield pa.RecordBatch.from_arrays([
+                        pa.array([-1], type=pa.int32()),
+                        b.column("c_id").take(live[bad]),
+                        sub_a.take(bad), code_a.take(bad),
+                    ], names)
+                    return
+                sl = slot[:, cell[live]]
+                q, j = np.nonzero(sl >= 0)
+                sums.append(_adc_sums(pa.table([
+                    pa.array(q.astype(np.int32)),
+                    b.column("c_id").take(live[j]),
+                    pa.array(tab[sl[q, j], sub[j], ci[j]]),
+                    pa.array(np.ones(len(j), dtype=np.int64)),
+                ], names=names)))
+            if not sums:
+                return
+            part = _adc_sums(pa.concat_tables(sums))
+            full = pc.equal(part["n"], m)
+            yield from _topk_by_query(part.filter(full), k).drop_columns(
+                ["rk"]
+            ).to_batches()
+            yield from part.filter(pc.invert(full)).to_batches()
+
+        got = (
+            codes.filter(F.col("cent_id").isin(cell_vals.to_pylist()))
+            .select("c_id", "sub", "code", "cent_id")
+            .mapInArrow(scan, part_schema)
+            .toArrow()
+        )
+        bad = got.filter(pc.equal(got["q"], -1)).to_pylist()
+        if bad:
+            raise ValueError(
+                f"IVF-PQ: code row of c_id {bad[0]['c_id']!r} has "
+                f"(sub={bad[0]['adc']}, code={bad[0]['n']}), which has "
+                "no codeword"
+            )
+        return _topk_by_query(_adc_sums(got), k)
+
+
 def ivfpq_search(
     centroids: DataFrame,
     codebooks: DataFrame,
@@ -1221,13 +1581,19 @@ def ivfpq_search(
     a coarse quantizer prunes WHICH codes are read, PQ compresses WHAT is
     read.  Each query ranks its ``nprobe`` nearest IVF centroids
     (exact-integer cosine, as :func:`ivf_search`), then ADC-ranks ONLY
-    the cell-tagged codes of those cells: with codes stored
+    the cell-tagged codes of those cells.  The centroids, codebooks and
+    queries are collected onto the driver (:class:`IvfPqModel`), which
+    picks the probed cells and builds the exact int64 ADC tables; one
+    ``mapInArrow`` scan over the codes, filtered to the probed cells,
+    keeps a top-k per partition and the driver merges them
+    (:meth:`IvfPqModel.search`).  With codes stored
     ``partitionBy("cent_id")`` (see :func:`pq_encode` ``cells=``) the
-    broadcast cell-probe join prunes the parquet read to
-    nprobe/num_centroids of the compressed index — the corpus is touched
-    through neither its vectors nor its full code set.  All ranking keys
-    are exact BIGINTs (ADC) or the fixed-IEEE exact cosine (probe), so
-    results are partitioning/retry-stable and oracle-checkable.
+    filter prunes the parquet read to nprobe/num_centroids of the
+    compressed index — the corpus is touched through neither its
+    vectors nor its full code set.  All ranking keys are exact int64s
+    (ADC) or the fixed-IEEE exact cosine (probe), so results are
+    partitioning/retry-stable and oracle-checkable.  The returned frame
+    is a local relation: this call runs the search.
 
     ``nprobe >= num_centroids`` degrades gracefully to exact
     :func:`pq_search` semantics (every cell probed) — pinned by the
@@ -1238,87 +1604,11 @@ def ivfpq_search(
     PER PROBED CELL — each (query, cell) pair subtracts the cell
     centroid from the query on the micro grid before the codeword
     distances, approximating ||q − x|| = ||(q − c) − (x − c)|| with the
-    residual codeword standing in for (x − c).  The table grows from
-    |Q|·m·ksub to |Q|·nprobe·m·ksub rows — still query-sized, still a
-    broadcast; the codes read is identically partition-pruned."""
-    from datalake_spark.functions.vectors import quantize_micro_unit
-
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        quantize_micro_unit(F.col(vec_col)).alias("_qv"),
-    )
-    q_probe = (
-        q.join(F.broadcast(centroids))
-        .withColumn("sim", cosine_micro_exact("q_vec", "cent_vec"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                W.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("cent_id"))
-            ),
-        )
-        .filter(F.col("rk") <= nprobe)
-        .select("q_id", "cent_id")
-    )
-    d_sub = _pq_d_sub(m)
-    if residual:
-        cm = centroids.select(
-            "cent_id", quantize_micro_unit(F.col("cent_vec")).alias("_cm")
-        )
-        # per-(query, probed cell) residual, then slice: the ADC table
-        # carries cent_id so each cell's codes meet their own table rows
-        qres = (
-            q.join(F.broadcast(q_probe), "q_id")
-            .join(F.broadcast(cm), "cent_id")
-            .select(
-                "q_id", "cent_id",
-                F.zip_with("_qv", "_cm", lambda a, b: a - b).alias("_qv"),
-            )
-        )
-        qsub = qres.select(
-            "q_id", "cent_id",
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
-            F.slice(F.col("_qv"), F.col("sub") * d_sub + 1, d_sub).alias(
-                "qv_micro"
-            ),
-        )
-        table_keys = ["q_id", "cent_id", "sub", "code"]
-    else:
-        qsub = q.select(
-            "q_id",
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
-            F.slice(F.col("_qv"), F.col("sub") * d_sub + 1, d_sub).alias(
-                "qv_micro"
-            ),
-        )
-        table_keys = ["q_id", "sub", "code"]
-    zero = F.lit(0).cast("long")
-    dist = F.aggregate(
-        F.zip_with(
-            F.col("qv_micro"), F.col("cb_micro"),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        zero,
-        lambda acc, x: acc + x,
-    )
-    qtable = (
-        qsub.join(F.broadcast(codebooks), "sub")
-        .withColumn("_dist", dist)
-        .select(*[c for c in table_keys if c != "code"], "code", "_dist")
-    )
-    # probe-pruned ADC: codes ⋈ broadcast(probe) on the cell key — on a
-    # cent_id-partitioned parquet index this is the partition-pruning
-    # read; qtable (|Q|·m·ksub rows, ·nprobe when residual) broadcasts
-    # like pq_search's
-    adc = (
-        codes.join(F.broadcast(q_probe), "cent_id")
-        .join(F.broadcast(qtable), table_keys)
-        .groupBy("q_id", "c_id")
-        .agg(F.sum("_dist").alias("adc"))
-    )
-    w = W.partitionBy("q_id").orderBy("adc", "c_id")
-    return adc.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= k
+    residual codeword standing in for (x − c).  The tables grow from
+    |Q|·m·ksub to |Q|·nprobe·m·ksub entries — still query-sized; the
+    codes read is identically partition-pruned."""
+    return IvfPqModel.of(centroids, codebooks, m, residual).search(
+        codes, queries, k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col
     )
 
 

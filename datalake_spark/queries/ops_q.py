@@ -1244,14 +1244,11 @@ def ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx.build(base)
     idx.append(extra, 1)
     reopened = IvfPqIndex(spark, root)  # params come from the manifest
+    # search runs when called and returns a local relation, so the
+    # pre-rebuild rows do not read the version dir the swap retires
     pre = reopened.search(q, k=3, nprobe=4).select(
         "q_id", "c_id", "adc", "rk"
     ).withColumn("stage", F.lit("pre"))
-    # force the pre-rebuild probe NOW: its lazy plan reads the v2
-    # version dir, which stays on disk after the swap (keep_versions
-    # history), but materializing before the swap keeps the gate
-    # independent of retention knobs
-    pre = spark.createDataFrame(pre.collect(), pre.schema)
     reopened.rebuild(emb_sp)  # inner-joins committed ids: queries excluded
     post = IvfPqIndex(spark, root).search(q, k=3, nprobe=4).select(
         "q_id", "c_id", "adc", "rk"

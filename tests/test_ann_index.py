@@ -6,6 +6,8 @@ hash-bucketed prior-ids prune."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -802,3 +804,167 @@ class TestEpochProvenance:
         assert m["streams"] == before["streams"]
         # the binding survives the swap — restart keeps its identity
         assert idx.register_stream("/ck/d", "/landing/d") == (sid, base)
+
+
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status tracker asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_VEC = "vec_id long, embedding array<double>"
+
+
+class TestInteractiveSearch:
+    """The search path: the model decoded once per version dir, one
+    partition-pruned codes scan, a local-relation result."""
+
+    def _index(self, spark, emb, tmp_path):
+        idx = IvfPqIndex(spark, str(tmp_path / "iidx"),
+                         num_centroids=8, m=16, ksub=16)
+        idx.build(emb.filter("vec_id >= 3 and vec_id < 200"))
+        return idx
+
+    def test_warm_search_runs_at_most_two_jobs(self, spark, emb, tmp_path):
+        idx = self._index(spark, emb, tmp_path)
+        q = emb.filter("vec_id < 3")
+        want = _topk(idx.search(q, k=5, nprobe=3))  # loads the model
+        arrow_q = spark.createDataFrame(q.toArrow())
+        list_q = spark.createDataFrame(q.collect(), q.schema)
+        got, n = _jobs(spark, lambda: _topk(idx.search(arrow_q, k=5,
+                                                       nprobe=3)))
+        assert got == want and n <= 1, n
+        got, n = _jobs(spark, lambda: _topk(idx.search(list_q, k=5,
+                                                       nprobe=3)))
+        assert got == want and n <= 2, n
+        # the result is a local relation: collecting it again is free
+        out = idx.search(arrow_q, k=5, nprobe=3)
+        assert _jobs(spark, out.collect)[1] == 0
+
+    def test_append_is_visible_without_a_model_reload(
+            self, spark, emb, tmp_path, monkeypatch):
+        idx = self._index(spark, emb, tmp_path)
+        q = emb.filter("vec_id < 3")
+        idx.search(q, k=5, nprobe=3)
+        loaded = idx._model
+        idx.append(emb.filter("vec_id >= 200"), 1)
+
+        def no_reload(*_a, **_k):
+            raise AssertionError("model re-read after an append")
+
+        monkeypatch.setattr(IvfPqIndex, "_read_model", no_reload)
+        got = _topk(idx.search(q, k=20, nprobe=8))
+        assert idx._model is loaded
+        assert any(c >= 200 for c, _ in got.values())
+        monkeypatch.undo()
+        fresh = IvfPqIndex(spark, str(tmp_path / "iidx"))
+        assert _topk(fresh.search(q, k=20, nprobe=8)) == got
+
+    def test_rebuild_reloads_the_model(self, spark, emb, tmp_path):
+        idx = self._index(spark, emb, tmp_path)
+        q = emb.filter("vec_id < 3")
+        idx.search(q, k=5, nprobe=3)
+        before = idx._model[0]
+        idx.append(emb.filter("vec_id >= 200"), 1)
+        man = idx.rebuild(emb)
+        got = _topk(idx.search(q, k=5, nprobe=3))
+        assert idx._model[0] == man["dir"] != before
+        want = _topk(similarity.ivfpq_topk(
+            q, emb.filter("vec_id >= 3"), k=5, num_centroids=8, nprobe=3,
+            m=16, ksub=16))
+        assert got == want and got
+
+    def test_small_frames_are_local_relations(self, spark, emb):
+        """The parameter-bounded frames of the build are rebuilt from
+        pyarrow Tables: collecting them launches no job."""
+        from datalake_spark.operators.similarity import (
+            _materialize_small,
+            _seed_codebooks_local,
+        )
+
+        small = _materialize_small(emb.filter("vec_id < 4"))
+        seeds = [{"_id": r["vec_id"], "_vec": r["embedding"]}
+                 for r in emb.filter("vec_id < 4").collect()]
+        cb = _seed_codebooks_local(spark, seeds, m=16)
+        for df, n_rows in ((small, 4), (cb, 4 * 16)):
+            rows, n = _jobs(spark, df.collect)
+            assert len(rows) == n_rows and n == 0, n
+        assert small.schema == emb.schema
+        assert small.collect() == emb.filter("vec_id < 4").collect()
+
+
+class TestMalformedQueries:
+    """Every malformed query gets one ValueError naming it, the same on
+    the one-call operator and on the standing index; so does a code
+    row with no codeword."""
+
+    @pytest.fixture(scope="class")
+    def index(self, spark, emb, tmp_path_factory):
+        idx = IvfPqIndex(spark, str(tmp_path_factory.mktemp("midx")),
+                         num_centroids=8, m=16, ksub=16)
+        idx.build(emb.filter("vec_id >= 3 and vec_id < 200"))
+        return idx
+
+    @pytest.fixture(params=["ivfpq_topk", "IvfPqIndex.search"])
+    def search(self, request, emb, index):
+        if request.param == "ivfpq_topk":
+            c = emb.filter("vec_id >= 3 and vec_id < 200")
+            return lambda q, k=5: similarity.ivfpq_topk(
+                q, c, k=k, num_centroids=8, nprobe=3, m=16, ksub=16,
+                train_iters=0)
+        return lambda q, k=5: index.search(q, k=k, nprobe=3)
+
+    @pytest.mark.parametrize("vec, what", [
+        (None, "NULL"),
+        ([0.5] * 10 + [None] + [0.5] * 53, "NULL"),
+        ([0.5] * 32, "dim 32"),
+        ([0.5] * 63, "dim 63"),
+    ])
+    def test_bad_query_raises_naming_it(self, spark, search, vec, what):
+        q = spark.createDataFrame([(7001, [0.1] * 64), (9001, vec)], _VEC)
+        with pytest.raises(ValueError, match=f"query 9001 .*{what}"):
+            search(q)
+
+    def test_repeated_query_id_raises(self, spark, search):
+        q = spark.createDataFrame([(9001, [0.1] * 64)] * 2, _VEC)
+        with pytest.raises(ValueError, match="query id 9001 appears twice"):
+            search(q)
+
+    def test_all_zero_query_ranks_normally(self, spark, search):
+        q = spark.createDataFrame([(9001, [0.0] * 64)], _VEC)
+        got = _topk(search(q))
+        assert sorted(rk for _, rk in got) == [1, 2, 3, 4, 5]
+
+    def test_code_without_codeword_raises(self, spark, emb, tmp_path):
+        """The join form's inner join dropped such a row without a
+        word; both paths now name it."""
+        c = emb.filter("vec_id >= 3 and vec_id < 200")
+        q = emb.filter("vec_id < 3")
+        cents, assign = similarity.ivf_index_build(c, 8)
+        cb = similarity.pq_train(c, m=16, ksub=16, iters=0)
+        codes = similarity.pq_encode(
+            c, cb, m=16, cells=assign.select("c_id", "cent_id"))
+        bad = codes.limit(1).withColumn("code", F.lit(999))
+        with pytest.raises(ValueError, match="code=999.*no codeword"):
+            similarity.ivfpq_search(
+                cents, cb, codes.unionByName(bad), q, k=5, nprobe=8, m=16)
+
+        index = IvfPqIndex(spark, str(tmp_path / "cidx"),
+                           num_centroids=8, m=16, ksub=16)
+        index.build(c)
+        man = index.manifest()
+        cent = index._url(man["dir"], IvfPqIndex.CODES, "epoch=0")
+        cell = spark.read.parquet(cent).first()["cent_id"]
+        spark.createDataFrame(
+            [(99999, 3, 999)], "c_id long, sub int, code int"
+        ).write.mode("append").parquet(f"{cent}/cent_id={cell}")
+        with pytest.raises(ValueError, match="99999 .*sub=3, code=999"):
+            index.search(q, k=5, nprobe=8)
