@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from datalake_spark.metadata import DAY_MS
 from datalake_spark.schema import FILES_SCHEMA
+from datalake_spark.session import local_frame
 from datalake_spark.store import ObjectStore, join_key, open_store
 
 
@@ -1044,7 +1045,7 @@ class Catalog:
                 list(FILES_SCHEMA.fields)
                 + [T.StructField("wid_bucket", T.IntegerType(), True)]
             )
-            df = self.spark.createDataFrame([], schema)
+            df = local_frame(self.spark, [], schema)
         return (df, m["num_buckets"])
 
     def partition_file_counts(self) -> dict[str, int]:

@@ -45,6 +45,8 @@ from datetime import datetime, timezone
 from typing import Iterable
 from urllib.parse import parse_qs, quote, urlencode
 
+from pyspark.sql import types as T
+
 from datalake_spark.archive import InvalidDatalakePath
 from datalake_spark.query import (
     DEFAULT_LOOKBACK_DAYS,
@@ -52,6 +54,7 @@ from datalake_spark.query import (
     MAX_RESULTS,
     QueryEngine,
 )
+from datalake_spark.session import local_frame
 
 _METADATA_FIELDS = (
     "version", "start", "end", "what", "where", "id", "hash", "path",
@@ -108,6 +111,16 @@ class _HttpError(Exception):
     def __init__(self, status: int, code: str, message: str) -> None:
         super().__init__(message)
         self.status, self.code, self.message = status, code, message
+
+
+# one row per traced request, as RequestMonitor.flush_parquet appends it
+_MONITOR_SCHEMA = T.StructType([
+    T.StructField("route", T.StringType()),
+    T.StructField("status", T.IntegerType()),
+    T.StructField("ms", T.DoubleType()),
+    T.StructField("code", T.StringType()),
+    T.StructField("ts_ms", T.LongType()),
+])
 
 
 class RequestMonitor:
@@ -167,10 +180,8 @@ class RequestMonitor:
             self.records.clear()
         if not rows:
             return 0
-        spark.createDataFrame(
-            rows,
-            "route string, status int, ms double, code string, ts_ms long",
-        ).coalesce(1).write.mode("append").parquet(path)
+        df = local_frame(spark, rows, _MONITOR_SCHEMA)
+        df.coalesce(1).write.mode("append").parquet(path)
         return len(rows)
 
 
@@ -352,7 +363,7 @@ class DatalakeHttpApp:
         )
 
     def _lookup(self, file_id: str):
-        rows = self.engine.by_id(file_id).limit(1).collect()
+        rows = self.engine.by_id(file_id).collect()
         if not rows:
             raise _HttpError(
                 404, "NoSuchFile", f"no file with id {file_id}"

@@ -21,6 +21,7 @@ from datalake_spark.catalog import Catalog
 from datalake_spark.functions.hashing import blake2b_udf
 from datalake_spark.metadata import Metadata
 from datalake_spark.schema import FILES_SCHEMA
+from datalake_spark.session import local_frame
 from datalake_spark.translator import Translator
 
 
@@ -71,10 +72,7 @@ def push_metadata(
         }
         for r in records
     ]
-    df = spark.createDataFrame(
-        [{f.name: row.get(f.name) for f in FILES_SCHEMA.fields} for row in rows],
-        schema=FILES_SCHEMA,
-    )
+    df = local_frame(spark, rows, FILES_SCHEMA)
     catalog.append(df)
     return df
 

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datalake_spark.functions.vectors import cosine_micro_exact
-from datalake_spark.session import persisted
+from datalake_spark.session import local_frame, persisted
 
 
 def brute_force_topk(
@@ -734,26 +734,7 @@ def _seed_codebooks_local(
             rows.append(
                 (sub, code, qv[sub * d_sub : (sub + 1) * d_sub])
             )
-    return _local_frame(spark, rows, _CB_SCHEMA)
-
-
-def _local_frame(spark, rows: list, schema: T.StructType) -> DataFrame:
-    """``rows`` as a DataFrame built from a pyarrow Table: a small one is
-    a ``LocalRelation``, which a ``collect()`` reads on the driver with
-    no Spark job.  ``createDataFrame`` over a Python list builds a
-    ``LogicalRDD`` instead, and each of its collects runs a job."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    cols = list(zip(*rows)) if rows else [[] for _ in schema.fields]
-    arrow = to_arrow_schema(schema)
-    return spark.createDataFrame(
-        pa.table(
-            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
-            schema=arrow,
-        ),
-        schema,
-    )
+    return local_frame(spark, rows, _CB_SCHEMA)
 
 
 def _materialize_small(df: DataFrame) -> DataFrame:
@@ -772,7 +753,7 @@ def _materialize_small(df: DataFrame) -> DataFrame:
     literal rebuild truncates the lineage exactly — values identical
     (exact longs/doubles roundtrip), determinism unchanged, and unlike
     ``localCheckpoint`` nothing can be lost with an executor."""
-    return _local_frame(df.sparkSession, df.collect(), df.schema)
+    return local_frame(df.sparkSession, df.collect(), df.schema)
 
 
 def _pq_d_sub(m: int):

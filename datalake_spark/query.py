@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datalake_spark.metadata import DAY_MS, InvalidDatalakeMetadata, normalize_date
+from datalake_spark.session import local_frame
 
 # querier.py:36-44
 DEFAULT_LOOKBACK_DAYS = 14
@@ -154,6 +155,12 @@ class QueryEngine:
 
     # -- O1/O3: time-interval query ----------------------------------------
     def by_time(self, what: str, start, end, where: str | None = None) -> DataFrame:
+        """Files of ``what`` whose interval overlaps [start, end], each id
+        once.  The id dedup costs an exchange, and it stays: nothing forces
+        two rows of one id to share ``start`` (an ``ObjectCreated:Copy``
+        re-delivers the id with whatever metadata it carries), so they can
+        sit in different splits and partitions, and a dedup inside each
+        split followed by a merge would be unsound."""
         qstart, qend = normalize_date(start), normalize_date(end)
         df = self.files_df.filter(F.col("what") == what)
         if self._has_bucket_date:
@@ -167,6 +174,9 @@ class QueryEngine:
 
     # -- O2: work-id query --------------------------------------------------
     def by_work_id(self, work_id: str, what: str, where: str | None = None) -> DataFrame:
+        """Files of ``what`` carrying ``work_id``, each id once.  The id
+        dedup's exchange stays for the reason ``by_time`` gives: the rows
+        of one re-delivered id need not share a split."""
         if self._wid_index is not None:
             # hash-bucket partition pruning: the bucket expression folds to
             # a literal (xxhash64 of a constant), so the scan touches
@@ -223,9 +233,11 @@ class QueryEngine:
 
         Fast path (O5, querier.py:355-379): when a materialized latest table
         is attached, probe it first — a single point-read job of a tiny
-        table — and fall back to the full scan only if the row is absent or
-        starts beyond the 24 h lookforward cap (the cap exists only on the
-        latest-table path, as in the reference)."""
+        table, run by this call — and fall back to the full scan only if
+        the row is absent or starts beyond the 24 h lookforward cap (the
+        cap exists only on the latest-table path, as in the reference).  A
+        hit comes back as a local relation, so the probe is the route's
+        one job."""
         now = normalize_date(as_of if as_of is not None else "now")
         if self._latest is not None:
             hit = self._latest.filter(
@@ -234,7 +246,7 @@ class QueryEngine:
             ).drop("what_where_key")
             rows = hit.limit(1).collect()  # ONE job: probe + fetch together
             if rows:
-                return self.files_df.sparkSession.createDataFrame(rows, hit.schema)
+                return local_frame(self.files_df.sparkSession, rows, hit.schema)
         now_bucket = now // DAY_MS
         lo_bucket = (now - lookback_days * DAY_MS) // DAY_MS
         end_eff = F.coalesce(F.col("end"), F.col("start"))
@@ -274,7 +286,12 @@ class QueryEngine:
 
     # -- O11: point lookup --------------------------------------------------
     def by_id(self, file_id: str) -> DataFrame:
-        return self.files_df.filter(F.col("id") == file_id).dropDuplicates(["id"])
+        """The file with id ``file_id``: 0 or 1 rows, as the reference's
+        one DynamoDB get (fetcher.py:70-91).  A re-delivered id has more
+        than one row in the catalog; any one of them is the answer, so a
+        limit stands in for the id dedup.  The plan has no exchange, and a
+        collect stops at the first split that holds the id."""
+        return self.files_df.filter(F.col("id") == file_id).limit(1)
 
     # -- O6: stable pagination emulation ------------------------------------
     def page(self, df: DataFrame, page: int = 0, page_size: int = MAX_RESULTS) -> DataFrame:

@@ -61,27 +61,19 @@ INGEST_EVENT_SCHEMA = T.StructType(
     ]
 )
 
-# Ingester report side-output (ingester/datalake_ingester/ingester.py:27-65).
+# Ingester report side-output (ingester/datalake_ingester/ingester.py:27-65),
+# flattened to one row of counts per streaming-ingest micro-batch.  The
+# fields are nullable and in alphabetical order, as Spark infers them from
+# the report dict, so a reports table written from that inference reads as
+# one schema with the rows appended under this one.
 REPORT_SCHEMA = T.StructType(
     [
-        T.StructField("version", T.IntegerType(), nullable=False),
-        T.StructField("status", T.StringType(), nullable=False),
-        T.StructField("start", T.LongType(), nullable=False),
-        T.StructField("duration", T.DoubleType(), nullable=False),
-        T.StructField("message", T.StringType(), nullable=True),
-        T.StructField(
-            "records",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("url", T.StringType()),
-                        T.StructField("size", T.LongType()),
-                        T.StructField("create_time", T.LongType()),
-                        T.StructField("metadata", METADATA_SCHEMA),
-                    ]
-                )
-            ),
-            nullable=False,
-        ),
+        T.StructField("duration", T.DoubleType()),
+        T.StructField("epoch_id", T.LongType()),
+        T.StructField("n_errors", T.LongType()),
+        T.StructField("n_records", T.LongType()),
+        T.StructField("start", T.LongType()),
+        T.StructField("status", T.StringType()),
+        T.StructField("version", T.LongType()),
     ]
 )

@@ -11,10 +11,11 @@ from __future__ import annotations
 
 import contextvars
 import os
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # At 100 TB the shuffle-partition count should target ~128-256 MB per
 # partition post-shuffle; AQE coalesces down from a high initial number, so on
@@ -70,6 +71,47 @@ def get_spark(app_name: str = "datalake_spark", master: str | None = None) -> Sp
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence, schema: T.StructType
+) -> DataFrame:
+    """``rows`` held on the driver as a DataFrame of ``schema``.  A row
+    is a tuple (a ``Row`` too) in the schema's field order, or a dict
+    keyed by field name whose missing keys read as NULL.
+
+    The frame is built from a pyarrow Table, so one under
+    ``spark.sql.execution.arrow.localRelationThreshold`` is a
+    ``LocalRelation``: a ``collect()`` reads it on the driver with no
+    Spark job.  ``createDataFrame`` over a Python list builds a
+    ``LogicalRDD`` instead, and each of its actions runs a Python-worker
+    job.  A NULL in a non-nullable field raises ``ValueError``, as
+    ``createDataFrame``'s schema check does.
+
+    The rows travel inside the plan, so this is for frames bounded by a
+    parameter or by one request.  The local paths of
+    ``dedup.connected_components`` (up to ``local_edge_budget`` = 2M
+    edges) and ``bpe_train`` (up to 1M vocab rows) keep
+    ``createDataFrame``: a ``LocalRelation`` would embed that many rows
+    in every plan that reads it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = schema.names
+    if rows and isinstance(rows[0], dict):
+        rows = [tuple(r.get(n) for n in names) for r in rows]
+    cols = list(zip(*rows)) if rows else [()] * len(names)
+    for field, col in zip(schema.fields, cols):
+        if not field.nullable and any(v is None for v in col):
+            raise ValueError(f"field {field.name}: NULL in a non-nullable field")
+    arrow = to_arrow_schema(schema)
+    return spark.createDataFrame(
+        pa.table(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+            schema=arrow,
+        ),
+        schema,
+    )
 
 
 # Open ``released()`` scopes, innermost last.  A ContextVar, so each

@@ -25,8 +25,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datalake_spark.catalog import Catalog, with_bucket_date
-from datalake_spark.schema import FILES_SCHEMA, INGEST_EVENT_SCHEMA
-from datalake_spark.session import persisted, released
+from datalake_spark.schema import INGEST_EVENT_SCHEMA, REPORT_SCHEMA
+from datalake_spark.session import local_frame, persisted, released
 
 SUPPORTED_EVENTS = {
     "ObjectCreated:Put": "store",
@@ -141,7 +141,8 @@ class StreamingIngester:
                 self.catalog.append(files)
                 _merge_latest(spark, self.catalog, files)
             # report side-output (ingester.py:27-65 shape, flattened)
-            report = spark.createDataFrame(
+            report = local_frame(
+                spark,
                 [
                     {
                         "version": 0,
@@ -152,7 +153,8 @@ class StreamingIngester:
                         "n_errors": n_err,
                         "epoch_id": epoch_id,
                     }
-                ]
+                ],
+                REPORT_SCHEMA,
             )
             report.write.mode("append").parquet(self.reports_path)
         finally:

@@ -34,6 +34,20 @@ def surface():
     return sorted(qs.items())
 
 
+def count_jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status tracker asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def rdd_ids(spark) -> set:
     """Ids of the session's persistent RDDs (cached or checkpointed)."""
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())

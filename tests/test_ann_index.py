@@ -6,8 +6,6 @@ hash-bucketed prior-ids prune."""
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,7 +16,7 @@ from datalake_spark.operators.ann_index import (
     IvfPqIndex,
 )
 from datalake_spark.queries import load
-from tests.conftest import SF_DIR, rdd_ids
+from tests.conftest import SF_DIR, count_jobs, rdd_ids
 
 
 @pytest.fixture(scope="module")
@@ -806,20 +804,6 @@ class TestEpochProvenance:
         assert idx.register_stream("/ck/d", "/landing/d") == (sid, base)
 
 
-def _jobs(spark, fn):
-    """``fn()`` and the number of Spark jobs it launched."""
-    sc = spark.sparkContext
-    group = f"count-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # job events reach the status tracker asynchronously
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 _VEC = "vec_id long, embedding array<double>"
 
 
@@ -839,15 +823,15 @@ class TestInteractiveSearch:
         want = _topk(idx.search(q, k=5, nprobe=3))  # loads the model
         arrow_q = spark.createDataFrame(q.toArrow())
         list_q = spark.createDataFrame(q.collect(), q.schema)
-        got, n = _jobs(spark, lambda: _topk(idx.search(arrow_q, k=5,
-                                                       nprobe=3)))
+        got, n = count_jobs(spark, lambda: _topk(idx.search(arrow_q, k=5,
+                                                            nprobe=3)))
         assert got == want and n <= 1, n
-        got, n = _jobs(spark, lambda: _topk(idx.search(list_q, k=5,
-                                                       nprobe=3)))
+        got, n = count_jobs(spark, lambda: _topk(idx.search(list_q, k=5,
+                                                            nprobe=3)))
         assert got == want and n <= 2, n
         # the result is a local relation: collecting it again is free
         out = idx.search(arrow_q, k=5, nprobe=3)
-        assert _jobs(spark, out.collect)[1] == 0
+        assert count_jobs(spark, out.collect)[1] == 0
 
     def test_append_is_visible_without_a_model_reload(
             self, spark, emb, tmp_path, monkeypatch):
@@ -895,7 +879,7 @@ class TestInteractiveSearch:
                  for r in emb.filter("vec_id < 4").collect()]
         cb = _seed_codebooks_local(spark, seeds, m=16)
         for df, n_rows in ((small, 4), (cb, 4 * 16)):
-            rows, n = _jobs(spark, df.collect)
+            rows, n = count_jobs(spark, df.collect)
             assert len(rows) == n_rows and n == 0, n
         assert small.schema == emb.schema
         assert small.collect() == emb.filter("vec_id < 4").collect()

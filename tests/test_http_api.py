@@ -13,9 +13,11 @@ import urllib.request
 
 import pytest
 
+from datalake_spark.catalog import Catalog
 from datalake_spark.http_api import DatalakeHttpApp, HttpQuerier, serve
 from datalake_spark.metadata import DAY_MS
 from datalake_spark.query import QueryEngine
+from tests.conftest import count_jobs
 from tests.test_query_engine import T0, make_files_df
 
 ROWS = [
@@ -336,3 +338,37 @@ class TestMetricsEndpoint:
         }
         h = routes[("/health/", 200)]
         assert h["n"] == 2 and h["mean_ms"] >= 0 and h["n_err"] == 0
+
+
+class TestFileLookup:
+    """The file routes over a catalog: one job for a lookup, one answer
+    for an id delivered twice."""
+
+    def test_metadata_route_runs_one_job_on_one_split(self, spark, tmp_path):
+        cat = Catalog(spark, str(tmp_path))
+        # one (what, bucket_date) partition, one append: one data file
+        cat.append(make_files_df(spark, [
+            {"id": f"f{i}", "what": "nginx", "where": "h1",
+             "start": T0 + i, "end": None}
+            for i in range(5)
+        ]))
+        app = DatalakeHttpApp(QueryEngine(cat.files()))
+        (status, body), n = count_jobs(spark, lambda: TestRequestMonitor._call(
+            app, "/v0/archive/files/f3/metadata"))
+        assert status == "200 OK" and json.loads(body)["id"] == "f3"
+        assert n == 1, n
+
+    def test_duplicate_id_metadata_is_200(self, spark, tmp_path):
+        cat = Catalog(spark, str(tmp_path))
+        first = {"id": "dup", "what": "nginx", "where": "h1", "start": T0,
+                 "end": None, "create_time": T0 + 1}
+        cat.append(make_files_df(spark, [first]))
+        cat.append(make_files_df(spark, [dict(first, create_time=T0 + 2)]))
+        app = DatalakeHttpApp(QueryEngine(cat.files()))
+        status, body = TestRequestMonitor._call(
+            app, "/v0/archive/files/dup/metadata")
+        assert status == "200 OK" and json.loads(body)["id"] == "dup"
+        status, body = TestRequestMonitor._call(
+            app, "/v0/archive/files/nope/metadata")
+        assert status.startswith("404")
+        assert json.loads(body)["code"] == "NoSuchFile"

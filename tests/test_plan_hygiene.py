@@ -654,3 +654,64 @@ def test_spread_floor_declines_on_any_arrow_error(spark, tmp_path,
     monkeypatch.setattr(pq, "ParquetFile", failing_footer)
     assert queries._spread_partitions(spark, path) is None
     assert calls and path not in queries._SPREAD_MEMO
+
+
+# the archive's serve and ingest paths, whose driver-held rows (a latest
+# hit, a batch report, pushed metadata, request records, an empty index)
+# would each cost a Python-worker job as a list-built frame
+_LOCAL_FRAME_ONLY = ("query.py", "http_api.py", "streaming/ingest.py",
+                     "ingest.py", "catalog.py")
+
+
+def test_archive_paths_build_driver_rows_with_local_frame():
+    """No ``createDataFrame`` call comes back on the archive's paths:
+    rows held on the driver become a frame through session.local_frame."""
+    import datalake_spark
+
+    root = pathlib.Path(datalake_spark.__file__).parent
+    found = []
+    for rel in _LOCAL_FRAME_ONLY:
+        for node in ast.walk(ast.parse((root / rel).read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                found.append((rel, node.lineno))
+    assert not found
+
+
+def test_local_frame_round_trips_exactly(spark):
+    """Exact values (NULLs, the BIGINT extremes, doubles to the last bit)
+    and the schema come back unchanged, collecting launches no job, and a
+    NULL in a non-nullable field is refused."""
+    from pyspark.sql import types as T
+
+    from datalake_spark.schema import FILES_SCHEMA
+    from datalake_spark.session import local_frame
+    from tests.conftest import count_jobs
+
+    lo, hi = -(2 ** 63), 2 ** 63 - 1
+    schema = T.StructType(
+        FILES_SCHEMA.fields + [T.StructField("score", T.DoubleType())]
+    )
+    base = {"version": 0, "what": "nginx", "where": "h1", "hash": "h",
+            "path": "/p", "url": "s3://b/k", "size": 0}
+    dicts = [
+        dict(base, id="a", start=lo, end=None, work_id=None,
+             create_time=hi, score=0.1),
+        dict(base, id="b", start=hi, end=lo, work_id="w",
+             create_time=lo, score=-1.7976931348623157e308),
+        dict(base, id="c", start=0, end=hi, create_time=0, score=5e-324),
+    ]
+    want = [tuple(d.get(n) for n in schema.names) for d in dicts]
+    for rows in (dicts, want):
+        df = local_frame(spark, rows, schema)
+        got, n = count_jobs(spark, df.collect)
+        assert n == 0, n
+        assert [tuple(r) for r in got] == want
+        assert df.schema == schema
+    empty = local_frame(spark, [], schema)
+    assert empty.schema == schema and count_jobs(spark, empty.collect) == ([], 0)
+    with pytest.raises(ValueError, match="size"):
+        local_frame(spark, [dict(dicts[0], size=None)], schema)

@@ -14,7 +14,7 @@ from datalake_spark.catalog import Catalog
 from datalake_spark.metadata import DAY_MS
 from datalake_spark.query import QueryEngine
 from datalake_spark.schema import FILES_SCHEMA
-from tests.conftest import random_metadata
+from tests.conftest import count_jobs, random_metadata
 
 T0 = 1420070400000  # 2015-01-01
 
@@ -482,3 +482,58 @@ class TestLatestFastPath:
         # partition columns still present and pruning still works
         eng = QueryEngine(cat.files())
         assert eng.by_time("nginx", T0, T0 + 1).count() == 5 * 4  # i%3==0 rows
+
+
+class TestReadJobs:
+    """Each archive read runs only the jobs its answer needs: a latest hit
+    is the probe alone, a point lookup is one scan with no exchange."""
+
+    @pytest.fixture()
+    def cat(self, spark, tmp_path):
+        cat = Catalog(spark, str(tmp_path))
+        cat.append(make_files_df(spark, [
+            {"id": "old", "what": "nginx", "where": "h1", "start": T0 + 1000,
+             "end": None},
+            {"id": "new", "what": "nginx", "where": "h1", "start": T0 + 5000,
+             "end": None},
+        ]))
+        cat.refresh_latest()
+        return cat
+
+    def test_latest_hit_runs_one_job(self, spark, cat):
+        eng = QueryEngine(cat.files(), latest_table=cat.latest_table())
+        # the probe runs inside latest(), so count around the call too
+        rows, n = count_jobs(
+            spark, lambda: eng.latest("nginx", "h1", as_of=T0 + DAY_MS)
+            .collect())
+        assert [r["id"] for r in rows] == ["new"] and n == 1, n
+
+    def test_latest_miss_falls_back_to_the_scan(self, spark, cat):
+        # a (what, where) appended after the latest table was refreshed
+        cat.append(make_files_df(spark, [
+            {"id": "late", "what": "nginx", "where": "h9", "start": T0 + 9000,
+             "end": None},
+        ]))
+        eng = QueryEngine(cat.files(), latest_table=cat.latest_table())
+        got = eng.latest("nginx", "h9", as_of=T0 + DAY_MS).collect()
+        scan = QueryEngine(cat.files()).latest("nginx", "h9", as_of=T0 + DAY_MS)
+        assert got == scan.collect() and [r["id"] for r in got] == ["late"]
+
+    def test_by_id_plan_has_no_exchange(self, cat):
+        q = QueryEngine(cat.files()).by_id("new")
+        assert "Exchange" not in q._jdf.queryExecution().executedPlan().toString()
+        assert [r["id"] for r in q.collect()] == ["new"]
+
+    def test_duplicate_id_returns_one_of_its_rows(self, spark, tmp_path):
+        cat = Catalog(spark, str(tmp_path))
+        first = {"id": "dup", "what": "nginx", "where": "h1", "start": T0,
+                 "end": None, "hash": "h", "create_time": T0 + 1}
+        # a re-delivery may carry other metadata, here another day
+        again = dict(first, start=T0 + 3 * DAY_MS, create_time=T0 + 2)
+        cat.append(make_files_df(spark, [first]))
+        cat.append(make_files_df(spark, [again]))
+        appended = [r.asDict() for r in make_files_df(spark, [first, again])
+                    .collect()]
+        rows = QueryEngine(cat.files()).by_id("dup").collect()
+        assert len(rows) == 1
+        assert {k: rows[0][k] for k in FILES_SCHEMA.names} in appended

@@ -5,6 +5,7 @@ arrivals), report side-output."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -93,6 +94,33 @@ class TestIngest:
         assert reports.count() == 1
         r = reports.collect()[0]
         assert r["status"] == "error" and r["n_records"] == 2 and r["n_errors"] == 1
+
+    def test_reports_schema_is_pinned(self, spark, tmp_path):
+        """A batch appends its report in the schema Spark inferred from the
+        report dict, so a reports table written by that inference still
+        reads as one schema after the append."""
+        cat = Catalog(spark, os.path.join(str(tmp_path), "cat"))
+        ing = StreamingIngester(spark, cat)
+        spark.createDataFrame([{
+            "version": 0, "status": "success", "start": 1, "duration": 0.5,
+            "n_records": 3, "n_errors": 0, "epoch_id": 7,
+        }]).write.parquet(ing.reports_path)
+        landing = os.path.join(str(tmp_path), "landing")
+        write_events(landing, [event("a1")])
+        ing.start(landing, os.path.join(str(tmp_path), "ckpt")).awaitTermination(60)
+        pinned = (
+            "struct<duration:double,epoch_id:bigint,n_errors:bigint,"
+            "n_records:bigint,start:bigint,status:string,version:bigint>"
+        )
+        parts = glob.glob(os.path.join(ing.reports_path, "*.parquet"))
+        assert len(parts) >= 2
+        for part in parts:
+            assert spark.read.parquet(part).schema.simpleString() == pinned
+        reports = ing.reports()
+        assert reports.schema.simpleString() == pinned
+        assert sorted((r["epoch_id"], r["n_records"]) for r in reports.collect()) == [
+            (0, 1), (7, 3)
+        ]
 
     def test_metrics_ride_the_plan_no_count_jobs(self, spark, tmp_path, monkeypatch):
         """The batch metrics come from observe() aggregates fired by the
