@@ -35,6 +35,17 @@ def micro_dot(qa: Column | str, qb: Column | str) -> Column:
     )
 
 
+def micro_mean(s: Column, n: Column) -> Column:
+    """BIGINT mean of ``n`` micro values summing to ``s``, rounded
+    half-up onto the micro grid: floor((2s+n)/(2n)) in exact integers.
+    ``num - pmod(num, den)`` is a multiple of ``den``, so the integer
+    division is exact and truncating equals flooring in every engine —
+    no float quotient to disagree by an ulp at a .5 boundary (DuckDB
+    twin: ``queries.sql_micro_mean``)."""
+    num, den = 2 * s + n, 2 * n
+    return F.call_function("div", num - F.pmod(num, den), den)
+
+
 def micro_cosine(dot: Column, na: Column, nb: Column) -> Column:
     """The one cosine finish: exact BIGINT micro dot and norm-squares to a
     double through fixed IEEE ops (a cast below 2^53 is exact; sqrt and

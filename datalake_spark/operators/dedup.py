@@ -1459,7 +1459,9 @@ def semantic_dedup(
     bit-identical across engines.  Malformed input: a NULL vector, a
     NULL component, or two vectors of different length have no cosine
     (the -2.0 sentinel), so such a doc pairs with nothing and keeps
-    itself; a NULL or empty vector gets a NULL ``cluster``."""
+    itself.  A vector that is NULL, holds a NULL or differs in width
+    from the k-means seeds gets a NULL ``cluster`` (see
+    similarity.kmeans_iterate)."""
     pairs, assign = _semantic_cluster_pairs(
         emb, k, iters, threshold, id_col, vec_col
     )
@@ -1550,7 +1552,7 @@ def _semantic_cluster_pairs(
                 RuntimeWarning,
                 stacklevel=3,
             )
-    # every input doc gets a row (a NULL vector has no k-means
+    # every input doc gets a row (a malformed vector has no k-means
     # assignment: NULL cluster, which pairs with nothing)
     rows = persisted(_micro_rows(
         emb.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_vec"))
@@ -1711,7 +1713,8 @@ def semantic_incremental_pairs(
     index's ``floor(_val*1e6+0.5)`` against the index's BIGINT norms.
     Malformed input is handled as in :func:`semantic_dedup`: a pair with
     a NULL vector, a NULL component, or vectors of different length
-    never matches.  An index whose norms are not BIGINT (written before
+    never matches, and such a vector is never assigned a cluster, so it
+    never enters the standing index.  An index whose norms are not BIGINT (written before
     the micro-int64 cosine) raises :class:`StaleSemanticIndex`.
 
     A per-batch driver loop in a long-lived session calls this inside

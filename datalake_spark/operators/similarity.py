@@ -32,11 +32,13 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datalake_spark.functions.vectors import cosine_micro_exact
+from datalake_spark.functions.vectors import (
+    cosine_micro_exact, micro_mean, quantize_micro,
+)
 from datalake_spark.session import local_frame, persisted
 
 
@@ -403,116 +405,36 @@ def kmeans_iterate(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids_out: list | None = None,
 ) -> DataFrame:
     """Fixed-iteration Lloyd k-means: (id, cluster, dist_sq) after ``iters``
-    assign/update rounds, deterministic and ENGINE-PORTABLE.
+    rounds, deterministic and engine-portable.
 
     - Seeds are the vectors of the k smallest ids (a k-row driver read —
       no RNG, so reruns and replays agree).
-    - Distances and centroid updates accumulate through DECIMAL(30,12)
-      sums of double products before the final double cast, so results do
-      not depend on partitioning/accumulation order — the same discipline
-      as the embedding centroid/near-dup oracles.
-    - Assignment ties (equal distance) break on the smaller cluster id via
-      an explicit row_number ordering.
+    - Each round is :func:`_lloyd`'s, the one pq_train runs, over one
+      subspace holding the whole micro-quantized vector
+      (functions/vectors.quantize_micro): an exact int64 squared-L2
+      argmin with ties to the smaller cluster id, then the half-up micro
+      mean of the members.  ``dist_sq`` is the winning int64 squared
+      distance / 1e12, one IEEE operation, so it is the same in every
+      engine and partitioning.
+    - A vector that is NULL, holds a NULL or is not as wide as the seeds
+      gets no row: it is never a seed, never assigned and never part of
+      a centroid.  The width is that of the smallest-id vector that is
+      none of the first two.
+    - A component past the int64-safe bound for the width (the bound
+      under which no squared distance can wrap) raises ValueError.
 
-    Fixed iteration count (not convergence-looped) keeps the whole
-    computation one declarative plan per round and makes the output
-    SQL-replayable — the oracle unrolls the same rounds as CTEs.  At
-    scale: per round, one shuffle for the distance aggregation and one for
-    the centroid update; the k×dim centroid frame stays broadcast-sized.
-
-    ``centroids_out`` (optional list): receives the FINAL centroid frame
-    (cluster, pos, cval) — the persistable "index" half incremental
-    consumers (semantic_incremental_pairs) assign new batches against
-    without re-clustering.
-    """
-    # persisted: el feeds the seed-centroid build plus a distance join
-    # AND a centroid update per iteration (~2·iters+1 consumers) — each
-    # would re-run the explode lineage against the source otherwise
-    el = persisted(emb.select(
-        F.col(id_col).alias("_id"), F.posexplode(vec_col).alias("_pos", "_val")
-    ).withColumn("_val", F.col("_val").cast("double")))
-    # Round-0 centroids as a LOCAL relation (r14, guide §5): the seed
-    # collect was already paying one bounded TakeOrdered job — collecting
-    # the k seed VECTORS instead of just their ids costs the same job and
-    # lets the (k·dim)-row centroid frame be built driver-side, removing
-    # the el ⋈ seed_map join from under every round's lineage (each
-    # consumer re-planned it) and making round 1's distance join
-    # broadcast-certain.  Values are a pure pass-through: el's _cval was
-    # the raw component cast to double; the collected Python float IS
-    # that double.
-    seed_rows = (
-        emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
-        .orderBy("_id")
-        .limit(k)
-        .collect()
-    )
-    spark = emb.sparkSession
-    cent = spark.createDataFrame(
-        [
-            (cid, pos, None if v is None else float(v))
-            for cid, r in enumerate(
-                sorted(seed_rows, key=lambda r: r["_id"])
-            )
-            # a NULL embedding exploded to zero rows in the pre-r14
-            # join form; the local build reproduces that
-            for pos, v in enumerate(r["_vec"] or [])
-        ],
-        "_cid int, _pos int, _cval double",
-    )
-    assign = None
-    for _it in range(iters):
-        joined = el.join(cent, "_pos")
-        diff2 = (
-            (F.col("_val") - F.col("_cval")) * (F.col("_val") - F.col("_cval"))
-        ).cast("decimal(30,12)")
-        d2 = joined.groupBy("_id", "_cid").agg(
-            F.sum(diff2).cast("double").alias("_d2")
-        )
-        # argmin via min_by (map-side partial merge; no per-id sort) —
-        # ordering struct(_d2, _cid) keeps the exact (dist ASC, smaller
-        # cluster id) tiebreak the window form had
-        assign = (
-            d2.groupBy("_id")
-            .agg(
-                F.min_by(F.struct("_cid", "_d2"),
-                         F.struct("_d2", "_cid")).alias("_b")
-            )
-            .select(
-                "_id",
-                F.col("_b._cid").alias("_cid"),
-                F.col("_b._d2").alias("_d2"),
-            )
-        )
-        # lazy by design (r14 A/B): materializing each round's k·dim
-        # centroid frame read +50% wall at sf0.1 (eager job roundtrips)
-        # with no consumer that re-executes the chain more than once —
-        # the last round's update is dead code for assign-only callers
-        # and lazy evaluation never runs it
-        cent = (
-            el.join(assign.select("_id", "_cid"), "_id")
-            .groupBy("_cid", "_pos")
-            .agg(
-                (
-                    F.sum(F.col("_val").cast("decimal(30,12)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("_cval")
-            )
-        )
-    if centroids_out is not None:
-        centroids_out.append(
-            cent.select(
-                F.col("_cid").cast("bigint").alias("cluster"),
-                F.col("_pos").alias("pos"),
-                F.col("_cval").alias("cval"),
-            )
-        )
+    The rounds run when called: each round after the first collects
+    the previous round's k·dim centroids onto the driver, so no
+    round's lineage rides under the next.  The returned assignment is
+    measured against the centroids it was assigned to (the last update
+    is never run)."""
+    assign, _ = _kmeans(emb, k, iters, id_col, vec_col)
     return assign.select(
-        F.col("_id").alias(id_col),
-        F.col("_cid").cast("bigint").alias("cluster"),
-        F.col("_d2").alias("dist_sq"),
+        F.col("c_id").alias(id_col),
+        F.col("code").cast("bigint").alias("cluster"),
+        (F.col("dist").cast("double") / F.lit(1e12)).alias("dist_sq"),
     )
 
 
@@ -523,15 +445,20 @@ def kmeans_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Just the final (cluster, pos, cval) centroid frame of
-    :func:`kmeans_iterate` — the standing cluster index an incremental
-    pipeline persists once and assigns every new batch against."""
-    out: list = []
-    kmeans_iterate(
-        emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-        centroids_out=out,
+    """The final (cluster, pos, cval) centroids of :func:`kmeans_iterate`
+    as a local relation — the standing cluster index an incremental
+    pipeline persists once and assigns every new batch against.  ``cval``
+    is the micro value / 1e6, which :func:`assign_to_centroids`
+    re-quantizes to the same integer."""
+    _, cb = _kmeans(emb, k, iters, id_col, vec_col)
+    return _materialize_small(
+        cb.select(
+            F.col("code").cast("bigint").alias("cluster"),
+            F.posexplode("cb_micro").alias("pos", "_v"),
+        ).select(
+            "cluster", "pos", (F.col("_v") / F.lit(1e6)).alias("cval")
+        )
     )
-    return out[0]
 
 
 def assign_to_centroids(
@@ -542,83 +469,105 @@ def assign_to_centroids(
     keep_vec: bool = False,
 ) -> DataFrame:
     """(id, cluster): nearest-centroid assignment of ``emb`` against a
-    FIXED (cluster, pos, cval) frame — one decimal-exact distance pass,
-    ties to the smaller cluster id (the kmeans_iterate discipline).  The
-    assignment half of the incremental path: the centroid index never
-    moves, so per-batch cost is O(|batch| · k · dim).
+    FIXED (cluster, pos, cval) frame — the assign step of a
+    :func:`kmeans_iterate` round: the centroids, quantized onto the
+    micro grid, are one subspace's codewords and :func:`_pq_assign`
+    takes the exact int64 squared-L2 argmin row-locally, ties to the
+    smaller cluster id.  The assignment half of the incremental path:
+    the centroid index never moves, so per-batch cost is O(|batch| · k ·
+    dim) and nothing shuffles.  The centroid frame is collected when
+    called (k·dim rows).
 
-    ROW-LOCAL (r14, guide §2.3/§2.4): the k centroids are packed into
-    one broadcast row of cluster-sorted (cluster, pos-ordered cval
-    array) structs; each batch row folds every squared distance in the
-    map stage and takes the argmin in place.  The pre-r14 form exploded
-    the batch to (id, pos, val) rows and paid TWO corpus-scaled
-    shuffles (groupBy(id, cluster) distance sum + groupBy(id) min_by).
-    Arithmetic is term-for-term identical — each (val − cval)² is cast
-    to DECIMAL(30,12) before an exact, order-independent decimal sum —
-    and the packed array is cluster-sorted with array_position taking
-    the FIRST minimal element, reproducing the (dist ASC, smaller
-    cluster id) min_by tiebreak exactly.
+    A vector that is NULL, holds a NULL or is not as wide as the
+    centroids gets no row; a component past the int64-safe bound for
+    the width raises ValueError (see :func:`_pq_assign`).
 
     ``keep_vec=True`` additionally carries the vector column through —
     consumers that need (id, cluster, vector) (e.g. the SemDeDup index
     build, which explodes the assigned corpus) read it off the row
     instead of joining the corpus-sized assignment frame back on id."""
-    packed = (
-        centroids.select(
-            F.col("cluster").alias("_cid"),
-            F.struct(F.col("pos").alias("pos"), F.col("cval").alias("cval"))
-            .alias("_pc"),
-        )
-        .groupBy("_cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list("_pc")), lambda s: s["cval"]
-            ).alias("_cvals")
-        )
-        .select(F.struct(F.col("_cid"), F.col("_cvals")).alias("_ce"))
-        .agg(F.array_sort(F.collect_list("_ce")).alias("_cents"))
+    pos_vals: dict = {}
+    for r in centroids.select("cluster", "pos", "cval").collect():
+        pos_vals.setdefault(r["cluster"], []).append((r["pos"], r["cval"]))
+    rows = [
+        (0, int(c), _py_quantize_micro([v for _, v in sorted(pv)]))
+        for c, pv in sorted(pos_vals.items())
+    ]
+    cb = local_frame(emb.sparkSession, rows, _CB_SCHEMA)
+    widths = {len(r[2]) for r in rows}
+    keep = ("_vec",) if keep_vec else ()
+    return _pq_assign(
+        _kmeans_rows(emb, id_col, vec_col, max(widths, default=0), keep),
+        cb, keep=keep,
+    ).select(
+        F.col("c_id").alias(id_col),
+        *([F.col("_vec").alias(vec_col)] if keep_vec else []),
+        F.col("code").cast("bigint").alias("cluster"),
     )
-    acc_t = "decimal(38,12)"
-    d2 = lambda e: F.aggregate(  # noqa: E731
-        F.zip_with(
-            F.col("_vd"),
-            e["_cvals"],
-            lambda a, b: ((a - b) * (a - b)).cast("decimal(30,12)"),
-        ),
-        F.lit(0).cast(acc_t),
-        lambda acc, x: (acc + x).cast(acc_t),
-    ).cast("double")
+
+
+def _well_formed(vec: Column) -> Column:
+    """A non-empty vector with no NULL component (false for NULL)."""
     return (
-        emb.join(F.broadcast(packed))
-        # strict pre-r14 equivalence: no centroids -> no assignments
-        .filter(F.size(F.col("_cents")) > 0)
-        .withColumn(
-            "_vd", F.transform(vec_col, lambda x: x.cast("double"))
-        )
-        .withColumn("_d2s", F.transform(F.col("_cents"), d2))
-        # coalesce → statically non-nullable: consumers inner-join on
-        # cluster, and a nullable cluster would let Catalyst push the
-        # inferred isnotnull(cluster) below these Projects, inlining the
-        # whole per-centroid argmin into the join condition (observed as
-        # 3-4x duplicated HOF work per row in the r14 plan audit).
-        # Fallback unreachable: _cents is non-empty.
-        .select(
-            F.col(id_col),
-            *([F.col(vec_col)] if keep_vec else []),
-            F.coalesce(
-                F.element_at(
-                    F.col("_cents"),
-                    F.array_position(
-                        F.col("_d2s"), F.array_min(F.col("_d2s"))
-                    ).cast("int"),
-                )["_cid"].cast("bigint"),
-                F.lit(-1).cast("bigint"),
-            ).alias("cluster"),
-        )
+        vec.isNotNull() & (F.size(vec) > 0)
+        & ~F.exists(vec, lambda x: x.isNull())
     )
+
+
+def _kmeans_rows(
+    emb: DataFrame, id_col: str, vec_col: str, dim: int,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """(c_id, sub, sv_micro[, _vec]): the well-formed ``dim``-wide
+    vectors of ``emb`` as k-means input — one subspace (sub 0) holding
+    the whole micro-quantized vector.  Every other row is dropped."""
+    v = F.col(vec_col)
+    return emb.filter(_well_formed(v) & (F.size(v) == dim)).select(
+        F.col(id_col).alias("c_id"),
+        F.lit(0).alias("sub"),
+        quantize_micro(v).alias("sv_micro"),
+        *([v.alias("_vec")] if keep else []),
+    )
+
+
+def _kmeans(
+    emb: DataFrame, k: int, iters: int, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """(assignments, centroids) of :func:`kmeans_iterate`: :func:`_lloyd`
+    over :func:`_kmeans_rows`, seeded with the micro-quantized vectors of
+    the k smallest well-formed ids of the smallest id's width."""
+    if iters < 1:
+        raise ValueError(f"k-means: iters must be >= 1, got {iters}")
+    seeds = (
+        emb.filter(_well_formed(F.col(vec_col)))
+        .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
+        .orderBy("_id")
+    )
+    rows = seeds.limit(k).collect()
+    dim = len(rows[0]["_vec"]) if rows else 0
+    if any(len(r["_vec"]) != dim for r in rows):
+        rows = seeds.filter(F.size("_vec") == dim).limit(k).collect()
+    cb = local_frame(
+        emb.sparkSession,
+        [(0, code, _py_quantize_micro(r["_vec"]))
+         for code, r in enumerate(rows)],
+        _CB_SCHEMA,
+    )
+    # persisted: every round's assign reads it
+    sv = persisted(_kmeans_rows(emb, id_col, vec_col, dim))
+    return _lloyd(sv, cb, iters)
 
 
 # -- product quantization (ADC) ---------------------------------------------
+
+
+def _py_quantize_micro(vec) -> list:
+    """Driver-side twin of functions/vectors.quantize_micro: the same
+    floor(x*1e6+0.5) double ops per component (a NULL stays NULL)."""
+    return [
+        None if x is None else math.floor(float(x) * 1_000_000 + 0.5)
+        for x in vec
+    ]
 
 
 def _py_quantize_micro_unit(vec) -> list[int]:
@@ -634,9 +583,7 @@ def _py_quantize_micro_unit(vec) -> list[int]:
     — correctly rounded in CPython and the JVM alike.  Pinned against
     the Column twin over adversarial inputs in
     tests/test_operators.py."""
-    return _py_unit_micro(
-        [math.floor(float(x) * 1_000_000 + 0.5) for x in vec]
-    )
+    return _py_unit_micro(_py_quantize_micro(vec))
 
 
 def _py_unit_micro(qa: list[int]) -> list[int]:
@@ -856,25 +803,37 @@ def _pq_subvectors(
     )
 
 
-def _pq_assign(
-    sv: DataFrame, codebooks: DataFrame, keep: tuple[str, ...] = ()
-) -> DataFrame:
-    """(c_id, sub, code, *keep): per-subspace nearest codeword of every
-    subvector, ROW-LOCAL — zero corpus shuffle.  The m·ksub codebooks (a
-    parameter-bounded LOCAL relation at every call site, so collecting
-    them schedules no cluster job) are packed into per-sub NumPy int64
-    matrices shipped in the function closure, and one ``mapInArrow``
-    stage computes every squared-L2 and the argmin over whole record
-    batches.  ``keep`` names sv columns to carry through (pq_train keeps
-    sv_micro so its update step needs no join back; pq_encode keeps the
-    cell tag).
+def _int64_safe_bound(width: int) -> int:
+    """The largest micro component magnitude B for which no squared-L2
+    distance between two ``width``-wide vectors can pass 2^63-1:
+    width·(2B)² must fit."""
+    return math.isqrt((2**63 - 1) // (4 * max(width, 1)))
 
-    Exact by construction: distances are int64 (a−b)·(a−b) sums (the
-    micro-quantized values cannot overflow int64: |diff| ≤ 2e6 →
-    per-term ≤ 4e12), and ``np.argmin`` takes the FIRST minimal element
-    of the code-sorted axis — the (dist ASC, code ASC) tie-break.
-    Pinned against a pure-Python integer reference in
-    tests/test_operators.py.
+
+def _pq_assign(
+    sv: DataFrame,
+    codebooks: DataFrame,
+    keep: tuple[str, ...] = (),
+    dist: bool = False,
+) -> DataFrame:
+    """(c_id, sub, code, *keep[, dist]): per-subspace nearest codeword of
+    every subvector, ROW-LOCAL — zero corpus shuffle.  The m·ksub
+    codebooks (a parameter-bounded LOCAL relation at every call site, so
+    collecting them schedules no cluster job) are packed into per-sub
+    NumPy int64 matrices shipped in the function closure, and one
+    ``mapInArrow`` stage computes every squared-L2 and the argmin over
+    whole record batches.  ``keep`` names sv columns to carry through
+    (the Lloyd rounds keep sv_micro so the update needs no join back;
+    pq_encode keeps the cell tag); ``dist`` adds the winning int64
+    squared distance (k-means reports it).
+
+    Exact by construction: distances are int64 (a−b)·(a−b) sums and
+    ``np.argmin`` takes the FIRST minimal element of the code-sorted
+    axis — the (dist ASC, code ASC) tie-break.  NumPy int64 wraps
+    silently, so a component past :func:`_int64_safe_bound` for the
+    width raises ValueError instead (unit micro vectors and their
+    residuals, at most 2e6, never do).  Pinned against a pure-Python
+    integer reference in tests/test_operators.py.
 
     Malformed input raises ValueError: a NULL codeword or ragged
     codebook widths (at call time), and a sub with no codebook, a NULL
@@ -905,17 +864,27 @@ def _pq_assign(
             f"PQ: codebook widths differ across subs: {sorted(widths)}"
         )
     w = widths.pop() if widths else 0
+    bound = _int64_safe_bound(w)
+
+    def check_bound(mat, what):
+        if ((mat > bound) | (mat < -bound)).any():
+            raise ValueError(
+                f"squared-L2 assign: a {what} component exceeds the "
+                f"int64-safe bound {bound} (micro units) for width {w}"
+            )
+
+    for _, cb in packed.values():
+        check_bound(cb, "codeword")
     in_cols = ["c_id", "sub", "sv_micro"]
     in_cols += [k for k in keep if k not in in_cols]
-    out_cols = ["c_id", "sub", "code", *keep]
+    out_cols = ["c_id", "sub", "code", *keep] + (["dist"] if dist else [])
     src = sv.select(*in_cols)
-    fields = []
-    for c in out_cols:
-        if c == "code":
-            fields.append(T.StructField("code", T.IntegerType(), True))
-        else:
-            fields.append(src.schema[c])
-    out_schema = T.StructType(fields)
+    computed_t = {"code": T.IntegerType(), "dist": T.LongType()}
+    out_schema = T.StructType([
+        T.StructField(c, computed_t[c], True) if c in computed_t
+        else src.schema[c]
+        for c in out_cols
+    ])
 
     def assign_batches(batches):
         for b in batches:
@@ -941,23 +910,71 @@ def _pq_assign(
                     f"PQ: subvector width differs from the codebook "
                     f"width {w} in _pq_assign input"
                 )
+            check_bound(mat, "subvector")
             codes = np.empty(b.num_rows, dtype=np.int32)
+            best = np.empty(b.num_rows, dtype=np.int64)
             for s in present:
                 mask = subs == s
                 cb_codes, cb_mat = packed[int(s)]
                 d = mat[mask][:, None, :] - cb_mat[None, :, :]
-                codes[mask] = cb_codes[
-                    np.argmin((d * d).sum(axis=2), axis=1)
-                ]
-            arrays = []
-            for c in out_cols:
-                if c == "code":
-                    arrays.append(pa.array(codes, type=pa.int32()))
-                else:
-                    arrays.append(b.column(c))
+                d2 = (d * d).sum(axis=2)
+                at = np.argmin(d2, axis=1)
+                codes[mask] = cb_codes[at]
+                best[mask] = d2[np.arange(len(at)), at]
+            computed = {"code": pa.array(codes, type=pa.int32()),
+                        "dist": pa.array(best, type=pa.int64())}
+            arrays = [computed[c] if c in computed else b.column(c)
+                      for c in out_cols]
             yield pa.RecordBatch.from_arrays(arrays, out_cols)
 
     return src.mapInArrow(assign_batches, out_schema)
+
+
+def _lloyd(
+    sv: DataFrame, cb: DataFrame, iters: int
+) -> tuple[DataFrame, DataFrame]:
+    """``iters`` Lloyd rounds over the (c_id, sub, sv_micro) subvectors
+    ``sv`` from the (sub, code, cb_micro) codebook ``cb`` — the one
+    k-means round of the engine: pq_train runs it per subspace, k-means
+    on one subspace holding the whole vector.  A round:
+
+    - assigns every subvector with :func:`_pq_assign` (exact int64
+      squared-L2 argmin, ties to the smaller code);
+    - moves every codeword to the component mean of its members,
+      rounded half-up onto the micro grid (functions/vectors.micro_mean
+      — exact integers, identical in Spark and DuckDB, so the oracle
+      replays the rounds as CTEs: ``queries._pq_train_round_sql``);
+    - keeps the value of a codeword that lost all its members, so the
+      codebook keeps its rows.
+
+    Each round's codebook is collected onto the driver and rebuilt as a
+    local relation (:func:`_materialize_small`) before the next round
+    assigns against it, so no round's lineage rides under the next.
+    Returns the last round's assignment (with its ``dist``) and its
+    update, still lazy: a caller that reads it materializes it."""
+    assign = nxt = None
+    for _ in range(iters):
+        if nxt is not None:
+            cb = _materialize_small(nxt)
+        assign = _pq_assign(sv, cb, keep=("sv_micro",), dist=True)
+        upd = (
+            assign
+            .select("sub", "code", F.posexplode("sv_micro").alias("_p", "_v"))
+            .groupBy("sub", "code", "_p")
+            .agg(micro_mean(F.sum("_v"), F.count(F.lit(1))).alias("_v"))
+            .groupBy("sub", "code")
+            .agg(F.collect_list(F.struct("_p", "_v")).alias("_pv"))
+            .select(
+                "sub", "code",
+                F.transform(
+                    F.array_sort("_pv"), lambda s: s["_v"]
+                ).alias("cb_micro"),
+            )
+        )
+        nxt = upd.unionByName(
+            cb.join(upd.select("sub", "code"), ["sub", "code"], "left_anti")
+        )
+    return assign, nxt
 
 
 def pq_train(
@@ -978,30 +995,30 @@ def pq_train(
     entries, compressing the corpus to m small ints per vector — the
     representation IVF-PQ systems scan at billion-vector scale.
 
-    Training (r11) is per-subspace Lloyd k-means in the repo's
-    exact-integer discipline, seeded with the deterministic coreset
-    (subvectors of the ``ksub`` lowest-id candidates, UNIT-normalized
-    then micro-quantized — quantize_micro_unit, so ADC's squared-L2
-    ranks by cosine):
+    Training (r11) is per-subspace Lloyd k-means, seeded with the
+    deterministic coreset (subvectors of the ``ksub`` lowest-id
+    candidates, UNIT-normalized then micro-quantized —
+    quantize_micro_unit, so ADC's squared-L2 ranks by cosine):
 
-    - ``iters`` rounds of assign (exact BIGINT squared-L2 argmin, ties
-      to the smaller code) + update (component mean of the members,
-      rounded HALF-UP back onto the micro grid: floor((2s+n)/(2n))
-      computed as exact integer floor-division via pmod — identical in
-      Spark and DuckDB, no float quotient anywhere, so the trained
-      codebooks are engine/retry/partitioning-identical and the oracle
-      replays the rounds as CTEs).
+    - ``iters`` rounds of :func:`_lloyd`, the engine's one Lloyd round
+      (the one :func:`kmeans_iterate` runs on whole vectors): exact
+      int64 squared-L2 argmin with ties to the smaller code, then the
+      members' component mean rounded half-up onto the micro grid in
+      exact integers — engine/retry/partitioning-identical, so the
+      oracle replays the rounds as CTEs.  Unit micro components (and
+      their residuals) stay far inside the int64-safe bound, so no
+      distance can wrap.
     - A codeword that loses all members keeps its previous value (the
       standard empty-cluster rule), so the codebook is always exactly
       m*ksub rows.
     - ``iters=0`` is the raw coreset (the pre-r11 behavior; the recall
       baseline the trained books are tested against).
 
-    At scale: each round is one broadcast join against the m*ksub
-    codebooks + two ordinary aggregations — the corpus shuffles one row
-    per (vector, subspace), never a sorted rank.  Callers at 100 TB
-    should train on a bounded sample (pass a ``.limit``-ed or sampled
-    frame); the codebook stays m*ksub rows regardless.
+    At scale: each round is one row-local assign against the m*ksub
+    codebooks + two ordinary aggregations, and one m*ksub-row collect.
+    Callers at 100 TB should train on a bounded sample (pass a
+    ``.limit``-ed or sampled frame); the codebook stays m*ksub rows
+    regardless.
 
     ``cells`` + ``centroids`` (r11): train on IVFADC RESIDUALS —
     ``cells`` names the column of ``candidates`` holding each vector's
@@ -1048,58 +1065,7 @@ def pq_train(
     sv = persisted(_pq_subvectors(
         candidates, m, id_col, vec_col, cells, centroids
     ))
-    for _ in range(iters):
-        # row-local assign KEEPS sv_micro on the row, so the update
-        # aggregates it directly — the pre-r14 corpus-wide
-        # sv ⋈ assign shuffle join per Lloyd round is gone (r14)
-        assign = _pq_assign(sv, cb, keep=("sv_micro",))
-        upd = (
-            assign
-            .select("sub", "code", F.posexplode("sv_micro").alias("_p", "_v"))
-            .groupBy("sub", "code", "_p")
-            .agg(
-                (
-                    F.lit(2).cast("long") * F.sum("_v") + F.count(F.lit(1))
-                ).alias("_num"),
-                (F.lit(2).cast("long") * F.count(F.lit(1))).alias("_den"),
-            )
-            # round-half-up mean on the micro grid as exact integers:
-            # floor(num/den) = (num - pmod(num, den)) div den — the
-            # subtraction makes the dividend an exact multiple, where
-            # truncating div == floor in BOTH engines (no float quotient
-            # to disagree by an ulp at a .5 boundary)
-            .select(
-                "sub", "code", "_p",
-                F.expr(
-                    "CAST((_num - pmod(_num, _den)) div _den AS LONG)"
-                ).alias("_v"),
-            )
-            .groupBy("sub", "code")
-            .agg(F.collect_list(F.struct("_p", "_v")).alias("_pv"))
-            .select(
-                "sub", "code",
-                F.transform(
-                    F.array_sort("_pv"), lambda s: s["_v"]
-                ).alias("cb_micro"),
-            )
-        )
-        # empty-cluster rule: codewords with no members keep their value.
-        # The round's m·ksub-row codebook is MATERIALIZED (bounded
-        # collect + literal rebuild, _materialize_small): pre-r14 each
-        # round's cb was a persisted union over the previous round's
-        # whole tree, so the static plan doubled per round and every
-        # consumer re-planned the full training lineage — at sf0.1 the
-        # Catalyst planning gap was the dominant cost of the ANN gate
-        # entries (r14 stage profile), and the training work itself now
-        # runs exactly once per round instead of riding every consumer.
-        cb = _materialize_small(
-            upd.unionByName(
-                cb.join(
-                    upd.select("sub", "code"), ["sub", "code"], "left_anti"
-                )
-            )
-        )
-    return cb
+    return _materialize_small(_lloyd(sv, cb, iters)[1])
 
 
 def pq_encode(

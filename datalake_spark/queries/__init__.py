@@ -222,6 +222,104 @@ def sql_davg(expr: str, alias: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(20,4))) AS DOUBLE) / COUNT({expr}) AS {alias}"
 
 
+# -- exact-integer Lloyd k-means (DuckDB twin of similarity._lloyd) ---------
+# Shared by the PQ oracles (ops_q) and the k-means/SemDeDup oracles
+# (pipeline_q).  Inputs are micro-quantized BIGINTs: ``cet`` (vec_id, sub,
+# pos, qv) training elements and a seed codebook (sub, code, pos, qv); pos
+# is 1-based across the whole vector, so sub = (pos-1) // dsub.  The
+# argmin is MIN(dist * ksub + code) over subvectors pivoted into dsub
+# columns — (dist ASC, code ASC) with no window and |corpus|·m groups (the
+# sf10 spill fix); dist·ksub stays far under 2^63 on the micro grid.
+
+
+def sql_micro_mean(num: str, den: str) -> str:
+    """DuckDB twin of functions/vectors.micro_mean over the columns
+    ``num`` = 2·sum + n and ``den`` = 2·n: the exact floor of num/den."""
+    return (
+        f"CAST(({num} - ((({num} % {den}) + {den}) % {den})) // {den}"
+        " AS BIGINT)"
+    )
+
+
+def _pq_pivot_cols(dsub: int) -> str:
+    return ", ".join(
+        f"MAX(CASE WHEN (pos - 1) % {dsub} = {j} THEN qv END) AS q{j}"
+        for j in range(dsub)
+    )
+
+
+def _pq_dist_expr(dsub: int) -> str:
+    return " + ".join(
+        f"(s.q{j} - c.q{j}) * (s.q{j} - c.q{j})" for j in range(dsub)
+    )
+
+
+def _pq_train_round_sql(i: int, prev: str, dsub: int, ksub: int) -> str:
+    """Lloyd round ``i`` from codebook ``prev``: ``ta{i}`` (vec_id, sub,
+    code, dist) assigns every ``cetp`` subvector, ``cb{i}`` is the
+    half-up micro mean of each code's members plus the codes that lost
+    every member, unchanged."""
+    return f"""
+cbp{i} AS MATERIALIZED (
+  SELECT sub, code, {_pq_pivot_cols(dsub)}
+  FROM {prev} GROUP BY sub, code),
+ta{i} AS MATERIALIZED (
+  SELECT vec_id, sub, CAST(m % {ksub} AS BIGINT) AS code,
+         CAST(m // {ksub} AS BIGINT) AS dist FROM (
+    SELECT s.vec_id, s.sub,
+           MIN(({_pq_dist_expr(dsub)}) * {ksub} + c.code) AS m
+    FROM cetp s JOIN cbp{i} c ON s.sub = c.sub
+    GROUP BY 1, 2)),
+tu{i} AS (
+  SELECT sub, code, pos, {sql_micro_mean("num", "den")} AS qv
+  FROM (
+    SELECT a.sub, a.code, s.pos,
+           2 * CAST(SUM(s.qv) AS BIGINT) + COUNT(*) AS num,
+           2 * COUNT(*) AS den
+    FROM cet s JOIN ta{i} a ON s.vec_id = a.vec_id AND s.sub = a.sub
+    GROUP BY 1, 2, 3)),
+cb{i} AS MATERIALIZED (
+  SELECT sub, code, pos, qv FROM tu{i}
+  UNION ALL
+  SELECT c.sub, c.code, c.pos, c.qv FROM {prev} c
+  WHERE NOT EXISTS (SELECT 1 FROM tu{i} u
+                    WHERE u.sub = c.sub AND u.code = c.code)),
+"""
+
+
+def _pq_train_sql(dsub: int, ksub: int) -> str:
+    """Two Lloyd rounds over ``cet`` from the seed codebook ``cbe`` (the
+    pivoted ``cetp`` is emitted once — the training elements never
+    change between rounds)."""
+    return (
+        f"""
+cetp AS MATERIALIZED (
+  SELECT vec_id, sub, {_pq_pivot_cols(dsub)}
+  FROM cet GROUP BY vec_id, sub),"""
+        + _pq_train_round_sql(1, "cbe", dsub, ksub)
+        + _pq_train_round_sql(2, "cb1", dsub, ksub)
+    )
+
+
+def _pq_codes_sql(dsub: int, ksub: int, src: str = "ce",
+                  cb: str = "cb2") -> str:
+    """Encode ``src`` against ``cb`` → ``codes`` (c_id, sub, code), the
+    same combined-key argmin."""
+    return f"""
+cep AS MATERIALIZED (
+  SELECT vec_id, sub, {_pq_pivot_cols(dsub)}
+  FROM {src} GROUP BY vec_id, sub),
+cbpe AS MATERIALIZED (
+  SELECT sub, code, {_pq_pivot_cols(dsub)}
+  FROM {cb} GROUP BY sub, code),
+codes AS MATERIALIZED (
+  SELECT vec_id AS c_id, sub, CAST(m % {ksub} AS BIGINT) AS code FROM (
+    SELECT s.vec_id, s.sub,
+           MIN(({_pq_dist_expr(dsub)}) * {ksub} + c.code) AS m
+    FROM cep s JOIN cbpe c ON s.sub = c.sub
+    GROUP BY 1, 2)),"""
+
+
 def registry() -> list[Q]:
     """Declared query surface, sized to fit inside the driver's 50-entry
     correctness gate: single-concept relational queries are folded into

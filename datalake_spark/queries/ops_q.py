@@ -24,7 +24,9 @@ from datalake_spark.operators import multimodal as mm_ops
 from datalake_spark.operators import similarity as sim_ops
 from datalake_spark.functions.hashing import md5hash60, sql_md5hash60
 from datalake_spark.functions.text import doc_fingerprint_portable, lang_id, quality_score
-from datalake_spark.queries import Q, load
+from datalake_spark.queries import (
+    Q, _pq_codes_sql, _pq_train_sql, load,
+)
 from datalake_spark.queries.pipeline_q import NGRAM_JACCARD_SQL
 from datalake_spark.session import persisted
 
@@ -360,93 +362,8 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every ranking key an exact integer.  dim 64 / m 32 gives
 # sub = (pos-1)//2 at the gate's m=32; the pre-filtered-CTE discipline is the ANN_IVF_SQL
 # lesson (DuckDB may not push an id filter below a per-pos equi-join).
-# Argmin-by-combined-key discipline (r12, the sf10 oracle fix): the
-# straightforward per-(vector, subspace, codeword) distance aggregation
-# — GROUP BY over |corpus|·m·ksub rows, then a ROW_NUMBER window over
-# the same — built >75 GB of DuckDB spill at sf10 (200k vectors) and
-# died on disk.  Instead, PIVOT each subvector's d_sub components into
-# columns (|corpus|·m rows), compute the exact-BIGINT distance INLINE
-# per (subvector, codeword) join row, and take
-# MIN(dist * ksub + code): lexicographically identical to
-# ORDER BY dist, code with rk = 1 (code < ksub, and dist·ksub stays far
-# under 2^63 on the micro grid), with the aggregation state shrunk from
-# |corpus|·m·ksub groups to |corpus|·m — no window, no giant hash
-# table.  Value-identical by construction; re-proven by the unchanged
-# gate hashes at sf0.001/0.01.
-
-
-def _pq_pivot_cols(dsub: int) -> str:
-    return ", ".join(
-        f"MAX(CASE WHEN (pos - 1) % {dsub} = {j} THEN qv END) AS q{j}"
-        for j in range(dsub)
-    )
-
-
-def _pq_dist_expr(dsub: int) -> str:
-    return " + ".join(
-        f"(s.q{j} - c.q{j}) * (s.q{j} - c.q{j})" for j in range(dsub)
-    )
-
-
-def _pq_train_round_sql(i: int, prev: str, dsub: int, ksub: int) -> str:
-    return f"""
-cbp{i} AS MATERIALIZED (
-  SELECT sub, code, {_pq_pivot_cols(dsub)}
-  FROM {prev} GROUP BY sub, code),
-ta{i} AS MATERIALIZED (
-  SELECT vec_id, sub, CAST(m % {ksub} AS BIGINT) AS code FROM (
-    SELECT s.vec_id, s.sub,
-           MIN(({_pq_dist_expr(dsub)}) * {ksub} + c.code) AS m
-    FROM cetp s JOIN cbp{i} c ON s.sub = c.sub
-    GROUP BY 1, 2)),
-tu{i} AS (
-  SELECT sub, code, pos,
-         CAST((num - (((num % den) + den) % den)) // den AS BIGINT) AS qv
-  FROM (
-    SELECT a.sub, a.code, s.pos,
-           2 * CAST(SUM(s.qv) AS BIGINT) + COUNT(*) AS num,
-           2 * COUNT(*) AS den
-    FROM cet s JOIN ta{i} a ON s.vec_id = a.vec_id AND s.sub = a.sub
-    GROUP BY 1, 2, 3)),
-cb{i} AS MATERIALIZED (
-  SELECT sub, code, pos, qv FROM tu{i}
-  UNION ALL
-  SELECT c.sub, c.code, c.pos, c.qv FROM {prev} c
-  WHERE NOT EXISTS (SELECT 1 FROM tu{i} u
-                    WHERE u.sub = c.sub AND u.code = c.code)),
-"""
-
-
-def _pq_train_sql(dsub: int, ksub: int) -> str:
-    """Two Lloyd rounds over ``cet`` (the pivoted ``cetp`` is emitted
-    once — the training elements never change between rounds)."""
-    return (
-        f"""
-cetp AS MATERIALIZED (
-  SELECT vec_id, sub, {_pq_pivot_cols(dsub)}
-  FROM cet GROUP BY vec_id, sub),"""
-        + _pq_train_round_sql(1, "cbe", dsub, ksub)
-        + _pq_train_round_sql(2, "cb1", dsub, ksub)
-    )
-
-
-def _pq_codes_sql(dsub: int, ksub: int, src: str = "ce",
-                  cb: str = "cb2") -> str:
-    """Encode ``src`` against ``cb`` → ``codes`` (c_id, sub, code), the
-    same combined-key argmin."""
-    return f"""
-cep AS MATERIALIZED (
-  SELECT vec_id, sub, {_pq_pivot_cols(dsub)}
-  FROM {src} GROUP BY vec_id, sub),
-cbpe AS MATERIALIZED (
-  SELECT sub, code, {_pq_pivot_cols(dsub)}
-  FROM {cb} GROUP BY sub, code),
-codes AS MATERIALIZED (
-  SELECT vec_id AS c_id, sub, CAST(m % {ksub} AS BIGINT) AS code FROM (
-    SELECT s.vec_id, s.sub,
-           MIN(({_pq_dist_expr(dsub)}) * {ksub} + c.code) AS m
-    FROM cep s JOIN cbpe c ON s.sub = c.sub
-    GROUP BY 1, 2)),"""
+# The training rounds and the encoding are the shared Lloyd SQL of
+# datalake_spark/queries/__init__.py (_pq_train_sql, _pq_codes_sql).
 
 
 _PQ_TRAIN_SQL = _pq_train_sql(2, 32)

@@ -5,8 +5,8 @@ ANN baseline), as-of join, sessionization.  All oracle-checked against DuckDB.
 Float discipline for cross-engine bit-equality: every embedding cosine is
 functions/vectors.cosine_micro_exact's exact BIGINT sums over micro-quantized
 components (oracle twin: micro_cosine_ctes); k-means squared-L2 distances
-and centroid means are still summed in DECIMAL over identical double
-products, then surfaced as double.
+and centroid means are the same micro components' exact BIGINT sums and
+half-up micro means (oracle twin: queries._pq_train_round_sql).
 """
 
 from __future__ import annotations
@@ -15,7 +15,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from datalake_spark.functions.hashing import sql_md5hash60
-from datalake_spark.queries import Q, load, dsum, sql_dsum
+from datalake_spark.queries import (
+    Q, _pq_codes_sql, _pq_train_sql, dsum, load, sql_dsum, sql_micro_mean,
+)
 from datalake_spark.session import persisted
 
 
@@ -622,13 +624,18 @@ FROM seeded
 
 # ---------------------------------------------------------------------------
 # Fixed-iteration Lloyd k-means over embeddings — an ITERATIVE ML algorithm
-# with a value-exact oracle: the operator unrolls 2 assign/update rounds
-# (deterministic min-id seeds, decimal-sum distance/centroid discipline,
-# explicit tie-breaks), and the SQL replays the identical rounds as chained
-# CTEs.  Engines agree on every assignment and every distance bit.
+# with a value-exact oracle: the operator runs 2 rounds of the engine's one
+# exact-integer Lloyd round (micro-quantized components, int64 squared-L2
+# argmin with ties to the smaller cluster, half-up micro mean; deterministic
+# min-id seeds), and the SQL replays the identical rounds with the shared
+# Lloyd CTEs (queries._pq_train_sql) over one subspace holding the whole
+# vector.  Engines agree on every assignment and every distance bit.
 # ---------------------------------------------------------------------------
 _KM_MAX_ID = 200
 _KM_K = 4
+# the test corpora's embedding width: the oracle pivots one subspace of
+# this many components (the operator reads the width off its seeds)
+_KM_DIM = 64
 
 
 def kmeans_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -638,47 +645,42 @@ def kmeans_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmeans_iterate(emb, k=_KM_K, iters=2)
 
 
-KMEANS_SQL = f"""
-WITH el AS (
-  SELECT vec_id AS id, CAST(UNNEST(embedding) AS DOUBLE) AS val,
-         UNNEST(generate_series(1, len(embedding))) AS pos
-  FROM embeddings WHERE vec_id < {_KM_MAX_ID}),
-seeds AS (
-  SELECT id, CAST(rn - 1 AS INTEGER) AS cid FROM (
-    SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS rn
-    FROM (SELECT DISTINCT id FROM el))
-  WHERE rn <= {_KM_K}),
-cent0 AS (
-  SELECT s.cid, e.pos, e.val AS cval FROM el e JOIN seeds s ON s.id = e.id),
-d1 AS (
-  SELECT e.id, c.cid,
-         CAST(SUM(CAST((e.val - c.cval) * (e.val - c.cval)
-              AS DECIMAL(30,12))) AS DOUBLE) AS d2
-  FROM el e JOIN cent0 c ON c.pos = e.pos GROUP BY 1, 2),
-a1 AS (
-  SELECT id, cid FROM (
-    SELECT id, cid, ROW_NUMBER() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-    FROM d1) WHERE rn = 1),
-cent1 AS (
-  SELECT a.cid, e.pos,
-         CAST(SUM(CAST(e.val AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*) AS cval
-  FROM el e JOIN a1 a ON a.id = e.id GROUP BY 1, 2),
-d2i AS (
-  SELECT e.id, c.cid,
-         CAST(SUM(CAST((e.val - c.cval) * (e.val - c.cval)
-              AS DECIMAL(30,12))) AS DOUBLE) AS d2
-  FROM el e JOIN cent1 c ON c.pos = e.pos GROUP BY 1, 2),
-a2 AS (
-  SELECT id, cid, d2 FROM (
-    SELECT id, cid, d2, ROW_NUMBER() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-    FROM d2i) WHERE rn = 1)
-SELECT id AS vec_id, CAST(cid AS BIGINT) AS cluster, d2 AS dist_sq FROM a2
-"""
+def _km_elements(where: str) -> str:
+    """(vec_id, sub, pos, qv) micro components of the well-formed
+    ``_KM_DIM``-wide embeddings matching ``where`` — the k-means input
+    (a NULL vector, a NULL component or another width takes no part)."""
+    return f"""(
+  SELECT vec_id, 0 AS sub, pos,
+         CAST(FLOOR(CAST(val AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS qv
+  FROM (
+    SELECT vec_id, UNNEST(embedding) AS val,
+           UNNEST(generate_series(1, len(embedding))) AS pos
+    FROM embeddings
+    WHERE {where} AND len(embedding) = {_KM_DIM}
+      AND len(list_filter(embedding, x -> x IS NULL)) = 0))"""
 
-# the shared k-means CTE chain (everything KMEANS_SQL defines before its
-# final SELECT) — reused verbatim by the SemDeDup oracle so the two gate
-# queries can never drift apart on the clustering half
-_KMEANS_CTES = KMEANS_SQL[KMEANS_SQL.index("WITH ") + 5:KMEANS_SQL.index("\nSELECT")]
+
+def _kmeans_ctes(where: str) -> str:
+    """Two Lloyd rounds over the embeddings matching ``where``, seeded
+    with the ``_KM_K`` smallest ids: ``ta2`` (vec_id, sub, code, dist) is
+    the final assignment, ``cb2`` (sub, code, pos, qv) the final
+    centroids."""
+    return f"""cet AS MATERIALIZED {_km_elements(where)},
+cbe AS (
+  SELECT 0 AS sub, CAST(s.rn - 1 AS INTEGER) AS code, e.pos, e.qv
+  FROM cet e JOIN (
+    SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
+    FROM (SELECT DISTINCT vec_id FROM cet)) s
+  ON s.vec_id = e.vec_id WHERE s.rn <= {_KM_K}),""" + _pq_train_sql(
+        _KM_DIM, _KM_K
+    ).rstrip().rstrip(",")
+
+
+KMEANS_SQL = f"""
+WITH {_kmeans_ctes(f"vec_id < {_KM_MAX_ID}")}
+SELECT vec_id, code AS cluster, CAST(dist AS DOUBLE) / 1e12 AS dist_sq
+FROM ta2
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -703,10 +705,11 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SD_PAIRS = micro_cosine_ctes("el", """AND a.id < b.id
-  JOIN a2 ca ON ca.id = a.id
-  JOIN a2 cb ON cb.id = b.id AND cb.cid = ca.cid""")
+  JOIN ta2 ca ON ca.vec_id = a.id
+  JOIN ta2 cb ON cb.vec_id = b.id AND cb.code = ca.code""")
 SEMANTIC_DEDUP_SQL = f"""
-WITH RECURSIVE {_KMEANS_CTES},
+WITH RECURSIVE {_kmeans_ctes(f"vec_id < {_KM_MAX_ID}")},
+el AS {_emb_elements(f"WHERE vec_id < {_KM_MAX_ID}")},
 {_SD_PAIRS},
 spairs AS (SELECT id_a, id_b FROM qcos WHERE cosine >= {_SD_THRESHOLD}),
 sedges AS (
@@ -717,11 +720,13 @@ scc AS (
   UNION
   SELECT e.a, scc.comp FROM sedges e JOIN scc ON scc.id = e.b),
 slab AS (SELECT id, MIN(comp) AS canonical FROM scc GROUP BY id)
-SELECT a2.id AS vec_id,
-       CAST(a2.cid AS BIGINT) AS cluster,
-       COALESCE(slab.canonical, a2.id) AS canonical,
-       COALESCE(slab.canonical, a2.id) = a2.id AS keep
-FROM a2 LEFT JOIN slab ON slab.id = a2.id
+SELECT d.vec_id, ta2.code AS cluster,
+       COALESCE(slab.canonical, d.vec_id) AS canonical,
+       COALESCE(slab.canonical, d.vec_id) = d.vec_id AS keep
+FROM embeddings d
+LEFT JOIN ta2 ON ta2.vec_id = d.vec_id
+LEFT JOIN slab ON slab.id = d.vec_id
+WHERE d.vec_id < {_KM_MAX_ID}
 """
 
 
@@ -745,57 +750,13 @@ def semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SI_PAIRS = micro_cosine_ctes("el", """AND a.id < b.id
-  JOIN a3 ca ON ca.id = a.id
-  JOIN a3 cb ON cb.id = b.id AND cb.cid = ca.cid
+  JOIN codes ca ON ca.c_id = a.id
+  JOIN codes cb ON cb.c_id = b.id AND cb.code = ca.code
   WHERE a.id % 4 = 0 OR b.id % 4 = 0""")
 SEMANTIC_INCREMENTAL_SQL = f"""
-WITH el AS (
-  SELECT vec_id AS id, CAST(UNNEST(embedding) AS DOUBLE) AS val,
-         UNNEST(generate_series(1, len(embedding))) AS pos
-  FROM embeddings WHERE vec_id < {_KM_MAX_ID}),
-celc AS (SELECT * FROM el WHERE id % 4 <> 0),
-seeds AS (
-  SELECT id, CAST(rn - 1 AS INTEGER) AS cid FROM (
-    SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS rn
-    FROM (SELECT DISTINCT id FROM celc))
-  WHERE rn <= {_KM_K}),
-cent0 AS (
-  SELECT s.cid, e.pos, e.val AS cval FROM celc e JOIN seeds s ON s.id = e.id),
-d1 AS (
-  SELECT e.id, c.cid,
-         CAST(SUM(CAST((e.val - c.cval) * (e.val - c.cval)
-              AS DECIMAL(30,12))) AS DOUBLE) AS d2
-  FROM celc e JOIN cent0 c ON c.pos = e.pos GROUP BY 1, 2),
-a1 AS (
-  SELECT id, cid FROM (
-    SELECT id, cid, ROW_NUMBER() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-    FROM d1) WHERE rn = 1),
-cent1 AS (
-  SELECT a.cid, e.pos,
-         CAST(SUM(CAST(e.val AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*) AS cval
-  FROM celc e JOIN a1 a ON a.id = e.id GROUP BY 1, 2),
-d2i AS (
-  SELECT e.id, c.cid,
-         CAST(SUM(CAST((e.val - c.cval) * (e.val - c.cval)
-              AS DECIMAL(30,12))) AS DOUBLE) AS d2
-  FROM celc e JOIN cent1 c ON c.pos = e.pos GROUP BY 1, 2),
-a2 AS (
-  SELECT id, cid FROM (
-    SELECT id, cid, ROW_NUMBER() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-    FROM d2i) WHERE rn = 1),
-cent2 AS (
-  SELECT a.cid, e.pos,
-         CAST(SUM(CAST(e.val AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*) AS cval
-  FROM celc e JOIN a2 a ON a.id = e.id GROUP BY 1, 2),
-d3 AS (
-  SELECT e.id, c.cid,
-         CAST(SUM(CAST((e.val - c.cval) * (e.val - c.cval)
-              AS DECIMAL(30,12))) AS DOUBLE) AS d2
-  FROM el e JOIN cent2 c ON c.pos = e.pos GROUP BY 1, 2),
-a3 AS (
-  SELECT id, cid FROM (
-    SELECT id, cid, ROW_NUMBER() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-    FROM d3) WHERE rn = 1),
+WITH {_kmeans_ctes(f"vec_id < {_KM_MAX_ID} AND vec_id % 4 <> 0")},
+ael AS {_km_elements(f"vec_id < {_KM_MAX_ID}")},{_pq_codes_sql(_KM_DIM, _KM_K, src="ael", cb="cb2")}
+el AS {_emb_elements(f"WHERE vec_id < {_KM_MAX_ID}")},
 {_SI_PAIRS}
 SELECT id_a AS doc_a, id_b AS doc_b, cosine
 FROM qcos WHERE cosine >= {_SD_THRESHOLD}
@@ -838,44 +799,51 @@ FROM documents
 
 # ---------------------------------------------------------------------------
 # embedding_centroids — per-label mean embedding (the vector aggregate a
-# clustering / classifier-head pipeline needs).  Decimal-exact per-dimension
-# sums so the centroid values are engine-identical; output long-form
-# (label, pos, centroid_val) to keep array renderings out of the comparator.
-# At scale: explode + one shuffle on (label, pos); with dim fixed this is a
-# map-side-combinable aggregation, no skew.
+# clustering / classifier-head pipeline needs).  Each component is the
+# k-means update's mean: micro-quantized values, their exact BIGINT sum,
+# rounded half-up onto the micro grid (functions/vectors.micro_mean), so
+# the centroid values are engine-identical; NULL components are skipped.
+# Output long-form (label, pos, centroid_r) to keep array renderings out
+# of the comparator.  At scale: explode + one shuffle on (label, pos);
+# with dim fixed this is a map-side-combinable aggregation, no skew.
 # ---------------------------------------------------------------------------
 def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from datalake_spark.functions.vectors import micro_mean, quantize_micro
+
     emb = load(spark, sf_dir, "embeddings")
     el = emb.select(
-        "label", F.posexplode("embedding").alias("pos", "val")
-    ).withColumn("val", F.col("val").cast("double"))
+        "label", F.posexplode(quantize_micro("embedding")).alias("pos", "qv")
+    )
     return (
         el.groupBy("label", "pos")
         .agg(
-            (
-                F.sum(F.col("val").cast("decimal(30,12)")).cast("double")
-                / F.count("val")
-            ).alias("centroid_val"),
-            F.count("val").alias("n_vectors"),
+            micro_mean(F.sum("qv"), F.count("qv")).alias("_m"),
+            F.count("qv").alias("n_vectors"),
         )
         .select(
             F.col("label").cast("int").alias("label"),
             F.col("pos").cast("int").alias("pos"),
-            F.round("centroid_val", 10).alias("centroid_r"),
+            (F.col("_m") / F.lit(1e6)).alias("centroid_r"),
             "n_vectors",
         )
     )
 
 
-EMBEDDING_CENTROIDS_SQL = """
-WITH el AS (
-  SELECT label, CAST(UNNEST(embedding) AS DOUBLE) AS val,
-         UNNEST(generate_series(1, len(embedding))) - 1 AS pos
-  FROM embeddings)
+EMBEDDING_CENTROIDS_SQL = f"""
 SELECT CAST(label AS INTEGER) AS label, CAST(pos AS INTEGER) AS pos,
-       ROUND(CAST(SUM(CAST(val AS DECIMAL(30,12))) AS DOUBLE) / COUNT(val), 10) AS centroid_r,
-       COUNT(val) AS n_vectors
-FROM el GROUP BY label, pos
+       CAST({sql_micro_mean("num", "den")} AS DOUBLE) / 1e6 AS centroid_r,
+       n_vectors
+FROM (
+  SELECT label, pos, 2 * CAST(SUM(qv) AS BIGINT) + COUNT(qv) AS num,
+         2 * COUNT(qv) AS den, COUNT(qv) AS n_vectors
+  FROM (
+    SELECT label, pos - 1 AS pos,
+           CAST(FLOOR(CAST(val AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS qv
+    FROM (
+      SELECT label, UNNEST(embedding) AS val,
+             UNNEST(generate_series(1, len(embedding))) AS pos
+      FROM embeddings))
+  GROUP BY label, pos)
 """
 
 

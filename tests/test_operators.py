@@ -1436,6 +1436,163 @@ class TestMicroCosineReference:
         assert got == {1, 2, 6, 13, 10, 11, 12}
 
 
+def _ref_lloyd(vecs, k, iters):
+    """Pure-Python integer Lloyd k-means: ``vecs`` ({id: vector}) on the
+    micro grid, seeded with the k smallest ids of the well-formed
+    vectors as wide as the smallest id's; each round assigns with
+    :func:`_ref_pq_code` (ties to the smaller cluster) and moves every
+    centroid to the half-up micro mean floor((2s+n)/(2n)) of its
+    members, a centroid with no members keeping its value.  Returns the
+    last round's {id: (cluster, squared distance)} and the centroids
+    after the last update ({cluster: micro vector})."""
+    ok = {i: _ref_qmicro(v) for i, v in vecs.items()
+          if v and None not in v}
+    dim = len(ok[min(ok)])
+    ok = {i: q for i, q in ok.items() if len(q) == dim}
+    cents = {c: ok[i] for c, i in enumerate(sorted(ok)[:k])}
+    for _ in range(iters):
+        assign = {}
+        for i, q in ok.items():
+            c = _ref_pq_code(q, cents)
+            assign[i] = (c, sum((a - b) ** 2 for a, b in zip(q, cents[c])))
+        moved = dict(cents)
+        for c in cents:
+            members = [ok[i] for i, (a, _) in assign.items() if a == c]
+            n = len(members)
+            if n:
+                moved[c] = [(2 * sum(col) + n) // (2 * n)
+                            for col in zip(*members)]
+        cents = moved
+    return assign, cents
+
+
+def _centroid_rows(df):
+    """{cluster: micro vector} of a (cluster, pos, cval) frame."""
+    out: dict = {}
+    for r in sorted(df.collect(), key=lambda r: (r.cluster, r.pos)):
+        out.setdefault(r.cluster, []).append(
+            math.floor(r.cval * 1_000_000 + 0.5))
+    return out
+
+
+# the k-means reference fixture: ids 1 and 2 are the same point, so
+# cluster 2 ties to cluster 1 in round 1 and keeps its seed; 7 sits
+# exactly between the seeds of clusters 0 and 1; 4 and 5 give micro
+# means on a .5 boundary of both signs; 8-10 are malformed
+_KM_VECS = {
+    0: [0.0, 0.0],
+    1: [1.0, 0.0],
+    2: [1.0, 0.0],
+    3: [0.9, 0.1],
+    4: [-0.000001, 0.000002],
+    5: [0.000002, -0.000001],
+    6: [1.2, -0.1],
+    7: [0.5, 0.5],
+    8: None,
+    9: [0.3, None],
+    10: [0.1, 0.2, 0.3],
+}
+
+
+class TestLloydReference:
+    """k-means is one exact-integer Lloyd round, the one pq_train runs:
+    kmeans_iterate, kmeans_centroids and assign_to_centroids agree with
+    each other and with a pure-Python reference, and malformed vectors
+    take no part."""
+
+    @pytest.mark.parametrize("iters", [1, 3])
+    def test_kmeans_matches_integer_reference(self, spark, iters):
+        df = _vec_frame(spark, _KM_VECS)
+        assign, cents = _ref_lloyd(_KM_VECS, 3, iters)
+        got = {r.vec_id: (r.cluster, r.dist_sq) for r in
+               similarity.kmeans_iterate(df, k=3, iters=iters).collect()}
+        assert got == {i: (c, float(d) / 1e12)
+                       for i, (c, d) in assign.items()}
+        assert _centroid_rows(
+            similarity.kmeans_centroids(df, k=3, iters=iters)) == cents
+
+    def test_empty_cluster_keeps_its_centroid(self, spark):
+        df = _vec_frame(spark, _KM_VECS)
+        one = {r.vec_id: r.cluster for r in
+               similarity.kmeans_iterate(df, k=3, iters=1).collect()}
+        assert 2 not in one.values()
+        cents = _centroid_rows(similarity.kmeans_centroids(df, k=3, iters=1))
+        assert cents[2] == _ref_qmicro(_KM_VECS[2])
+        assert cents[1] != cents[2]
+
+    def test_kmeans_and_assign_agree_and_skip_malformed(self, spark):
+        """The final k-means assignment equals assign_to_centroids
+        against the centroids it was measured against (one update
+        fewer), row for row; a NULL vector, a NULL component and a
+        vector of another width get no cluster on either path, and a
+        NULL cluster in semantic_dedup."""
+        vecs = {1: [0.0, 0.0, 0.0], 2: [1.0, 1.0, 1.0],
+                3: [0.1, 0.0, 0.0], 4: [0.9, 1.0, 1.0],
+                5: None, 6: [0.5, None, 0.0], 7: [0.5, 0.5]}
+        df = _vec_frame(spark, vecs)
+        km = {r.vec_id: r.cluster for r in
+              similarity.kmeans_iterate(df, k=2, iters=2).collect()}
+        at = {r.vec_id: r.cluster for r in similarity.assign_to_centroids(
+            df, similarity.kmeans_centroids(df, k=2, iters=1)).collect()}
+        assert km == at == {1: 0, 2: 1, 3: 0, 4: 1}
+        verdict = {r.vec_id: r.cluster for r in
+                   dedup.semantic_dedup(df, k=2, threshold=0.99).collect()}
+        assert verdict == {**km, 5: None, 6: None, 7: None}
+
+    def test_component_past_int64_bound_raises(self, spark):
+        """A component whose squared distance could wrap int64 at the
+        vector's width is refused by name: at call time in a seed or a
+        centroid, and when the stage runs in any other row."""
+        big = 1e4  # 1e10 micro; the bound at width 2 is about 1.07e9
+        with pytest.raises(ValueError, match="int64-safe bound"):
+            similarity.kmeans_iterate(
+                _vec_frame(spark, {1: [big, 0.0], 2: [0.0, 1.0]}), k=2)
+        row_big = _vec_frame(
+            spark, {1: [0.0, 1.0], 2: [1.0, 1.0], 3: [big, 1.0]})
+        worker = "ValueError: squared-L2 assign.*int64-safe bound"
+        with pytest.raises(Exception, match=worker):
+            similarity.kmeans_iterate(row_big, k=2).collect()
+        cents = spark.createDataFrame(
+            [(0, 0, 0.0), (0, 1, 1.0), (1, 0, 1.0), (1, 1, 1.0)],
+            "cluster bigint, pos int, cval double")
+        with pytest.raises(Exception, match=worker):
+            similarity.assign_to_centroids(row_big, cents).collect()
+        with pytest.raises(ValueError, match="int64-safe bound"):
+            similarity.assign_to_centroids(
+                row_big, cents.withColumn("cval", F.col("cval") * big))
+
+    @pytest.mark.parametrize("name", [
+        "kmeans_2iter", "semantic_dedup", "semantic_incremental",
+        "embedding_centroids",
+    ])
+    def test_kmeans_family_matches_oracle(self, spark, name):
+        """The k-means gate entries equal their DuckDB oracles at
+        sf0.001, compared as tools/check_parity.py compares them."""
+        import importlib.util
+        import pathlib
+
+        import duckdb
+
+        from datalake_spark.queries import registry
+        from datalake_spark.queries.batteries import BATTERY_SUBS
+
+        path = pathlib.Path(__file__).parents[1] / "tools" / "check_parity.py"
+        spec = importlib.util.spec_from_file_location("check_parity", path)
+        parity = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(parity)
+        qs = {q.name: q for q in registry()}
+        for subs in BATTERY_SUBS.values():
+            for sub in subs:
+                qs.setdefault(sub.q.name, sub.q)
+        con = duckdb.connect()
+        con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+                    f"read_parquet('{SF_DIR}/embeddings.parquet')")
+        got = qs[name].build(spark, SF_DIR).toPandas()
+        want = con.execute(qs[name].oracle).fetch_df()
+        assert len(got) > 0
+        assert parity.compare(name, got, want) == []
+
+
 def _column_seed_codebooks(df, id_col, vec_col, m, ksub,
                            cell_col=None, cents=None):
     """Seed codebook rows (sub, code, cb_micro) rebuilt from the Column

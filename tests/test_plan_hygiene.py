@@ -457,19 +457,14 @@ def test_env_knob_inventory():
     assert names == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
 
 
-# the k-means family — squared-L2 distances and centroid means — still
-# sums DECIMAL(30,12); every cosine is micro-int64 exact
-_DECIMAL_ALLOWED = {
-    "operators/similarity.py": {"kmeans_iterate", "assign_to_centroids"},
-    "queries/pipeline_q.py": {"KMEANS_SQL", "SEMANTIC_INCREMENTAL_SQL",
-                              "embedding_centroids",
-                              "EMBEDDING_CENTROIDS_SQL"},
-}
+# definitions allowed to sum DECIMAL(30,12): none — every embedding
+# cosine, squared-L2 distance and centroid mean is micro-int64 exact
+_DECIMAL_ALLOWED: dict = {}
 
 
-def test_decimal_sums_only_in_kmeans():
-    """DECIMAL(30,12) appears under datalake_spark/ only inside the k-means
-    definitions allowed above, so a new DECIMAL cosine fails here."""
+def test_no_decimal_vector_sums():
+    """DECIMAL(30,12) appears under datalake_spark/ only inside the
+    definitions allowed above, so a new DECIMAL vector sum fails here."""
     import datalake_spark
 
     root = pathlib.Path(datalake_spark.__file__).parent
